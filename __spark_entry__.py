@@ -185,13 +185,15 @@ def entry(spark: SparkSession) -> DataFrame:
     the query-log analog, enriched with dbt model coverage."""
     _ensure_conf(spark)
     from querysight_spark.demo import build_model_map, build_query_log
-    from querysight_spark.plans.coverage import patterns_with_models
+    from querysight_spark.plans.coverage import patterns_with_models, resolve_models
     from querysight_spark.plans.patterns import aggregate_patterns
     from pyspark.sql import functions as F
 
     log = build_query_log(spark, "/root/testdata/sf0.001")
     patterns = aggregate_patterns(log, min_frequency=2, extract_from_sql=True)
-    enriched = patterns_with_models(patterns, build_model_map(spark))
+    enriched = patterns_with_models(
+        patterns, resolve_models(patterns, build_model_map(spark))
+    )
     return enriched.select(
         "normalized_query",
         "frequency",

@@ -101,9 +101,10 @@ def build_sources_dim(spark: SparkSession) -> DataFrame:
 def build_edges(spark: SparkSession) -> DataFrame:
     """dbt DAG analog: model_i depends on model_{i-1} (chain of depth 8)."""
     from querysight_spark.schemas import DBT_EDGES_SCHEMA
+    from querysight_spark.sources.dbt_catalog import local_frame
 
     rows = [(f"model_{i}", f"model_{i - 1}") for i in range(1, 8)]
-    return spark.createDataFrame(rows, schema=DBT_EDGES_SCHEMA)
+    return local_frame(spark, rows, DBT_EDGES_SCHEMA)
 
 
 def build_raw_query_log(spark: SparkSession, sf_dir: str) -> DataFrame:

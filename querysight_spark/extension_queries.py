@@ -228,14 +228,19 @@ def dd06(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The declared/bench near-dup path at scale (VERDICT r1 item 3): LSH
     bucket prefilter → exact GEMM within buckets, checked for EQUALITY
     against the exact all-pairs oracle."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
     from querysight_spark.operators.dedup import embedding_cosine_duplicates_lsh
 
     # dim passed explicitly (r15): omitting it cost a .first() Spark job
-    # per call just to sniff the vector length
+    # per call just to sniff the vector length. The file's first rows give
+    # it driver-side, whichever ids they hold (None for an empty corpus).
+    head = pads.dataset(f"{sf_dir}/embeddings.parquet").head(1024, columns=["embedding"])
     out = embedding_cosine_duplicates_lsh(
         _vecs_aug(spark, sf_dir),
         threshold=0.95,
-        dim=len(_query_vec(spark, sf_dir)),
+        dim=pc.max(pc.list_value_length(head.column("embedding"))).as_py(),
     )
     return out.orderBy("vec_a", "vec_b")
 

@@ -750,40 +750,6 @@ def embedding_cosine_duplicates_lsh(
     return rep.groupBy("_bkt").applyInPandas(score, schema=out_schema).distinct()
 
 
-def embedding_cosine_duplicates_expr(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    threshold: float = 0.95,
-    dim: int | None = None,
-) -> DataFrame:
-    """Pure-expression variant of embedding_cosine_duplicates (no Python
-    workers): unrolled codegen dot product over the self-join pair space.
-    Kept as the Arrow-free fallback and as the semantic reference for the
-    blocked-GEMM path — both produce identical rows."""
-    from querysight_spark.operators.vectors import as_double, dot, norm
-
-    if dim is None:
-        first = df.select(vec_col).first()
-        dim = len(first[0]) if first and first[0] is not None else None
-    _dot = lambda a, b: dot(a, b, dim)  # noqa: E731
-    v = df.select(
-        F.col(id_col),
-        as_double(F.col(vec_col)).alias("v"),
-    ).withColumn("norm", norm(F.col("v"), dim))
-    a = v.select(F.col(id_col).alias("ida"), F.col("v").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col(id_col).alias("idb"), F.col("v").alias("vb"), F.col("norm").alias("nb"))
-    pairs = a.join(b, F.col("ida") < F.col("idb"))
-    return (
-        pairs.withColumn(
-            "cosine",
-            F.round(_dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb")), 6),
-        )
-        .where(F.col("cosine") >= threshold)
-        .select(F.col("ida").alias("vec_a"), F.col("idb").alias("vec_b"), "cosine")
-    )
-
-
 def cluster_keep_best(
     df: DataFrame,
     clusters: DataFrame,

@@ -32,6 +32,7 @@ from querysight_spark.demo import (
     build_sources_dim,
 )
 from querysight_spark.plans.coverage import (
+    resolve_models,
     uncovered_tables,
     upstream_closure,
     used_models,
@@ -359,7 +360,7 @@ def ql04(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort=False: the enrichment join + final orderBy(normalized_query)
     # make the E1 impact sort dead weight (not eliminable across the join)
     p = _patterns(spark, sf_dir, sort=False)
-    enriched = patterns_with_models(p, build_model_map(spark))
+    enriched = patterns_with_models(p, resolve_models(p, build_model_map(spark)))
     return enriched.select(
         "normalized_query", F.array_join("dbt_models_used", ",").alias("models_list")
     ).orderBy("normalized_query")
@@ -367,11 +368,13 @@ def ql04(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("ql05_uncovered_tables")
 def ql05(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sort=False: uncovered_tables explodes + distincts the pattern rows,
+    # sort=False: resolve_models explodes + windows the pattern rows,
     # so the E1 impact sort (a full range Exchange + Sort that Catalyst
     # cannot eliminate across the explode) would be pure waste here
     p = _patterns(spark, sf_dir, min_frequency=1, sort=False)
-    return uncovered_tables(p, build_model_map(spark), build_sources_dim(spark))
+    return uncovered_tables(
+        resolve_models(p, build_model_map(spark)), build_sources_dim(spark)
+    )
 
 
 def _used_t67(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -381,7 +384,7 @@ def _used_t67(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sort=False: used_models joins away the row order; ql06/ql06b apply
     # their own final orderBy(model_name)
     p = aggregate_patterns(log, min_frequency=1, extract_from_sql=False, sort=False)
-    return used_models(p, build_model_map(spark))
+    return used_models(resolve_models(p, build_model_map(spark)))
 
 
 @_q("ql06_closure_one_hop")
@@ -535,7 +538,7 @@ def _recommendations_over(log: DataFrame, spark: SparkSession) -> DataFrame:
     p = p.withColumn(
         "avg_duration_ms", F.round("total_duration_ms", 2) / F.col("frequency")
     )
-    recs = recommendations(p, build_model_map(spark))
+    recs = recommendations(p, resolve_models(p, build_model_map(spark)))
     return recs.select(
         "normalized_query",
         "rec_type",
@@ -673,7 +676,7 @@ def ql19(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # sort=False: semi-join + one-row metrics aggregate are order-free
     p = _patterns(spark, sf_dir, sort=False)
-    used = used_models(p, build_model_map(spark))
+    used = used_models(resolve_models(p, build_model_map(spark)))
     return coverage_metrics(build_model_map(spark), used)
 
 

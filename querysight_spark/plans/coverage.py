@@ -2,26 +2,23 @@
 
 The reference resolves tables→models with per-row Python dict fallbacks
 (/root/reference/utils/dbt_mapper.py:263-300) and computes coverage with
-driver-side set algebra (utils/models.py:303-372). Here each step is a
-declarative plan over an exploded (pattern, table) relation joined against
-broadcast catalog dims — at 100 TB the fact side streams through
-broadcast-hash joins with zero shuffle; only the final per-pattern
-``collect_set`` re-shuffles on pattern_id (same key as the pattern agg, so
-AQE can reuse the partitioning).
+driver-side set algebra (utils/models.py:303-372). Here C1 runs once, in
+``resolve_models``: the exploded (pattern, table) relation joined against
+the broadcast model map — at 100 TB the fact side streams through a
+broadcast-hash join with zero shuffle. Every other report (C2-C5, F4, D6,
+and the recommender) is a small plan over that one resolved relation.
+C6 walks the dbt DAG on the driver, which already holds it, and joins the
+closure back as a broadcast dim.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-
-def explode_pattern_tables(patterns: DataFrame) -> DataFrame:
-    """(pattern_id, tname) — one row per table a pattern touches."""
-    return patterns.select(
-        "pattern_id", F.explode("tables_accessed").alias("tname")
-    ).where(F.col("tname") != "")
+from querysight_spark.schemas import DBT_EDGES_SCHEMA
+from querysight_spark.sources.dbt_catalog import local_frame
 
 
 def _candidate_keys(tname_col):
@@ -40,15 +37,20 @@ def _candidate_keys(tname_col):
     )
 
 
-def resolve_models(pattern_tables: DataFrame, model_map: DataFrame) -> DataFrame:
-    """C1 as a broadcast hash join: explode candidate keys (position =
+def resolve_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
+    """C1 over every table of every pattern, as a broadcast hash join:
+    explode (pattern_id, tname), explode candidate keys (position =
     priority), join against the pre-exploded model map, keep the best match
     per (pattern_id, tname) via a row_number window.
 
     Returns (pattern_id, tname, model_name) with model_name NULL when the
     table resolves to nothing (left join keeps unmapped tables visible for
-    C4)."""
-    cands = pattern_tables.select(
+    C4). This is the one resolved relation every coverage and
+    recommendation report reads."""
+    tabs = patterns.select(
+        "pattern_id", F.explode("tables_accessed").alias("tname")
+    ).where(F.col("tname") != "")
+    cands = tabs.select(
         "pattern_id",
         "tname",
         F.posexplode(_candidate_keys(F.col("tname"))).alias("cand_rank", "cand_key"),
@@ -69,10 +71,9 @@ def resolve_models(pattern_tables: DataFrame, model_map: DataFrame) -> DataFrame
     )
 
 
-def patterns_with_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
+def patterns_with_models(patterns: DataFrame, resolved: DataFrame) -> DataFrame:
     """C2 enrichment: attach sorted ``dbt_models_used`` to each pattern
     (reference nested loop at querysight.py:616-623)."""
-    resolved = resolve_models(explode_pattern_tables(patterns), model_map)
     per_pattern = (
         resolved.where(F.col("model_name").isNotNull())
         .groupBy("pattern_id")
@@ -84,10 +85,9 @@ def patterns_with_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame
     )
 
 
-def used_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
+def used_models(resolved: DataFrame) -> DataFrame:
     """C3 semi-join: distinct models referenced by any pattern's tables
     (utils/models.py:327-343). Returns a single ``model_name`` column."""
-    resolved = resolve_models(explode_pattern_tables(patterns), model_map)
     return (
         resolved.where(F.col("model_name").isNotNull())
         .select("model_name")
@@ -95,9 +95,7 @@ def used_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
     )
 
 
-def uncovered_tables(
-    patterns: DataFrame, model_map: DataFrame, sources: DataFrame
-) -> DataFrame:
+def uncovered_tables(resolved: DataFrame, sources: DataFrame) -> DataFrame:
     """C4 anti-join + C5 suffix theta-join: tables resolving to no model AND
     matching no declared dbt source (utils/models.py:344-354).
 
@@ -105,54 +103,68 @@ def uncovered_tables(
     physical endswith '.'+t`` (utils/models.py:346-351) — a non-equi
     condition, executed as a broadcast nested-loop against the tiny sources
     dim (bounded: |tables| × |sources| with |sources| ≈ dozens)."""
-    tabs = explode_pattern_tables(patterns).select("tname").distinct()
-    resolved = resolve_models(
-        tabs.withColumn("pattern_id", F.lit("_")), model_map
-    ).where(F.col("model_name").isNull()).select("tname")
+    unmapped = resolved.where(F.col("model_name").isNull()).select("tname").distinct()
     low_p = F.lower(sources.physical_table)
-    low_t = F.lower(resolved.tname)
+    low_t = F.lower(unmapped.tname)
     src_match = (low_p == low_t) | low_p.endswith(F.concat(F.lit("."), low_t))
     return (
-        resolved.join(F.broadcast(sources), src_match, "left_anti")
+        unmapped.join(F.broadcast(sources), src_match, "left_anti")
         .select("tname")
         .orderBy("tname")
     )
 
 
+def _closure_rows(
+    edges: list[tuple[str, str]], max_hops: int | None
+) -> list[tuple[str, str]]:
+    """(model, depends_on) for every model reachable upstream of ``model``
+    in at most ``max_hops`` hops (None = unbounded). Breadth-first per model
+    with a visited set, so cycles terminate and each pair appears once."""
+    parents: dict[str, list[str]] = {}
+    for model, dep in edges:
+        parents.setdefault(model, []).append(dep)
+    # every hop of a shortest path leaves a distinct node that has parents
+    depth = len(parents) if max_hops is None else max_hops
+    rows = []
+    for model in parents:
+        seen, frontier = {model}, [model]
+        for _ in range(depth):
+            nxt = []
+            for m in frontier:
+                for d in parents.get(m, ()):
+                    if d not in seen:
+                        seen.add(d)
+                        nxt.append(d)
+            if not nxt:
+                break
+            rows.extend((model, d) for d in nxt)
+            frontier = nxt
+    return rows
+
+
 def upstream_closure(
     used: DataFrame, edges: DataFrame, max_hops: int | None = 1
 ) -> DataFrame:
-    """C6: models reachable upstream from the used set.
+    """C6: models reachable upstream from the used set, within
+    ``max_hops`` hops (``None`` = transitive closure, ``0`` = the used set
+    itself).
 
     ``max_hops=1`` reproduces the reference's one-hop union
-    (utils/models.py:341-343). ``max_hops=None`` runs the transitive
-    closure to fixpoint via iterative broadcast self-joins — the edge list
-    is a catalog dim (thousands of rows), so each hop is a driver-looped
-    but executor-evaluated broadcast join; iterations are bounded by DAG
-    depth. Persisted frontier avoids recomputing the growing lineage."""
-    # localCheckpoint truncates lineage each hop — without it the iterative
-    # plan re-derives the whole upstream pipeline per iteration and codegen
-    # depth explodes (observed: 400+ codegen stages before StackOverflow).
-    total = used.select(F.col("model_name")).distinct().localCheckpoint()
-    frontier = total
-    hops = 0
-    while True:
-        step = (
-            frontier.join(
-                F.broadcast(edges), frontier.model_name == edges.model, "inner"
-            )
-            .select(F.col("depends_on").alias("model_name"))
-            .distinct()
-        )
-        new = step.join(total, "model_name", "left_anti").localCheckpoint()
-        if new.isEmpty():
-            break
-        total = total.unionByName(new).distinct().localCheckpoint()
-        frontier = new
-        hops += 1
-        if max_hops is not None and hops >= max_hops:
-            break
-    return total
+    (utils/models.py:341-343). The edge list is a small catalog dim that
+    ``catalog_frames`` builds as a local relation, so collecting it starts
+    no Spark job. The closure is computed on the driver and joined back as
+    one broadcast dim: building the frame starts no job, and every
+    ``max_hops`` costs the same one join."""
+    closure = local_frame(
+        used.sparkSession,
+        _closure_rows([(r.model, r.depends_on) for r in edges.collect()], max_hops),
+        DBT_EDGES_SCHEMA,
+    )
+    base = used.select("model_name")
+    reached = base.join(
+        F.broadcast(closure), base.model_name == closure.model
+    ).select(F.col("depends_on").alias("model_name"))
+    return base.unionByName(reached).distinct()
 
 
 def unused_models(model_map: DataFrame, used: DataFrame) -> DataFrame:

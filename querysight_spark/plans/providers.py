@@ -21,9 +21,11 @@ from typing import Protocol
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from querysight_spark.plans.coverage import resolve_models
 from querysight_spark.plans.recommend import (
     HIGH_FREQUENCY,
     LONG_RUNNING_MS,
+    _is_system,
     parse_llm_response,
     recommendations,
     with_pattern_types,
@@ -282,7 +284,7 @@ class RuleBasedRecommender:
     """Default: the deterministic rule cascade (H2's testable stand-in)."""
 
     def recommend(self, patterns: DataFrame, model_map: DataFrame) -> DataFrame:
-        return recommendations(patterns, model_map)
+        return recommendations(patterns, resolve_models(patterns, model_map))
 
 
 class LLMRecommender:
@@ -398,37 +400,35 @@ class LLMRecommender:
             "Description: ...\nImpact: [HIGH|MEDIUM|LOW]\nSQL: ..."
         )
 
-    def _enrich(self, patterns: DataFrame, model_map: DataFrame) -> DataFrame:
+    def _enrich(self, patterns: DataFrame, resolved: DataFrame) -> DataFrame:
         """Column-built prompt context: G10 tags, B8 classification, and the
-        C1-resolved mapped/unmapped split, attached per pattern."""
-        from querysight_spark.plans.coverage import resolve_models
-
+        C1-resolved mapped/unmapped split of the user tables, attached per
+        pattern."""
         pats = with_pattern_types(with_table_classes(patterns))
-        user_tabs = pats.select(
-            "pattern_id", F.explode("user_tables").alias("tname")
-        ).where(F.col("tname") != "")
-        resolved = resolve_models(user_tabs, model_map)
-        cov = resolved.groupBy("pattern_id").agg(
-            F.sort_array(
-                F.collect_set(F.when(F.col("model_name").isNotNull(), F.col("model_name")))
-            ).alias("dbt_models_used"),
-            F.sort_array(
-                F.collect_set(F.when(F.col("model_name").isNull(), F.col("tname")))
-            ).alias("unmapped_tables"),
+        cov = (
+            resolved.where(~_is_system(F.col("tname")))
+            .groupBy("pattern_id")
+            .agg(
+                F.sort_array(
+                    F.collect_set(F.when(F.col("model_name").isNotNull(), F.col("model_name")))
+                ).alias("dbt_models_used"),
+                F.sort_array(
+                    F.collect_set(F.when(F.col("model_name").isNull(), F.col("tname")))
+                ).alias("unmapped_tables"),
+            )
         )
         return pats.join(cov, "pattern_id", "left")
 
     def recommend(self, patterns: DataFrame, model_map: DataFrame) -> DataFrame:
         spark = patterns.sparkSession
         # rank + limit FIRST (the impact key needs no enrichment columns),
-        # then run the explode/resolve/coverage joins over only the
-        # top_k-row frame — the enrichment cost is page-sized, not
-        # corpus-sized
+        # then resolve and enrich only the top_k-row frame — the
+        # enrichment cost is page-sized, not corpus-sized
         top_patterns = patterns.orderBy(
             (F.col("frequency") * F.col("avg_duration_ms")).desc(), "pattern_id"
         ).limit(self.top_k)
         top = (
-            self._enrich(top_patterns, model_map)
+            self._enrich(top_patterns, resolve_models(top_patterns, model_map))
             .orderBy(
                 (F.col("frequency") * F.col("avg_duration_ms")).desc(), "pattern_id"
             )

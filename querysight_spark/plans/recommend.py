@@ -31,8 +31,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from querysight_spark.plans.coverage import resolve_models
-
 # B8 system-table classification (utils/ai_suggester.py:39-46)
 SYSTEM_SCHEMA_RE = r"^(system|information_schema|pg_catalog)\."
 
@@ -119,29 +117,24 @@ def parse_llm_response(df: DataFrame, response_col: str = "response") -> DataFra
     )
 
 
-def recommendations(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
+def recommendations(patterns: DataFrame, resolved: DataFrame) -> DataFrame:
     """Deterministic per-pattern recommendations.
 
-    Input: pattern aggregate (plans.patterns.aggregate_patterns output).
+    Input: pattern aggregate (plans.patterns.aggregate_patterns output) and
+    its C1 resolution (coverage.resolve_models output).
     Output columns: pattern_id, normalized_query, rec_type, impact,
     description, pattern_types, unmapped_tables, frequency,
     avg_duration_ms — one row per recommended pattern, patterns with
     nothing to recommend absent.
 
-    Distribution: table→model resolution is the C1 broadcast join
-    (coverage.resolve_models); everything else is per-row expressions, so
-    the whole plan is scan → broadcast join → groupBy(pattern) → project
-    with no extra shuffle beyond the resolve re-group.
+    Distribution: the unmapped user tables are a filter + groupBy(pattern)
+    over the already-resolved relation; everything else is per-row
+    expressions joined back on pattern_id.
     """
     pats = with_pattern_types(with_table_classes(patterns))
 
-    user_tabs = (
-        pats.select("pattern_id", F.explode("user_tables").alias("tname"))
-        .where(F.col("tname") != "")
-    )
-    resolved = resolve_models(user_tabs, model_map)
     unmapped = (
-        resolved.where(F.col("model_name").isNull())
+        resolved.where(F.col("model_name").isNull() & ~_is_system(F.col("tname")))
         .groupBy("pattern_id")
         .agg(F.sort_array(F.collect_set("tname")).alias("unmapped_tables"))
     )

@@ -27,6 +27,7 @@ from dataclasses import dataclass, field
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 from querysight_spark.schemas import (
     DBT_EDGES_SCHEMA,
@@ -149,7 +150,19 @@ def catalog_frames(
 ) -> tuple[DataFrame, DataFrame, DataFrame]:
     """(model_map, sources, edges) DataFrames with explicit schemas —
     empty-safe so a project with no sources still yields typed frames."""
-    model_map = spark.createDataFrame(cat.model_map_rows(), schema=DBT_MODEL_MAP_SCHEMA)
-    sources = spark.createDataFrame(cat.sources, schema=DBT_SOURCES_SCHEMA)
-    edges = spark.createDataFrame(cat.edges, schema=DBT_EDGES_SCHEMA)
+    model_map = local_frame(spark, cat.model_map_rows(), DBT_MODEL_MAP_SCHEMA)
+    sources = local_frame(spark, cat.sources, DBT_SOURCES_SCHEMA)
+    edges = local_frame(spark, cat.edges, DBT_EDGES_SCHEMA)
     return model_map, sources, edges
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver-held rows as a LocalRelation, built through Arrow: collecting
+    or broadcasting it starts no Spark job, where ``createDataFrame(list)``
+    parallelizes the rows into an RDD that does. Empty ``rows`` skip Arrow
+    and come back RDD-backed (still typed)."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.fieldNames()), schema=schema
+    )

@@ -176,10 +176,9 @@ def stateful_anomalies(
         state.update((full[max(0, c + m - L):].tolist(),))
         yield pd.DataFrame(
             {
-                # no forced dtype (ADVICE r14): numpy infers int64 for the
-                # declared long key; a future non-integral grouping key
-                # flows through unchanged instead of breaking on the cast
-                "user_id": np.full(len(hit), key[0]),
+                # explicit int64 for the declared ``user_id long``: numpy's
+                # inferred default int is platform-dependent (int32 on Windows)
+                "user_id": np.full(len(hit), key[0], dtype=np.int64),
                 "ts": pdf["ts"].to_numpy()[hit],
                 "event_id": pdf["event_id"].to_numpy()[hit],
                 "value": v[hit],

@@ -24,7 +24,6 @@ SF_SMOKE = "/root/testdata/sf0.001"
 # instead (see tests/test_oracle_gate.py).
 SLOW_TESTS = frozenset({
     "test_conflict_matrix.py::test_conflict_matrix[zorder-merge_disjoint]",
-    "test_coverage.py::test_upstream_closure_one_hop_vs_fixpoint",
     "test_graph.py::test_landmark_distance_features_shape",
     "test_graph.py::test_ppr_mass_stays_near_seed",
     "test_invariants_r4.py::test_funnel_is_monotone_nonincreasing",
@@ -126,7 +125,25 @@ SLOW_TESTS = frozenset({
 })
 
 
+def _stale_slow_tests(config, collected: set[str]) -> list[str]:
+    """SLOW_TESTS entries that name no collected test in a file that was
+    collected whole (a ``file::test`` argument collects only part of one)."""
+    if any("::" in str(a) for a in config.args):
+        return []
+    files = {name.split("::")[0] for name in collected}
+    return sorted(
+        t for t in SLOW_TESTS if t.split("::")[0] in files and t not in collected
+    )
+
+
 def pytest_collection_modifyitems(config, items):
+    collected = {f"{item.fspath.basename}::{item.name}" for item in items}
+    stale = _stale_slow_tests(config, collected)
+    if stale:
+        raise pytest.UsageError(
+            "tests/conftest.py SLOW_TESTS names tests that were not collected "
+            f"(renamed or removed?): {stale}"
+        )
     if os.environ.get("QS_FULL_TESTS"):
         return
     skip = pytest.mark.skip(

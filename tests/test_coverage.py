@@ -5,7 +5,6 @@ from pyspark.sql import functions as F
 
 from querysight_spark.plans.coverage import (
     coverage_metrics,
-    explode_pattern_tables,
     patterns_with_models,
     resolve_models,
     uncovered_tables,
@@ -13,11 +12,8 @@ from querysight_spark.plans.coverage import (
     upstream_closure,
     used_models,
 )
-from querysight_spark.schemas import (
-    DBT_EDGES_SCHEMA,
-    DBT_MODEL_MAP_SCHEMA,
-    DBT_SOURCES_SCHEMA,
-)
+from querysight_spark.schemas import DBT_MODEL_MAP_SCHEMA, DBT_SOURCES_SCHEMA
+from querysight_spark.sources.dbt_catalog import DbtCatalog, catalog_frames
 
 
 @pytest.fixture(scope="module")
@@ -40,17 +36,6 @@ def sources(spark):
 
 
 @pytest.fixture(scope="module")
-def edges(spark):
-    rows = [
-        ("daily_sales", "orders_clean"),
-        ("orders_clean", "raw_orders"),
-        ("user_stats", "orders_clean"),
-        ("raw_orders", "bronze_orders"),
-    ]
-    return spark.createDataFrame(rows, schema=DBT_EDGES_SCHEMA)
-
-
-@pytest.fixture(scope="module")
 def patterns(spark):
     rows = [
         ("p1", ["analytics.daily_sales", "mystery_table"]),
@@ -61,8 +46,12 @@ def patterns(spark):
     return spark.createDataFrame(rows, ["pattern_id", "tables_accessed"])
 
 
-def test_resolve_models_rank_priority(spark, patterns, model_map):
-    resolved = resolve_models(explode_pattern_tables(patterns), model_map)
+@pytest.fixture(scope="module")
+def resolved(spark, patterns, model_map):
+    return resolve_models(patterns, model_map)
+
+
+def test_resolve_models_rank_priority(spark, resolved):
     got = {(r.pattern_id, r.tname): r.model_name for r in resolved.collect()}
     assert got[("p1", "analytics.daily_sales")] == "daily_sales"
     assert got[("p1", "mystery_table")] is None
@@ -71,45 +60,64 @@ def test_resolve_models_rank_priority(spark, patterns, model_map):
     assert got[("p3", "orders_clean")] == "orders_clean"
 
 
-def test_patterns_with_models(spark, patterns, model_map):
-    out = {r.pattern_id: r.dbt_models_used for r in patterns_with_models(patterns, model_map).collect()}
+def test_patterns_with_models(spark, patterns, resolved):
+    out = {r.pattern_id: r.dbt_models_used for r in patterns_with_models(patterns, resolved).collect()}
     assert out["p1"] == ["daily_sales"]
     assert out["p2"] == ["user_stats"]
     assert out["p4"] == []
 
 
-def test_used_and_unused_models(spark, patterns, model_map):
-    used = used_models(patterns, model_map)
+def test_used_and_unused_models(spark, model_map, resolved):
+    used = used_models(resolved)
     assert sorted(r.model_name for r in used.collect()) == [
         "daily_sales", "orders_clean", "user_stats",
     ]
     assert unused_models(model_map, used).count() == 0
 
 
-def test_uncovered_tables_suffix_source_match(spark, patterns, model_map, sources):
+def test_uncovered_tables_suffix_source_match(spark, model_map, sources, resolved):
     # db.raw.events → unmapped by models, but matches source 'rawdb.raw.events'
     # by... exact? lower(physical)=rawdb.raw.events vs tname db.raw.events: no.
     # endswith('.'+tname)? '.db.raw.events' no → stays uncovered? The C1 step
     # normalizes nothing here; tname='db.raw.events' lower. physical ends with
     # 'raw.events' but rule requires '.'+full tname. So uncovered = both.
-    out = [r.tname for r in uncovered_tables(patterns, model_map, sources).collect()]
+    out = [r.tname for r in uncovered_tables(resolved, sources).collect()]
     assert out == ["db.raw.events", "mystery_table"]
     # a bare ref matching by suffix IS covered:
     p = spark.createDataFrame([("px", ["events"])], ["pattern_id", "tables_accessed"])
-    out2 = [r.tname for r in uncovered_tables(p, model_map, sources).collect()]
+    out2 = [r.tname for r in uncovered_tables(resolve_models(p, model_map), sources).collect()]
     assert out2 == []  # rawdb.raw.events endswith '.events'
 
 
-def test_upstream_closure_one_hop_vs_fixpoint(spark, patterns, model_map, edges):
-    used = used_models(patterns, model_map)
-    one = {r.model_name for r in upstream_closure(used, edges, max_hops=1).collect()}
-    assert one == {"daily_sales", "user_stats", "orders_clean", "raw_orders"}
-    full = {r.model_name for r in upstream_closure(used, edges, max_hops=None).collect()}
-    assert full == one | {"bronze_orders"}
+# a → {b, c} → d (diamond), d → e ⇄ f (cycle), f → g, and g → a closes a
+# cycle back through the used set; x is used but has no upstream edges
+_DAG = [
+    ("a", "b"), ("a", "c"), ("b", "d"), ("c", "d"), ("d", "e"),
+    ("e", "f"), ("f", "e"), ("f", "g"), ("g", "a"),
+]
 
 
-def test_coverage_metrics(spark, patterns, model_map):
-    used = used_models(patterns, model_map)
+@pytest.mark.parametrize(
+    "max_hops, expected",
+    [
+        (0, {"a", "x"}),
+        (1, {"a", "x", "b", "c"}),
+        (2, {"a", "x", "b", "c", "d"}),
+        (None, {"a", "x", "b", "c", "d", "e", "f", "g"}),
+    ],
+)
+def test_upstream_closure(spark, max_hops, expected):
+    _, _, edges = catalog_frames(spark, DbtCatalog(edges=_DAG))
+    used = spark.createDataFrame([("a",), ("x",)], "model_name string")
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    closure = upstream_closure(used, edges, max_hops=max_hops)
+    assert set(tracker.getJobIdsForGroup()) - before == set()  # built lazily
+    assert {r.model_name for r in closure.collect()} == expected
+
+
+def test_coverage_metrics(spark, model_map, resolved):
+    used = used_models(resolved)
     m = coverage_metrics(model_map, used).collect()[0]
     assert m.total_models == 3 and m.used_models == 3
     assert m.coverage_pct == 100.0 and m.unused_models == 0

@@ -7,7 +7,11 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from querysight_spark.plans.coverage import patterns_with_models, uncovered_tables
+from querysight_spark.plans.coverage import (
+    patterns_with_models,
+    resolve_models,
+    uncovered_tables,
+)
 from querysight_spark.plans.patterns import aggregate_patterns, merge_patterns
 from querysight_spark.plans.recommend import recommendations
 from querysight_spark.schemas import (
@@ -42,16 +46,17 @@ def test_merge_empty_prior(spark, query_log, empty_log):
 
 def test_coverage_empty_model_map(spark, query_log, empty_map):
     p = aggregate_patterns(query_log, min_frequency=1, extract_from_sql=False)
-    enriched = patterns_with_models(p, empty_map)
+    resolved = resolve_models(p, empty_map)
+    enriched = patterns_with_models(p, resolved)
     assert all(r.dbt_models_used == [] for r in enriched.collect())
     sources = spark.createDataFrame([], DBT_SOURCES_SCHEMA)
-    unc = {r.tname for r in uncovered_tables(p, empty_map, sources).collect()}
+    unc = {r.tname for r in uncovered_tables(resolved, sources).collect()}
     assert "orders" in unc  # everything uncovered when the catalog is empty
 
 
 def test_recommendations_empty_patterns(spark, empty_log, empty_map):
     p = aggregate_patterns(empty_log, min_frequency=1, extract_from_sql=False)
-    assert recommendations(p, empty_map).count() == 0
+    assert recommendations(p, resolve_models(p, empty_map)).count() == 0
 
 
 def test_dedup_ops_empty(spark):
@@ -90,3 +95,26 @@ def test_single_word_doc_shingles(spark):
     docs = spark.createDataFrame([(1, "word"), (2, "")], "doc_id long, text string")
     # docs shorter than the shingle size yield no signature rows, not errors
     assert minhash_signatures(docs, shingle_size=3).count() == 0
+
+def test_dd06_corpus_without_vec_id_zero(spark, tmp_path):
+    """dd06 sizes its LSH planes from the corpus itself, not from the
+    vec_id-0 query vector, so a corpus that lacks id 0 still runs."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from querysight_spark.extension_queries import dd06
+
+    rng = np.random.default_rng(7)
+    ids = list(range(1, 31))
+    vecs = rng.standard_normal((len(ids), 8)).astype(np.float32)
+    pq.write_table(
+        pa.table({
+            "vec_id": pa.array(ids, pa.int64()),
+            "embedding": pa.array(vecs.tolist(), pa.list_(pa.float32())),
+        }),
+        tmp_path / "embeddings.parquet",
+    )
+    pairs = {(r.vec_a, r.vec_b) for r in dd06(spark, str(tmp_path)).collect()}
+    # _vecs_aug duplicates every id divisible by 25 at id + 100000
+    assert (25, 100025) in pairs

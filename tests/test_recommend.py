@@ -9,6 +9,7 @@ import datetime as dt
 import pytest
 from pyspark.sql import functions as F
 
+from querysight_spark.plans.coverage import resolve_models
 from querysight_spark.plans.recommend import (
     recommendations,
     with_pattern_types,
@@ -95,7 +96,7 @@ def test_rule_precedence(spark, model_map):
              ["system.query_log"]),
         ],
     )
-    recs = {r.pattern_id: r for r in recommendations(p, model_map).collect()}
+    recs = {r.pattern_id: r for r in recommendations(p, resolve_models(p, model_map)).collect()}
     assert set(recs) == {"p1", "p2", "p3", "p4", "p5", "p6"}
     assert (recs["p1"].rec_type, recs["p1"].impact) == ("NEW_DBT_MODEL", "HIGH")
     assert recs["p1"].unmapped_tables == ["unknown_t"]
@@ -188,7 +189,7 @@ def test_system_tables_never_reported_unmapped(spark, model_map):
         [("p1", "n1", "SELECT * FROM system.query_log JOIN orders", 500, 5000.0,
           ["system.query_log", "orders"])],
     )
-    rec = recommendations(p, model_map).first()
+    rec = recommendations(p, resolve_models(p, model_map)).first()
     # orders is mapped, system.* excluded → no unmapped → falls to REWRITE_QUERY
     assert rec.rec_type == "REWRITE_QUERY"
     assert rec.unmapped_tables == []
