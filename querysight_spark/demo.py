@@ -78,14 +78,16 @@ def build_model_map(spark: SparkSession) -> DataFrame:
         for db in range(3):
             rows.append((f"db{db}.t{i}", f"model_{i}", f"db{db}", "table", 1))
     from querysight_spark.schemas import DBT_MODEL_MAP_SCHEMA
+    from querysight_spark.sources.dbt_catalog import local_frame
 
-    return spark.createDataFrame(rows, schema=DBT_MODEL_MAP_SCHEMA)
+    return local_frame(spark, rows, DBT_MODEL_MAP_SCHEMA)
 
 
 def build_sources_dim(spark: SparkSession) -> DataFrame:
     """dbt sources analog: t8/t9 are declared sources (matched by the C5
     suffix rule), t10/t11 stay truly uncovered."""
     from querysight_spark.schemas import DBT_SOURCES_SCHEMA
+    from querysight_spark.sources.dbt_catalog import local_frame
 
     rows = [
         ("raw.t8", "warehouse.db0.t8"),
@@ -95,7 +97,7 @@ def build_sources_dim(spark: SparkSession) -> DataFrame:
         ("raw.t9b", "db1.t9"),
         ("raw.t9c", "db2.t9"),
     ]
-    return spark.createDataFrame(rows, schema=DBT_SOURCES_SCHEMA)
+    return local_frame(spark, rows, DBT_SOURCES_SCHEMA)
 
 
 def build_edges(spark: SparkSession) -> DataFrame:

@@ -36,7 +36,14 @@ from querysight_spark.operators.textstats import (
     quality_scores,
     token_counts,
 )
-from querysight_spark.sources.catalog import load_table
+from querysight_spark.sources.catalog import (
+    column_minmax,
+    fixture_dir,
+    load_table,
+    mark_built,
+    row_count,
+    vector_dim,
+)
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -203,22 +210,13 @@ _COSINE_DUPS_ORACLE = f"""WITH {_VECS_AUG_CTE},
     ORDER BY vec_a, vec_b"""
 
 
-def _vecs_aug_expected_n(sf_dir: str) -> int:
-    """Row-count estimate for the augmented corpus from the parquet footer
-    (driver-side metadata read, no Spark job): n base rows + every 25th
-    duplicated."""
-    import pyarrow.parquet as pq
-
-    n = pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
-    return n + n // 25 + 1
-
-
 @_q("dd04_embedding_cosine_dups", _COSINE_DUPS_ORACLE)
 def dd04(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = embedding_cosine_duplicates(
         _vecs_aug(spark, sf_dir),
         threshold=0.95,
-        expected_n=_vecs_aug_expected_n(sf_dir),
+        # n base rows + every 25th duplicated, from the footer
+        expected_n=row_count(sf_dir, "embeddings") * 26 // 25 + 1,
     )
     return out.orderBy("vec_a", "vec_b")
 
@@ -228,19 +226,12 @@ def dd06(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The declared/bench near-dup path at scale (VERDICT r1 item 3): LSH
     bucket prefilter → exact GEMM within buckets, checked for EQUALITY
     against the exact all-pairs oracle."""
-    import pyarrow.compute as pc
-    import pyarrow.dataset as pads
-
     from querysight_spark.operators.dedup import embedding_cosine_duplicates_lsh
 
     # dim passed explicitly (r15): omitting it cost a .first() Spark job
-    # per call just to sniff the vector length. The file's first rows give
-    # it driver-side, whichever ids they hold (None for an empty corpus).
-    head = pads.dataset(f"{sf_dir}/embeddings.parquet").head(1024, columns=["embedding"])
+    # per call just to sniff the vector length
     out = embedding_cosine_duplicates_lsh(
-        _vecs_aug(spark, sf_dir),
-        threshold=0.95,
-        dim=pc.max(pc.list_value_length(head.column("embedding"))).as_py(),
+        _vecs_aug(spark, sf_dir), threshold=0.95, dim=vector_dim(sf_dir)
     )
     return out.orderBy("vec_a", "vec_b")
 
@@ -409,23 +400,18 @@ def dd09(spark: SparkSession, sf_dir: str) -> DataFrame:
     10th doc with a 3-token suffix, the dd02 near-dup fixture — probes it
     via a broadcast equi-join on (band, key). The production shape for a
     growing corpus: per-batch cost is O(delta), never O(corpus)."""
-    import os
-
     from querysight_spark.operators.dedup import (
         build_minhash_band_index,
         probe_minhash_band_index,
     )
 
     base = load_table(spark, "documents", sf_dir).select("doc_id", "text")
-    path = (
-        __import__("tempfile").gettempdir()
-        + "/qs_band_index_"
-        + _corpus_tag(sf_dir, "documents")
-    )
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    path, built = fixture_dir(sf_dir, "documents", "band_index")
+    if not built:
         build_minhash_band_index(
             base, path, num_hashes=8, shingle_size=3, bands=4, max_bucket_size=64
         )
+        mark_built(path)
     delta = base.where(F.col("doc_id") % 10 == 0).select(
         (F.col("doc_id") + 100000).alias("doc_id"),
         F.concat(F.col("text"), F.lit(" zz9 zz8 zz7")).alias("text"),
@@ -471,40 +457,27 @@ def dd05(spark: SparkSession, sf_dir: str) -> DataFrame:
 # --- similarity search ------------------------------------------------------
 
 
-def _query_vec(spark: SparkSession, sf_dir: str) -> list[float]:
+def _query_vec(sf_dir: str) -> list[float]:
     """Query vector = the embedding of vec_id 0.
 
     r15 (VERDICT r14 ask #4): fetched DRIVER-SIDE via pyarrow with
     row-group statistics pruning instead of a Spark job — the job cost a
     fixed ~0.27 s of scheduler/collect latency PER PROBE at any scale,
     while the lookup reads O(footer + one row group) however large the
-    corpus (vec_id stats bound which groups can hold 0). Values are
-    identical: parquet float32 → Python float is the same widening the
-    Row path performed, and the read recomputes from the parquet input
-    on every call (nothing is memoized). Spark fallback for layouts the
-    driver-side read cannot handle."""
+    corpus (vec_id stats bound which groups can hold 0). Values are the
+    parquet float32s widened to Python floats, re-read on every call.
+    Raises ValueError when the corpus has no vec_id 0."""
     import os
 
     import pyarrow.parquet as _pq
 
     path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        t = _pq.read_table(
-            path,
-            columns=["vec_id", "embedding"],
-            filters=[("vec_id", "==", 0)],
-        )
-        if t.num_rows >= 1:
-            return [float(x) for x in t.column("embedding")[0].as_py()]
-    except Exception:
-        pass
-    row = (
-        load_table(spark, "embeddings", sf_dir)
-        .where(F.col("vec_id") == 0)
-        .select("embedding")
-        .first()
+    t = _pq.read_table(
+        path, columns=["embedding"], filters=[("vec_id", "==", 0)]
     )
-    return [float(x) for x in row.embedding]
+    if t.num_rows == 0:
+        raise ValueError(f"{path} has no row with vec_id 0 (the query vector)")
+    return [float(x) for x in t.column("embedding")[0].as_py()]
 
 
 # One brute-force oracle backs ss01 AND every ANN variant's exact-mode
@@ -527,94 +500,28 @@ _BRUTE_TOPK_ORACLE = """WITH q AS (
        ORDER BY cosine DESC, vec_id LIMIT 10"""
 
 
-def _corpus_n(sf_dir: str) -> int:
-    """Embedding corpus row count from the parquet footer (driver-side
-    metadata read, no Spark job) — sizes the exact-mode oversample so the
-    ADC shortlist covers the whole corpus."""
-    import pyarrow.parquet as pq
-
-    return pq.ParquetFile(f"{sf_dir}/embeddings.parquet").metadata.num_rows
-
-
 def _full_oversample(sf_dir: str, k: int = 10) -> int:
-    return -(-_corpus_n(sf_dir) // k)  # ceil(n / k)
-
-
-def _table_minmax(
-    sf_dir: str, table: str, cols: list[str]
-) -> dict[str, tuple] | None:
-    """Exact per-column (min, max) from the parquet FOOTER statistics —
-    a driver-side metadata read (the ``_corpus_n`` precedent), no Spark
-    job. int64 row-group stats are exact, so the values are identical
-    to ``agg(min, max)``; returns None when any column lacks stats, and
-    callers fall back to the agg. r15 (VERDICT r14 ask #6 family): the
-    lakehouse probes ran a full scan+agg job PER CALL just to derive
-    their threshold scalars — fixed driver latency at any scale, while
-    the footer read is O(footer bytes)."""
-    import os
-
-    import pyarrow.parquet as _pq
-
-    try:
-        md = _pq.ParquetFile(
-            os.path.join(sf_dir, f"{table}.parquet")
-        ).metadata
-        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        out: dict[str, tuple] = {}
-        for c in cols:
-            lo = hi = None
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(idx[c]).statistics
-                if st is None or not st.has_min_max:
-                    return None
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            out[c] = (lo, hi)
-        return out
-    except Exception:
-        return None
-
-
-def _corpus_tag(sf_dir: str, table: str) -> str:
-    """Cache tag binding a /tmp fixture to the source parquet's IDENTITY
-    (path + mtime_ns + size), not just its path: the testdata tree is
-    regenerated between driver rounds, so a path-only tag would silently
-    reuse indexes/staged files built from a prior vintage of the corpus
-    and mismatch the oracle computed on the fresh one (ADVICE r3)."""
-    import hashlib
-    import os
-
-    p = os.path.join(sf_dir, f"{table}.parquet")
-    st = os.stat(p)
-    return hashlib.sha256(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
+    return -(-row_count(sf_dir, "embeddings") // k)  # ceil(n / k)
 
 
 # Overridable index root (an explicit module attribute, NOT an env var —
 # the engine stays env-clean by design). bench.py points this at a fresh
 # per-run directory before its prepare step so the published
-# ann_index_build_sec is always a REAL cold build: with the shared /tmp
-# root, fingerprint-matching indexes left by earlier runs in the same
-# session made the build read as 0.0 (r4 VERDICT finding).
+# ann_index_build_sec is always a REAL cold build: with the shared temp
+# root, indexes left by earlier runs made the build read as 0.0 (r4
+# VERDICT finding). None = the system temp dir.
 INDEX_ROOT: str | None = None
 
 
-def _index_path(prefix: str, sf_dir: str) -> str:
-    """Stable per-corpus index location: index once, probe many. All index
-    parameters are seed-deterministic and the tag fingerprints the source
-    parquet (see _corpus_tag), so an existing index is always current for
-    THIS corpus vintage and rebuilds automatically after regeneration;
-    the declared queries and bench.py share the same paths within a run
-    (the bench's untimed-after-build probes are warm-index numbers)."""
-    import tempfile
-
-    root = INDEX_ROOT or tempfile.gettempdir()
-    return (
-        root
-        + f"/qs_{prefix}_index_"
-        + _corpus_tag(sf_dir, "embeddings")
-    )
+def _index_path(prefix: str, sf_dir: str) -> tuple[str, bool]:
+    """``fixture_dir`` of one index family under INDEX_ROOT: index once,
+    probe many. All index parameters are seed-deterministic and the dir
+    is bound to the embeddings parquet's identity, so a built index is
+    always current for THIS corpus vintage and rebuilds automatically
+    after regeneration; the declared queries and bench.py share the same
+    paths within a run (the bench's untimed-after-build probes are
+    warm-index numbers)."""
+    return fixture_dir(sf_dir, "embeddings", f"{prefix}_index", root=INDEX_ROOT)
 
 
 # One ensure-helper per index family — the SINGLE owner of each family's
@@ -629,55 +536,49 @@ IVFPQ_INDEX_CENTROIDS = 16
 
 
 def _ensure_lsh_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from querysight_spark.operators.similarity import build_lsh_index
 
-    path = _index_path("lsh", sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        q = _query_vec(spark, sf_dir)
+    path, built = _index_path("lsh", sf_dir)
+    if not built:
         build_lsh_index(
             load_table(spark, "embeddings", sf_dir), path,
-            dim=len(q), bits=LSH_INDEX_BITS,
+            dim=vector_dim(sf_dir), bits=LSH_INDEX_BITS,
         )
+        mark_built(path)
     return path
 
 
 def _ensure_pq_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from querysight_spark.operators.similarity import build_pq_index
 
-    path = _index_path("pq", sf_dir)
-    if not os.path.exists(os.path.join(path, "_codebooks.json")):
-        q = _query_vec(spark, sf_dir)
+    path, built = _index_path("pq", sf_dir)
+    if not built:
         build_pq_index(
             load_table(spark, "embeddings", sf_dir), path,
-            dim=len(q), m=PQ_INDEX_M, k=PQ_INDEX_K,
+            dim=vector_dim(sf_dir), m=PQ_INDEX_M, k=PQ_INDEX_K,
         )
+        mark_built(path)
     return path
 
 
 def _ensure_ivfpq_index(spark: SparkSession, sf_dir: str) -> str:
-    import os
-
     from querysight_spark.operators.similarity import build_ivfpq_index
 
-    path = _index_path("ivfpq", sf_dir)
-    if not os.path.exists(os.path.join(path, "_ivfpq.json")):
-        q = _query_vec(spark, sf_dir)
+    path, built = _index_path("ivfpq", sf_dir)
+    if not built:
         build_ivfpq_index(
             load_table(spark, "embeddings", sf_dir), path,
-            dim=len(q), n_centroids=IVFPQ_INDEX_CENTROIDS,
+            dim=vector_dim(sf_dir), n_centroids=IVFPQ_INDEX_CENTROIDS,
             m=PQ_INDEX_M, k=PQ_INDEX_K,
         )
+        mark_built(path)
     return path
 
 
 @_q("ss01_brute_topk", _BRUTE_TOPK_ORACLE)
 def ss01(spark: SparkSession, sf_dir: str) -> DataFrame:
     vecs = load_table(spark, "embeddings", sf_dir)
-    return brute_force_topk(vecs, _query_vec(spark, sf_dir), k=10)
+    return brute_force_topk(vecs, _query_vec(sf_dir), k=10)
 
 
 @_q("ss02_lsh_topk", _BRUTE_TOPK_ORACLE)
@@ -688,7 +589,7 @@ def ss02(spark: SparkSession, sf_dir: str) -> DataFrame:
     in pytest."""
     vecs = load_table(spark, "embeddings", sf_dir)
     return lsh_bucketed_topk(
-        vecs, _query_vec(spark, sf_dir), k=10, bits=4, n_probes=16
+        vecs, _query_vec(sf_dir), k=10, bits=4, n_probes=16
     )
 
 
@@ -703,7 +604,7 @@ def ss04(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_lsh_index(spark, sf_dir)
     return probe_lsh_index(
-        spark, path, _query_vec(spark, sf_dir),
+        spark, path, _query_vec(sf_dir),
         k=10, bits=LSH_INDEX_BITS, n_probes=2 ** LSH_INDEX_BITS,
     )
 
@@ -717,7 +618,7 @@ def ss03(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, "embeddings", sf_dir)
     return ivf_topk(
-        vecs, _query_vec(spark, sf_dir), k=10, n_centroids=16, n_probes=16
+        vecs, _query_vec(sf_dir), k=10, n_centroids=16, n_probes=16
     )
 
 
@@ -735,7 +636,7 @@ def ss05(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_pq_codebooks,
     )
 
-    q = _query_vec(spark, sf_dir)
+    q = _query_vec(sf_dir)
     vecs = load_table(spark, "embeddings", sf_dir)
     books = train_pq_codebooks(vecs, dim=len(q), m=32, k=64)
     return pq_topk_rerank(
@@ -757,7 +658,7 @@ def ss06(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_pq_index(spark, sf_dir)
     return probe_pq_index(
-        spark, path, _query_vec(spark, sf_dir), k=10,
+        spark, path, _query_vec(sf_dir), k=10,
         rerank_df=load_table(spark, "embeddings", sf_dir),
         oversample=_full_oversample(sf_dir),
     )
@@ -776,7 +677,7 @@ def ss07(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_opq,
     )
 
-    q = _query_vec(spark, sf_dir)
+    q = _query_vec(sf_dir)
     vecs = load_table(spark, "embeddings", sf_dir)
     R, books = train_opq(vecs, dim=len(q), m=32, k=64, outer_iters=3)
     codes = opq_encode(vecs, R, books)
@@ -800,7 +701,7 @@ def ss08(spark: SparkSession, sf_dir: str) -> DataFrame:
         train_ivfpq,
     )
 
-    q = _query_vec(spark, sf_dir)
+    q = _query_vec(sf_dir)
     vecs = load_table(spark, "embeddings", sf_dir)
     cents, books = train_ivfpq(vecs, dim=len(q), n_centroids=16, m=32, k=64)
     codes = ivfpq_encode(vecs, cents, books)
@@ -823,7 +724,7 @@ def ss09(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     path = _ensure_ivfpq_index(spark, sf_dir)
     return probe_ivfpq_index(
-        spark, path, _query_vec(spark, sf_dir), k=10,
+        spark, path, _query_vec(sf_dir), k=10,
         n_probes=IVFPQ_INDEX_CENTROIDS,
         rerank_df=load_table(spark, "embeddings", sf_dir),
         oversample=_full_oversample(sf_dir),
@@ -849,7 +750,7 @@ def _ann_bench_lsh_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fixture for ~no latency (the pruned read's fixed overhead dominates
     # at this corpus size) — measured in tools/ann_recall.py, SCALE.md
     return probe_lsh_index(
-        spark, _index_path("lsh", sf_dir), _query_vec(spark, sf_dir),
+        spark, _ensure_lsh_index(spark, sf_dir), _query_vec(sf_dir),
         k=10, bits=LSH_INDEX_BITS, n_probes=4,
     )
 
@@ -858,7 +759,7 @@ def _ann_bench_pq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     from querysight_spark.operators.similarity import probe_pq_index
 
     return probe_pq_index(
-        spark, _index_path("pq", sf_dir), _query_vec(spark, sf_dir),
+        spark, _ensure_pq_index(spark, sf_dir), _query_vec(sf_dir),
         k=10, rerank_df=load_table(spark, "embeddings", sf_dir),
         oversample=10,
     )
@@ -870,7 +771,7 @@ def _ann_bench_ivfpq_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # n_probes lifted 4→8 in r4: recall@10 0.74→0.91 on the clustered
     # fixture for ~no latency (see SCALE.md recall columns)
     return probe_ivfpq_index(
-        spark, _index_path("ivfpq", sf_dir), _query_vec(spark, sf_dir),
+        spark, _ensure_ivfpq_index(spark, sf_dir), _query_vec(sf_dir),
         k=10, n_probes=8, rerank_df=load_table(spark, "embeddings", sf_dir),
         oversample=10,
     )
@@ -1004,13 +905,10 @@ def _staged_two_batch_events(spark: SparkSession, sf_dir: str) -> str:
     testdata regeneration."""
     import os
     import shutil
-    import tempfile
 
-    base = os.path.join(
-        tempfile.gettempdir(), f"qs_evsplit_{_corpus_tag(sf_dir, 'events')}"
-    )
+    base, built = fixture_dir(sf_dir, "events", "evsplit")
     stream_dir = os.path.join(base, "in")
-    if not os.path.exists(os.path.join(stream_dir, "_ready")):
+    if not built:
         ev = load_table(spark, "events", sf_dir)
         for name, half in (
             ("even", ev.where(F.col("event_id") % 2 == 0)),
@@ -1022,7 +920,7 @@ def _staged_two_batch_events(spark: SparkSession, sf_dir: str) -> str:
             os.makedirs(stream_dir, exist_ok=True)
             shutil.move(os.path.join(tmp, part), os.path.join(stream_dir, f"{name}.parquet"))
             shutil.rmtree(tmp)
-        open(os.path.join(stream_dir, "_ready"), "w").close()
+        mark_built(base)
     return stream_dir
 
 
@@ -1045,19 +943,14 @@ def tr03(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch rollup (tr01's oracle) — proving absorb-merge loses nothing.
     Cold start per run (tier + checkpoint wiped) keeps it deterministic."""
     import os
-    import shutil
-    import tempfile
 
     from querysight_spark.streaming.incremental import start_rollup_absorb
 
     stream_dir = _staged_two_batch_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), f"qs_absorb_{_corpus_tag(sf_dir, 'events')}"
-    )
+    # never marked built, so every call starts from an empty dir
+    base, _ = fixture_dir(sf_dir, "events", "absorb")
     tier = os.path.join(base, "tier")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(tier, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     ev_schema = spark.read.parquet(stream_dir + "/even.parquet").schema
     stream = (
@@ -1778,7 +1671,7 @@ def _stream_events_log(
     import os
     import tempfile
 
-    import pyarrow.parquet as pq
+    from querysight_spark.sources.catalog import _nano_timestamp_columns
 
     src = os.path.join(sf_dir, "events.parquet")
     stream_dir = os.path.join(
@@ -1795,7 +1688,7 @@ def _stream_events_log(
     # stream source needs an explicit schema, so the contract is applied
     # here by hand): nanos read as long + integer div, micros read as
     # timestamp directly (UTC session ⇒ NTZ values are preserved).
-    ts_is_nanos = str(pq.read_schema(src).field("ts").type) == "timestamp[ns]"
+    ts_is_nanos = "ts" in _nano_timestamp_columns(src)
     schema = (
         f"event_id bigint, ts {'bigint' if ts_is_nanos else 'timestamp'}, "
         "user_id bigint, event_type string, value double, props string"
@@ -2008,19 +1901,14 @@ def st06(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-count a session. Cold start per run (tier + checkpoint wiped)
     keeps it deterministic; replay idempotency is pinned in pytest."""
     import os
-    import shutil
-    import tempfile
 
     from querysight_spark.streaming.incremental import start_session_absorb
 
     stream_dir = _staged_two_batch_events(spark, sf_dir)
-    base = os.path.join(
-        tempfile.gettempdir(), f"qs_sessabs_{_corpus_tag(sf_dir, 'events')}"
-    )
+    # never marked built, so every call starts from an empty dir
+    base, _ = fixture_dir(sf_dir, "events", "sessabs")
     tier = os.path.join(base, "tier")
     ckpt = os.path.join(base, "ckpt")
-    shutil.rmtree(tier, ignore_errors=True)
-    shutil.rmtree(ckpt, ignore_errors=True)
 
     ev_schema = spark.read.parquet(stream_dir + "/even.parquet").schema
     stream = (
@@ -2056,31 +1944,24 @@ def st07(spark: SparkSession, sf_dir: str) -> DataFrame:
     feeds arrive as JSONL. Documents carry no event time, so dedup state
     here is availableNow-bounded; the watermark-bounded variant for keyed
     time data is st03."""
-    import hashlib
     import os
-    import tempfile
 
-    from querysight_spark.sources.text_corpus import DOCUMENTS_SCHEMA, write_jsonl
+    from querysight_spark.sources.text_corpus import DOCUMENTS_SCHEMA, documents_jsonl
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    export = os.path.join(tempfile.gettempdir(), f"qs_jsonl_{tag}")
-    if not os.path.exists(os.path.join(export, "_SUCCESS")):
-        write_jsonl(load_table(spark, "documents", sf_dir), export)
-    stream_dir = os.path.join(tempfile.gettempdir(), f"qs_jsonl_stream_{tag}")
-    os.makedirs(stream_dir, exist_ok=True)
-    parts = [
-        f for f in os.listdir(export)
-        if not f.startswith(("_", ".")) and not f.endswith(".crc")
-    ]
-    for copy in range(2):
-        for p in parts:
-            link = os.path.join(stream_dir, f"b{copy}_{p}")
-            if not os.path.exists(link):
-                os.symlink(os.path.join(export, p), link)
+    export = documents_jsonl(spark, sf_dir)
+    stream_dir, built = fixture_dir(sf_dir, "documents", "jsonl_stream")
+    if not built:
+        os.makedirs(stream_dir)
+        parts = [
+            f for f in os.listdir(export)
+            if not f.startswith(("_", ".")) and not f.endswith(".crc")
+        ]
+        for copy in range(2):
+            for p in parts:
+                os.symlink(
+                    os.path.join(export, p), os.path.join(stream_dir, f"b{copy}_{p}")
+                )
+        mark_built(stream_dir)
     raw = (
         spark.readStream.schema(DOCUMENTS_SCHEMA)
         .option("maxFilesPerTrigger", 1)
@@ -2352,20 +2233,15 @@ def ir04(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan pruned by the term-IN pushdown on the term-sorted layout, then
     the exact scoring tail shared with ir01, so the oracle is the same
     SQL at k=15."""
-    import os
-
     from querysight_spark.operators.search import (
         bm25_topk_indexed,
         build_text_index,
     )
 
-    path = (
-        __import__("tempfile").gettempdir()
-        + "/qs_text_index_"
-        + _corpus_tag(sf_dir, "documents")
-    )
-    if not os.path.exists(os.path.join(path, "stats", "_SUCCESS")):
+    path, built = fixture_dir(sf_dir, "documents", "text_index")
+    if not built:
         build_text_index(load_table(spark, "documents", sf_dir), path)
+        mark_built(path)
     return bm25_topk_indexed(spark, path, _IR_TERMS, k=15, k1=1.2, b=0.75)
 
 
@@ -2380,31 +2256,20 @@ def ir09(spark: SparkSession, sf_dir: str) -> DataFrame:
     base∪delta must equal the full-corpus BM25 oracle digit for digit.
     n_docs/avgdl/df_t all shift with the delta, so a missed or
     double-applied absorb moves every score."""
-    import os
-    import shutil
-
     from querysight_spark.operators.search import (
         bm25_topk_upsertable,
         build_text_index_upsertable,
         upsert_text_index,
     )
 
-    path = (
-        __import__("tempfile").gettempdir()
-        + "/qs_bm25_upsert_index_"
-        + _corpus_tag(sf_dir, "documents")
-    )
-    marker = os.path.join(path, "_UPSERT_DONE")
-    if not os.path.exists(marker):
-        # a missing marker with files present = a partial build/absorb;
-        # the only safe recovery for a mutating index is a fresh build
-        shutil.rmtree(path, ignore_errors=True)
+    path, built = fixture_dir(sf_dir, "documents", "bm25_upsert_index")
+    if not built:
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
         build_text_index_upsertable(
             docs.where(F.col("doc_id") % 10 != 0), path
         )
         upsert_text_index(spark, path, docs.where(F.col("doc_id") % 10 == 0))
-        open(marker, "w").close()
+        mark_built(path)
     return bm25_topk_upsertable(spark, path, _IR_TERMS, k=12, k1=1.2, b=0.75)
 
 
@@ -2446,29 +2311,20 @@ def ir10(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus with that stratum REMOVED, digit for digit. n_docs/avgdl/
     df_t all shift with the deletion, so a missed or double-applied
     decrement moves every surviving score."""
-    import os
-    import shutil
-
     from querysight_spark.operators.search import (
         bm25_topk_upsertable,
         build_text_index_upsertable,
         delete_from_text_index,
     )
 
-    path = (
-        __import__("tempfile").gettempdir()
-        + "/qs_bm25_delete_index_"
-        + _corpus_tag(sf_dir, "documents")
-    )
-    marker = os.path.join(path, "_DELETE_DONE")
-    if not os.path.exists(marker):
-        shutil.rmtree(path, ignore_errors=True)
+    path, built = fixture_dir(sf_dir, "documents", "bm25_delete_index")
+    if not built:
         docs = load_table(spark, "documents", sf_dir).select("doc_id", "text")
         build_text_index_upsertable(docs, path)
         delete_from_text_index(
             spark, path, docs.where(F.col("doc_id") % 7 == 3).select("doc_id")
         )
-        open(marker, "w").close()
+        mark_built(path)
     return bm25_topk_upsertable(spark, path, _IR_TERMS, k=13, k1=1.2, b=0.75)
 
 
@@ -2839,7 +2695,7 @@ def ss10(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, "embeddings", sf_dir)
     return filtered_topk(
-        vecs, _query_vec(spark, sf_dir), F.col("label") % 3 == 1, k=10
+        vecs, _query_vec(sf_dir), F.col("label") % 3 == 1, k=10
     )
 
 
@@ -2868,7 +2724,7 @@ def ss11(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     vecs = load_table(spark, "embeddings", sf_dir)
     return grouped_topk(
-        vecs, _query_vec(spark, sf_dir), "label", k_per_group=3
+        vecs, _query_vec(sf_dir), "label", k_per_group=3
     ).orderBy("label", "rk")
 
 
@@ -3074,7 +2930,7 @@ def ss12(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
     )
     return batch_topk(
-        e, queries, k=3, dim=len(_query_vec(spark, sf_dir))
+        e, queries, k=3, dim=vector_dim(sf_dir)
     ).orderBy("qid", "rk")
 
 
@@ -3818,19 +3674,16 @@ def ss13(spark: SparkSession, sf_dir: str) -> DataFrame:
     no retrain, no corpus re-encode. Exact-mode probe (all lists, full
     oversample rerank) must equal brute force over the WHOLE corpus, so
     a delta row lost or mis-assigned anywhere breaks the hash."""
-    import os
-
     from querysight_spark.operators.similarity import (
         build_ivfpq_index,
         probe_ivfpq_index,
         upsert_ivfpq_index,
     )
 
-    path = _index_path("ivfpqup", sf_dir)
-    marker = os.path.join(path, "_delta_done")
+    path, built = _index_path("ivfpqup", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
-    q = _query_vec(spark, sf_dir)
-    if not os.path.exists(marker):
+    q = _query_vec(sf_dir)
+    if not built:
         build_ivfpq_index(
             emb.where(F.col("vec_id") % 5 != 0), path, dim=len(q),
             n_centroids=IVFPQ_INDEX_CENTROIDS, m=PQ_INDEX_M, k=PQ_INDEX_K,
@@ -3838,8 +3691,7 @@ def ss13(spark: SparkSession, sf_dir: str) -> DataFrame:
         upsert_ivfpq_index(
             spark, path, emb.where(F.col("vec_id") % 5 == 0)
         )
-        with open(marker, "w") as f:
-            f.write("ok")
+        mark_built(path)
     return probe_ivfpq_index(
         spark, path, q, k=10, n_probes=IVFPQ_INDEX_CENTROIDS,
         rerank_df=emb, oversample=_full_oversample(sf_dir),
@@ -3908,18 +3760,11 @@ def io01(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle computes the same aggregate from the parquet truth, so ANY
     mangling in the write→parse chain (quoting, escapes, embedded
     newlines/commas, header handling) shifts a count or a character sum
-    and breaks the hash. Staged per corpus vintage under /tmp
-    (_corpus_tag); the read is schema-pinned — schema inference over
+    and breaks the hash. Staged once per corpus vintage (fixture_dir);
+    the read is schema-pinned — schema inference over
     100 TB of CSV is a full extra pass, never the default."""
-    import os
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "qs_csv_stage_" + _corpus_tag(sf_dir, "documents"),
-    )
-    done = os.path.join(path, "_staged_ok")
-    if not os.path.exists(done):
+    path, built = fixture_dir(sf_dir, "documents", "csv_stage")
+    if not built:
         docs = load_table(spark, "documents", sf_dir)
         (
             docs.coalesce(2)
@@ -3929,8 +3774,7 @@ def io01(spark: SparkSession, sf_dir: str) -> DataFrame:
             .option("escape", '"')
             .csv(path)
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(path)
     back = (
         spark.read.schema(
             "doc_id bigint, text string, lang string, source string, "
@@ -4128,19 +3972,11 @@ def io02(spark: SparkSession, sf_dir: str) -> DataFrame:
     documents table exported as JSON lines and read back schema-pinned,
     then aggregated against the parquet truth. Unicode escapes, quoting,
     and null handling in the serializer all sit under the hash."""
-    import os
-    import tempfile
-
-    path = os.path.join(
-        tempfile.gettempdir(),
-        "qs_jsonl_stage_" + _corpus_tag(sf_dir, "documents"),
-    )
-    done = os.path.join(path, "_staged_ok")
-    if not os.path.exists(done):
+    path, built = fixture_dir(sf_dir, "documents", "jsonl_stage")
+    if not built:
         docs = load_table(spark, "documents", sf_dir)
         docs.coalesce(2).write.mode("overwrite").json(path)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(path)
     back = spark.read.schema(
         "doc_id bigint, text string, lang string, source string, "
         "n_chars bigint"
@@ -4674,18 +4510,11 @@ def io03(spark: SparkSession, sf_dir: str) -> DataFrame:
     round-trips through directory names (type-inferred back), and the
     pruning itself is pinned by tests/test_layout.py — here the VALUES
     after the partitioned rewrite sit under the hash."""
-    import os
-
-    path = os.path.join(
-        __import__("tempfile").gettempdir(),
-        "qs_hivepart_stage_" + _corpus_tag(sf_dir, "events"),
-    )
-    done = os.path.join(path, "_staged_ok")
-    if not os.path.exists(done):
+    path, built = fixture_dir(sf_dir, "events", "hivepart_stage")
+    if not built:
         ev = load_table(spark, "events", sf_dir)
         ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(path)
     back = spark.read.parquet(path)
     return (
         back.where(F.col("event_type").isin(["purchase", "error"]))
@@ -4722,18 +4551,11 @@ def io04(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle states the truth from the ORIGINAL table — the round-trip
     fidelity of the writer+reader pair is exactly what sits under the
     hash (io03's pattern)."""
-    import os
-
-    path = os.path.join(
-        __import__("tempfile").gettempdir(),
-        "qs_orc_stage_" + _corpus_tag(sf_dir, "lineitem"),
-    )
-    done = os.path.join(path, "_staged_ok")
-    if not os.path.exists(done):
+    path, built = fixture_dir(sf_dir, "lineitem", "orc_stage")
+    if not built:
         li = load_table(spark, "lineitem", sf_dir)
         li.write.mode("overwrite").orc(path)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(path)
     back = spark.read.orc(path)
     return (
         back.where(F.col("l_quantity") >= 25)
@@ -5886,30 +5708,20 @@ def io05(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the file-count reduction itself rides the hash as a boolean the
     oracle pins TRUE (a no-op compaction would flip it and fail the
     gate)."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.layout import compact_files, dataset_file_stats
     from querysight_spark.sources.text_corpus import DOCUMENTS_SCHEMA, write_jsonl
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io05:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    tmp = tempfile.gettempdir()
-    export = os.path.join(tmp, f"qs_io05_jsonl_{tag}")
-    sink = os.path.join(tmp, f"qs_io05_sink_{tag}")
-    ckpt = os.path.join(tmp, f"qs_io05_ckpt_{tag}")
-    compacted = os.path.join(tmp, f"qs_io05_compact_{tag}")
-    done = os.path.join(compacted, "_compact_ok")
-    if not os.path.exists(done):
-        if not os.path.exists(os.path.join(export, "_SUCCESS")):
-            # 8 export part files -> 8 micro-batches -> >=8 sink files
-            write_jsonl(
-                load_table(spark, "documents", sf_dir).repartition(8), export
-            )
+    work, built = fixture_dir(sf_dir, "documents", "io05")
+    export, sink, ckpt, compacted = (
+        os.path.join(work, d) for d in ("jsonl", "sink", "ckpt", "compact")
+    )
+    if not built:
+        # 8 export part files -> 8 micro-batches -> >=8 sink files
+        write_jsonl(
+            load_table(spark, "documents", sf_dir).repartition(8), export
+        )
         raw = (
             spark.readStream.schema(DOCUMENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -5925,8 +5737,7 @@ def io05(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.awaitTermination()
         # 1 GiB target >> corpus size -> exactly one output file
         compact_files(spark, sink, compacted, target_file_bytes=1 << 30)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(work)
     n_before, bytes_before = dataset_file_stats(sink)
     n_after, _bytes_after = dataset_file_stats(compacted)
     back = spark.read.parquet(compacted)
@@ -6173,7 +5984,8 @@ def dd11(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = embedding_cosine_duplicates_auto(
         _vecs_aug(spark, sf_dir),
         threshold=0.95,
-        expected_n=_vecs_aug_expected_n(sf_dir),
+        # n base rows + every 25th duplicated, from the footer
+        expected_n=row_count(sf_dir, "embeddings") * 26 // 25 + 1,
     )
     return out.orderBy("vec_a", "vec_b")
 
@@ -6421,22 +6233,18 @@ def px04(spark: SparkSession, sf_dir: str) -> DataFrame:
     the entire chain. The probe's scoring tail and the shard window are
     the declared operators' own plans; the 10-row top side broadcasts
     into the shard join."""
-    import os
-    import tempfile
-
     from querysight_spark.operators.search import (
         bm25_topk_indexed,
         build_text_index,
     )
     from querysight_spark.operators.textstats import clean_text, shard_layout
-    from querysight_spark.sources.text_corpus import assert_clean, read_jsonl
+    from querysight_spark.sources.text_corpus import (
+        assert_clean,
+        documents_jsonl,
+        read_jsonl,
+    )
 
-    tag = _corpus_tag(sf_dir, "documents")
-    export = os.path.join(tempfile.gettempdir(), f"qs_jsonl_{tag}")
-    if not os.path.exists(os.path.join(export, "_SUCCESS")):
-        from querysight_spark.sources.text_corpus import write_jsonl
-
-        write_jsonl(load_table(spark, "documents", sf_dir), export)
+    export = documents_jsonl(spark, sf_dir)
     docs = assert_clean(read_jsonl(spark, export)).select("doc_id", "text")
     from pyspark.sql.window import Window
 
@@ -6450,11 +6258,10 @@ def px04(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("doc_id") == F.col("keeper"))
         .select("doc_id", "text")
     )
-    index_path = os.path.join(
-        tempfile.gettempdir(), f"qs_px04_text_index_{tag}"
-    )
-    if not os.path.exists(os.path.join(index_path, "stats", "_SUCCESS")):
+    index_path, built = fixture_dir(sf_dir, "documents", "px04_text_index")
+    if not built:
         build_text_index(deduped, index_path)
+        mark_built(index_path)
     top = bm25_topk_indexed(spark, index_path, _IR_TERMS, k=10, k1=1.2, b=0.75)
     sharded = shard_layout(deduped, n_shards=4, id_col="doc_id").select(
         "doc_id", "shard_id", "shard_pos"
@@ -6528,19 +6335,18 @@ def ss14(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction graph, read-out equals brute force) so the hash binds
     the whole build+traverse machinery; production beams live in the
     pytest recall tests."""
-    import os
-
     from querysight_spark.operators.similarity import (
         build_nsw_index,
         probe_nsw_index,
     )
 
-    path = _index_path("nsw", sf_dir)
-    q = _query_vec(spark, sf_dir)
-    if not os.path.exists(os.path.join(path, "adj", "_SUCCESS")):
+    path, built = _index_path("nsw", sf_dir)
+    q = _query_vec(sf_dir)
+    if not built:
         emb = load_table(spark, "embeddings", sf_dir)
         build_nsw_index(emb, path, dim=len(q))
-    n = _corpus_n(sf_dir)
+        mark_built(path)
+    n = row_count(sf_dir, "embeddings")
     return probe_nsw_index(spark, path, q, k=10, beam_width=n, max_hops=64)
 
 
@@ -6660,19 +6466,18 @@ def ss15(spark: SparkSession, sf_dir: str) -> DataFrame:
     it) so the hash binds the level assignment, every layer's build, the
     descent, and the traversal; production beams live in the pytest
     recall tests."""
-    import os
-
     from querysight_spark.operators.similarity import (
         build_hnsw_index,
         probe_hnsw_index,
     )
 
-    path = _index_path("hnsw", sf_dir)
-    q = _query_vec(spark, sf_dir)
-    if not os.path.exists(os.path.join(path, "adj", "_SUCCESS")):
+    path, built = _index_path("hnsw", sf_dir)
+    q = _query_vec(sf_dir)
+    if not built:
         emb = load_table(spark, "embeddings", sf_dir)
         build_hnsw_index(emb, path, dim=len(q))
-    n = _corpus_n(sf_dir)
+        mark_built(path)
+    n = row_count(sf_dir, "embeddings")
     return probe_hnsw_index(spark, path, q, k=10, beam_width=n, max_hops=64)
 
 
@@ -6687,26 +6492,22 @@ def ss16(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) must equal brute force over the WHOLE corpus: a delta
     vector dropped, mis-leveled, or left unconnected anywhere breaks
     the hash."""
-    import os
-
     from querysight_spark.operators.similarity import (
         build_hnsw_index,
         probe_hnsw_index,
         upsert_hnsw_index,
     )
 
-    path = _index_path("hnswup", sf_dir)
-    marker = os.path.join(path, "_delta_done")
+    path, built = _index_path("hnswup", sf_dir)
     emb = load_table(spark, "embeddings", sf_dir)
-    q = _query_vec(spark, sf_dir)
-    if not os.path.exists(marker):
+    q = _query_vec(sf_dir)
+    if not built:
         build_hnsw_index(
             emb.where(F.col("vec_id") % 5 != 0), path, dim=len(q)
         )
         upsert_hnsw_index(spark, path, emb.where(F.col("vec_id") % 5 == 0))
-        with open(marker, "w") as f:
-            f.write("ok")
-    n = _corpus_n(sf_dir)
+        mark_built(path)
+    n = row_count(sf_dir, "embeddings")
     return probe_hnsw_index(spark, path, q, k=10, beam_width=n, max_hops=64)
 
 
@@ -6900,7 +6701,7 @@ def st12(spark: SparkSession, sf_dir: str) -> DataFrame:
     # files, so a stale root would drain zero batches and serve nothing
     shutil.rmtree(root, ignore_errors=True)
     q = start_ann_serving(
-        stream, corpus, out, ckpt, k=3, dim=len(_query_vec(spark, sf_dir))
+        stream, corpus, out, ckpt, k=3, dim=vector_dim(sf_dir)
     )
     q.awaitTermination()
     return latest_served_topk(spark, out).orderBy("qid", "rk")
@@ -7113,10 +6914,6 @@ def io06(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-listed v2's files instead of rewriting data. Scans plan from the
     manifest (no directory LISTing — the expensive call at object-store
     scale) over plain parquet, so pushdown and pruning are unchanged."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         incremental_read,
         read_manifest,
@@ -7125,17 +6922,11 @@ def io06(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io06:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_io06_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "io06_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_orderpriority", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         write_version(spark, orders.where(F.col("o_orderkey") % 3 == 0), root)
         write_version(spark, orders.where(F.col("o_orderkey") % 3 == 1), root)
         write_version(
@@ -7145,8 +6936,7 @@ def io06(spark: SparkSession, sf_dir: str) -> DataFrame:
             mode="overwrite",
         )
         rollback(root, 2)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     meta_only = read_manifest(root, 4)["files"] == read_manifest(root, 2)[
         "files"
     ]
@@ -7280,9 +7070,7 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
     truth — a dropped, doubled, or torn batch anywhere breaks the
     hash. At 100 TB this is the ingest front door: atomic batches,
     CDC-readable via incremental_read, no file litter."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.text_corpus import DOCUMENTS_SCHEMA, write_jsonl
     from querysight_spark.sources.versioned import (
@@ -7293,23 +7081,17 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"st14:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"qs_st14_{tag}")
+    base, built = fixture_dir(sf_dir, "documents", "st14")
     export = os.path.join(base, "jsonl")
     root = os.path.join(base, "table")
     ckpt = os.path.join(base, "ckpt")
-    done = os.path.join(base, "_flags.json")
-    if not os.path.exists(done):
+    flags_path = os.path.join(base, "_flags.json")
+    if not built:
         import json as _json
 
-        if not os.path.exists(os.path.join(export, "_SUCCESS")):
-            write_jsonl(
-                load_table(spark, "documents", sf_dir).repartition(6), export
-            )
+        write_jsonl(
+            load_table(spark, "documents", sf_dir).repartition(6), export
+        )
         stream = (
             spark.readStream.schema(DOCUMENTS_SCHEMA)
             .option("maxFilesPerTrigger", 1)
@@ -7332,12 +7114,13 @@ def st14(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         start_versioned_sink(stream2, root, ckpt).awaitTermination()
         replay_noop = table_version(root) == v_ingested
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump({"retry": retry_noop, "replay": replay_noop}, f)
+        mark_built(base)
     else:
         import json as _json
 
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
         retry_noop, replay_noop = flags["retry"], flags["replay"]
     back = read_version(spark, root)
@@ -7378,43 +7161,27 @@ def io07(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter. At 100 TB this is the difference between a query touching
     ~10% of files and touching all of them before row-group stats even
     get a say."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         pruned_files,
         read_version,
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io07:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_io07_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "io07_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         write_version(
             spark,
             orders.repartitionByRange(16, "o_orderkey"),
             root,
             stats_cols=["o_orderkey"],
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     # r15: threshold scalars from the parquet footer stats (exact for
-    # int64) instead of a per-call full-scan agg job; agg fallback kept
-    mm = _table_minmax(sf_dir, "orders", ["o_orderkey"])
-    if mm is not None:
-        lo, hi = mm["o_orderkey"]
-    else:
-        r = orders.agg(F.min("o_orderkey"), F.max("o_orderkey")).collect()[0]
-        lo, hi = r[0], r[1]
+    # int64) instead of a per-call full-scan agg job
+    lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
     thr = lo + (hi - lo) // 10
     kept, skipped = pruned_files(root, 1, "o_orderkey", lo, thr)
     scan = read_version(spark, root, prune=("o_orderkey", lo, thr))
@@ -7466,10 +7233,6 @@ def wh03(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-merge version stays time-travel-readable. At 100 TB a 1%-of-
     keys merge against a key-clustered table rewrites ~1% of files
     instead of all of them."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         merge_into,
         read_manifest,
@@ -7477,23 +7240,15 @@ def wh03(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh03:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_wh03_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "wh03_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         # r15: the threshold only parameterizes the BUILD; the steady
         # probe never used it, yet paid a full scan+agg job per call
-        row = orders.agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 10
+        lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
+        thr = lo + (hi - lo) // 10
         write_version(
             spark,
             orders.repartitionByRange(16, "o_orderkey"),
@@ -7516,8 +7271,7 @@ def wh03(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, upd.unionByName(ins), root, ["o_orderkey"],
             delete_col="_del",
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     m1, m2 = read_manifest(root, 1), read_manifest(root, 2)
     carried = bool(set(m1["files"]) & set(m2["files"])) and len(
         m2["removed"]
@@ -7564,10 +7318,6 @@ def wh04(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a rewrite of only the zone-touched files, vectors dropped —
     ``compact_cleared_dvs``) must aggregate identically under one hash.
     The ir10 tombstone discipline applied to the table format itself."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         compact_table,
         delete_keys,
@@ -7576,23 +7326,15 @@ def wh04(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh04:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_wh04_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "documents", "wh04_table")
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "n_chars"
     )
-    if not os.path.exists(done):
+    if not built:
         # r15: build-only threshold — the steady probe never used it,
         # yet paid a full scan+agg job per call
-        row = docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 5
+        lo, hi = column_minmax(spark, sf_dir, "documents", ["doc_id"])["doc_id"]
+        thr = lo + (hi - lo) // 5
         write_version(
             spark,
             docs.repartitionByRange(16, "doc_id"),
@@ -7603,8 +7345,7 @@ def wh04(spark: SparkSession, sf_dir: str) -> DataFrame:
             spark, root, docs.where(F.col("doc_id") <= thr).select("doc_id")
         )
         compact_table(spark, root)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     m1, m2, m3 = (read_manifest(root, v) for v in (1, 2, 3))
     no_rewrite = m2["files"] == m1["files"] and m2["dvs"] != []
     dvs_cleared = m3["dvs"] == [] and m3["op"] == "compact"
@@ -7898,9 +7639,7 @@ def wh05(spark: SparkSession, sf_dir: str) -> DataFrame:
     version, and ``retry_was_noop`` pins the idempotent-refresh
     contract (same base version re-refreshed -> txn already committed).
     At 100 TB: refresh cost tracks the nightly delta, never the base."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         read_version,
@@ -7909,15 +7648,10 @@ def wh05(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh05:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"qs_wh05_{tag}")
+    base, built = fixture_dir(sf_dir, "orders", "wh05")
     root = os.path.join(base, "base")
     mv = os.path.join(base, "mv")
-    done = os.path.join(base, "_flags")
+    flags_path = os.path.join(base, "_flags")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey",
         "o_orderstatus",
@@ -7925,7 +7659,7 @@ def wh05(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("long")
         .alias("cents"),
     )
-    if not os.path.exists(done):
+    if not built:
         stepped = True
         for k in range(3):
             write_version(
@@ -7936,10 +7670,11 @@ def wh05(spark: SparkSession, sf_dir: str) -> DataFrame:
         before = table_version(mv)
         refresh_aggregate_mv(spark, root, mv, ["o_orderstatus"], ["cents"])
         noop = table_version(mv) == before
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             f.write(f"{stepped}:{noop}")
+        mark_built(base)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             s, n = f.read().split(":")
         stepped, noop = s == "True", n == "True"
     return (
@@ -7977,10 +7712,6 @@ def io08(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash). io05 is the plain-directory sibling; this one is atomic and
     time-travel-safe — readers pinned to the pre-optimize version see
     the old files untouched."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         optimize_table,
         read_manifest,
@@ -7989,17 +7720,11 @@ def io08(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io08:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_io08_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "io08_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         write_version(
             spark,
             orders.where(F.col("o_orderkey") % 8 != 0).repartitionByRange(
@@ -8022,8 +7747,7 @@ def io08(spark: SparkSession, sf_dir: str) -> DataFrame:
         optimize_table(
             spark, root, min_rows_per_file=max(1, orders.count() // 10)
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     before = read_manifest(root, 7)
     after = read_manifest(root, table_version(root))
     reduced = len(after["files"]) < len(before["files"])
@@ -8066,9 +7790,7 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
     the st13 discipline on the table format). At 100 TB this is
     ingest-time dedup: each batch costs the batch + one narrow-column
     lens scan, never a corpus x corpus pass."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.text_corpus import (
         DOCUMENTS_SCHEMA,
@@ -8081,22 +7803,16 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"st15:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    base = os.path.join(tempfile.gettempdir(), f"qs_st15_{tag}")
+    base, built = fixture_dir(sf_dir, "documents", "st15")
     export = os.path.join(base, "jsonl")
     root = os.path.join(base, "table")
-    done = os.path.join(base, "_flags")
+    flags_path = os.path.join(base, "_flags")
     docs = load_table(spark, "documents", sf_dir)
-    if not os.path.exists(done):
+    if not built:
         aug = docs.unionByName(
             docs.withColumn("doc_id", F.col("doc_id") + 100000)
         )
-        if not os.path.exists(os.path.join(export, "_SUCCESS")):
-            write_jsonl(aug.repartition(8), export)
+        write_jsonl(aug.repartition(8), export)
         write_version(
             spark,
             docs.where(F.col("doc_id") % 2 == 0).withColumn(
@@ -8127,10 +7843,11 @@ def st15(spark: SparkSession, sf_dir: str) -> DataFrame:
             stream(), root, ck2, "fp", "doc_id"
         ).awaitTermination()
         replay_noop = table_version(root) == v
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             f.write(f"{restart_noop}:{replay_noop}")
+        mark_built(base)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             a, b = f.read().split(":")
         restart_noop, replay_noop = a == "True", b == "True"
     final = read_version(spark, root)
@@ -8185,7 +7902,7 @@ def ss18(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _ensure_ivfpq_index(spark, sf_dir)
     vecs = load_table(spark, "embeddings", sf_dir)
     return probe_ivfpq_index(
-        spark, path, _query_vec(spark, sf_dir), k=10,
+        spark, path, _query_vec(sf_dir), k=10,
         n_probes=IVFPQ_INDEX_CENTROIDS,
         rerank_df=vecs,
         oversample=_full_oversample(sf_dir),
@@ -8240,10 +7957,6 @@ def wh06(spark: SparkSession, sf_dir: str) -> DataFrame:
     The aggregate per (commit, change_type) — counts, cent sums, key
     sums — rides one hash against a from-first-principles SQL replay
     of the expected feed."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         compact_table,
         delete_keys,
@@ -8252,21 +7965,13 @@ def wh06(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh06:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_wh06_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "wh06_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
-    if not os.path.exists(done):
-        row = orders.agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 10
+    if not built:
+        lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
+        thr = lo + (hi - lo) // 10
         write_version(
             spark,
             orders.repartitionByRange(16, "o_orderkey"),
@@ -8293,8 +7998,7 @@ def wh06(spark: SparkSession, sf_dir: str) -> DataFrame:
             orders.where(F.col("o_orderkey") % 100 == 9).select("o_orderkey"),
         )
         compact_table(spark, root)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     feed = read_changes(spark, root, 1, key_cols=["o_orderkey"])
     return (
         feed.groupBy(
@@ -8348,9 +8052,7 @@ def wh07(spark: SparkSession, sf_dir: str) -> DataFrame:
     update shifts a group. Refresh cost tracks each commit's touched
     files, never the base: the general IVM contract a 100 TB warehouse
     runs its dashboard rollups on."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         compact_table,
@@ -8362,26 +8064,19 @@ def wh07(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh07:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_wh07_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "wh07")
     root = os.path.join(work, "base")
     mv = os.path.join(work, "mv")
-    done = os.path.join(work, "_flags")
+    flags_path = os.path.join(work, "_flags")
     orders = load_table(spark, "orders", sf_dir).select(
         F.col("o_orderkey"),
         F.col("o_orderstatus"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
     args = (spark, root, mv, ["o_orderstatus"], ["cents"], ["o_orderkey"])
-    if not os.path.exists(done):
-        row = orders.agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 10
+    if not built:
+        lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
+        thr = lo + (hi - lo) // 10
         stepped = True
         write_version(
             spark,
@@ -8416,10 +8111,11 @@ def wh07(spark: SparkSession, sf_dir: str) -> DataFrame:
         compact_table(spark, root)
         stepped = stepped and refresh_mv_from_feed(*args) == 4
         noop = refresh_mv_from_feed(*args) == 4 and table_version(mv) == 4
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             f.write(f"{stepped}:{noop}")
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             a, b = f.read().split(":")
         stepped, noop = a == "True", b == "True"
     return (
@@ -8469,10 +8165,6 @@ def wh08(spark: SparkSession, sf_dir: str) -> DataFrame:
     formats do it in the metadata layer, never as a rewrite
     (reference has no table format at all — utils/cache_manager.py
     is latest-only)."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         evolve_table_schema,
         read_changes,
@@ -8481,23 +8173,15 @@ def wh08(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh08:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_wh08_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "documents", "wh08_table")
     docs = load_table(spark, "documents", sf_dir).select(
         "doc_id", "lang", "n_chars"
     )
-    if not os.path.exists(done):
+    if not built:
         # r15: build-only threshold — the steady probe never used it,
         # yet paid a full scan+agg job per call
-        row = docs.agg(
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 2
+        lo, hi = column_minmax(spark, sf_dir, "documents", ["doc_id"])["doc_id"]
+        thr = lo + (hi - lo) // 2
         write_version(
             spark,
             docs.where(F.col("doc_id") <= thr).repartitionByRange(
@@ -8517,8 +8201,7 @@ def wh08(spark: SparkSession, sf_dir: str) -> DataFrame:
             .repartitionByRange(8, "doc_id"),
             root,
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     m1, m2 = read_manifest(root, 1), read_manifest(root, 2)
     meta_only = (
         m2["op"] == "evolve"
@@ -8588,10 +8271,6 @@ def wh09(spark: SparkSession, sf_dir: str) -> DataFrame:
     diff work is bounded by the files the rollback actually
     adds/removes — untouched files never participate, the property
     that keeps a 100 TB un-rollback readable."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         evolve_table_schema,
         merge_into,
@@ -8601,21 +8280,13 @@ def wh09(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"wh09:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_wh09_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "orders", "wh09_table")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_totalprice"
     )
-    if not os.path.exists(done):
-        row = orders.agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 10
+    if not built:
+        lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
+        thr = lo + (hi - lo) // 10
         write_version(
             spark,
             orders.repartitionByRange(16, "o_orderkey"),
@@ -8633,8 +8304,7 @@ def wh09(spark: SparkSession, sf_dir: str) -> DataFrame:
         merge_into(spark, upd.unionByName(ins), root, ["o_orderkey"])
         evolve_table_schema(spark, root, {"w9": "long"})
         rollback(root, 1)
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
 
     def _chk(df: DataFrame):
         r = df.agg(
@@ -8700,38 +8370,27 @@ def io09(spark: SparkSession, sf_dir: str) -> DataFrame:
     residuals must equal the full-scan oracle. At 100 TB this is the
     id-lookup-with-time-bound query planning a thin file slice instead
     of a decile."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.versioned import (
         pruned_files,
         read_version,
         write_version,
     )
 
-    src = os.path.join(sf_dir, "events.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io09:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    root = os.path.join(tempfile.gettempdir(), f"qs_io09_table_{tag}")
-    done = os.path.join(root, "_build_ok")
+    root, built = fixture_dir(sf_dir, "events", "io09_table")
     ev = load_table(spark, "events", sf_dir).select(
         "event_id",
         F.unix_timestamp("ts").alias("ts_s"),
         "event_type",
         "value",
     )
-    if not os.path.exists(done):
+    if not built:
         write_version(
             spark,
             ev.repartitionByRange(16, "event_id"),
             root,
             stats_cols=["event_id", "ts_s"],
         )
-        with open(done, "w") as f:
-            f.write("ok")
+        mark_built(root)
     b = ev.agg(
         F.min("event_id").alias("id_lo"), F.max("event_id").alias("id_hi"),
         F.min("ts_s").alias("t_lo"), F.max("ts_s").alias("t_hi"),
@@ -8801,9 +8460,7 @@ def st16(spark: SparkSession, sf_dir: str) -> DataFrame:
     commit, the log streams, the retractable MV follows — the wiring
     a 100 TB warehouse runs between its bronze tables and its
     dashboards."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         compact_table,
@@ -8815,27 +8472,20 @@ def st16(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"st16:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_st16_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "st16")
     root = os.path.join(work, "base")
     mv = os.path.join(work, "mv")
     ck = os.path.join(work, "ck")
-    done = os.path.join(work, "_flags")
+    flags_path = os.path.join(work, "_flags")
     orders = load_table(spark, "orders", sf_dir).select(
         F.col("o_orderkey"),
         F.col("o_orderstatus"),
         F.round(F.col("o_totalprice") * 100, 0).cast("long").alias("cents"),
     )
     args = (spark, root, mv, ["o_orderstatus"], ["cents"], ["o_orderkey"])
-    if not os.path.exists(done):
-        row = orders.agg(
-            F.min("o_orderkey").alias("lo"), F.max("o_orderkey").alias("hi")
-        ).collect()[0]
-        thr = row.lo + (row.hi - row.lo) // 10
+    if not built:
+        lo, hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"]
+        thr = lo + (hi - lo) // 10
         write_version(
             spark,
             orders.repartitionByRange(16, "o_orderkey"),
@@ -8870,10 +8520,11 @@ def st16(spark: SparkSession, sf_dir: str) -> DataFrame:
         v = table_version(mv)
         start_feed_mv_sink(*args, checkpoint=ck).awaitTermination()
         noop = table_version(mv) == v
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             f.write(f"{drove}:{noop}")
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             a, b = f.read().split(":")
         drove, noop = a == "True", b == "True"
     return (
@@ -8919,10 +8570,8 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere breaks the hash, not just a boolean. At 100 TB this is how
     upstream CDC (Debezium-style command logs) lands in the lakehouse:
     at-least-once delivery in, exactly-once application out."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         delete_keys,
@@ -8932,15 +8581,10 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"st17:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_st17_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "st17")
     root = os.path.join(work, "table")
     cmd_dir = os.path.join(work, "commands")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
@@ -9003,7 +8647,7 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
             .awaitTermination()
         )
 
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(cmd_dir, exist_ok=True)
         cmds = [
             {"seq": 1, "cmd_id": "cmd-m1", "kind": "merge",
@@ -9034,12 +8678,13 @@ def st17(spark: SparkSession, sf_dir: str) -> DataFrame:
         # re-delivered, zero new versions
         _drain(os.path.join(work, "ckpt2"))
         replay_noop = table_version(root) == v_applied
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(
                 {"redelivery": redelivery_noop, "replay": replay_noop}, f
             )
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
         redelivery_noop = flags["redelivery"]
         replay_noop = flags["replay"]
@@ -9093,9 +8738,7 @@ def io10(spark: SparkSession, sf_dir: str) -> DataFrame:
     so the skipping is also provably lossless. At 100 TB this is the
     difference between a multi-dimensional dashboard predicate reading
     ~1 percent of files and reading ~10 percent."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         pruned_files,
@@ -9105,34 +8748,22 @@ def io10(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder_table,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io10:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io10_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io10")
     root_z = os.path.join(work, "zorder")  # key-clustered then z-ordered
     root_c = os.path.join(work, "bycust")  # cust-clustered control
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     # r15: threshold scalars from the parquet footer stats (exact for
-    # int64) instead of a per-call full-scan agg job; agg fallback kept
-    mm = _table_minmax(sf_dir, "orders", ["o_orderkey", "o_custkey"])
-    if mm is not None:
-        (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
-    else:
-        r = orders.agg(
-            F.min("o_orderkey"), F.max("o_orderkey"),
-            F.min("o_custkey"), F.max("o_custkey"),
-        ).collect()[0]
-        klo, khi, clo, chi = r[0], r[1], r[2], r[3]
+    # int64) instead of a per-call full-scan agg job
+    mm = column_minmax(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
+    (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
     k1 = klo + (khi - klo) * 2 // 5
     k2 = klo + (khi - klo) // 2
     c1 = clo + (chi - clo) * 2 // 5
     c2 = clo + (chi - clo) // 2
     stats_cols = ["o_orderkey", "o_custkey"]
-    if not os.path.exists(os.path.join(work, "_build_ok")):
+    if not built:
         write_version(
             spark,
             orders.repartitionByRange(64, "o_orderkey"),
@@ -9148,8 +8779,7 @@ def io10(spark: SparkSession, sf_dir: str) -> DataFrame:
             root_c,
             stats_cols=["o_custkey", "o_orderkey"],
         )
-        with open(os.path.join(work, "_build_ok"), "w") as f:
-            f.write("ok")
+        mark_built(work)
     preds = [("o_orderkey", k1, k2), ("o_custkey", c1, c2)]
     kept_key, _ = pruned_files(root_z, 1, preds)  # v1: key-clustered
     kept_z, _ = pruned_files(root_z, 2, preds)    # v2: z-ordered
@@ -9265,9 +8895,7 @@ def px05(spark: SparkSession, sf_dir: str) -> DataFrame:
     a from-first-principles oracle, so a fault in ANY stage — schema
     carry, DV scope, merge pruning, compaction, Morton layout, zone
     planning — surfaces as a value mismatch, not a green boolean."""
-    import hashlib
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         compact_table,
@@ -9281,28 +8909,16 @@ def px05(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder_table,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"px05:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_px05_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "px05")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags")
+    flags_path = os.path.join(work, "_flags")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     # r15: threshold scalars from the parquet footer stats (exact for
-    # int64) instead of a per-call full-scan agg job; agg fallback kept
-    mm = _table_minmax(sf_dir, "orders", ["o_orderkey", "o_custkey"])
-    if mm is not None:
-        (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
-    else:
-        r = orders.agg(
-            F.min("o_orderkey"), F.max("o_orderkey"),
-            F.min("o_custkey"), F.max("o_custkey"),
-        ).collect()[0]
-        klo, khi, clo, chi = r[0], r[1], r[2], r[3]
+    # int64) instead of a per-call full-scan agg job
+    mm = column_minmax(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
+    (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
     k1 = klo + (khi - klo) * 2 // 5
     k2 = klo + (khi - klo) // 2
     c1 = clo + (chi - clo) * 2 // 5
@@ -9331,7 +8947,7 @@ def px05(spark: SparkSession, sf_dir: str) -> DataFrame:
             txn_id="px05:d1",
         )
 
-    if not os.path.exists(done):
+    if not built:
         write_version(
             spark,
             orders.repartitionByRange(32, "o_orderkey"),
@@ -9349,10 +8965,11 @@ def px05(spark: SparkSession, sf_dir: str) -> DataFrame:
         _merge_cmd()  # redelivered commands: txn map no-ops both
         _delete_cmd()
         replay_noop = table_version(root) == v
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             f.write(str(bool(replay_noop)))
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             replay_noop = f.read() == "True"
     preds = [("o_orderkey", k1, k2), ("o_custkey", c1, c2)]
     kept, skipped = pruned_files(root, table_version(root), preds)
@@ -9450,10 +9067,8 @@ def st18(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-first-principles oracle over all of orders. At 100 TB this is
     the contract that keeps a weekly OPTIMIZE from breaking every
     downstream incremental pipeline."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         evolve_table_schema,
@@ -9463,18 +9078,13 @@ def st18(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder_table,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"st18:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_st18_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "st18")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         b1 = orders.where(F.col("o_orderkey") % 3 == 0)
         b2 = orders.where(F.col("o_orderkey") % 3 == 1)
@@ -9505,10 +9115,11 @@ def st18(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cover": inc1_n + inc2_n == table_n,
             "no_double": whole_n == table_n,
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     inc1 = incremental_read(spark, root, 0, 1)
     inc2 = incremental_read(spark, root, 1, 5)
@@ -9566,10 +9177,8 @@ def io11(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the pruned read's aggregate hashes against the
     from-first-principles oracle over all of orders — the skipping is
     lossless. Cost-tracks-delta curve: tools/lakehouse_curve.py."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         pruned_files,
@@ -9579,35 +9188,23 @@ def io11(spark: SparkSession, sf_dir: str) -> DataFrame:
         zorder_table,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io11:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io11_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io11")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
     # r15: threshold scalars from the parquet footer stats (exact for
-    # int64) instead of a per-call full-scan agg job; agg fallback kept
-    mm = _table_minmax(sf_dir, "orders", ["o_orderkey", "o_custkey"])
-    if mm is not None:
-        (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
-    else:
-        r = orders.agg(
-            F.min("o_orderkey"), F.max("o_orderkey"),
-            F.min("o_custkey"), F.max("o_custkey"),
-        ).collect()[0]
-        klo, khi, clo, chi = r[0], r[1], r[2], r[3]
+    # int64) instead of a per-call full-scan agg job
+    mm = column_minmax(spark, sf_dir, "orders", ["o_orderkey", "o_custkey"])
+    (klo, khi), (clo, chi) = mm["o_orderkey"], mm["o_custkey"]
     k1 = klo + (khi - klo) * 2 // 5
     k2 = klo + (khi - klo) // 2
     c1 = clo + (chi - clo) * 2 // 5
     c2 = clo + (chi - clo) // 2
     cols = ["o_orderkey", "o_custkey"]
     preds = [("o_orderkey", k1, k2), ("o_custkey", c1, c2)]
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         base = orders.where(F.col("o_orderkey") % 5 != 0)
         app1 = orders.where(
@@ -9643,10 +9240,11 @@ def io11(spark: SparkSession, sf_dir: str) -> DataFrame:
             "delta_only": bool(delta_only),
             "restored": len(kept_inc) < len(kept_drift),
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root, prune=preds)
@@ -9695,10 +9293,8 @@ def io12(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashes against the from-first-principles oracle. At 100 TB this is
     what keeps right-to-be-forgotten merges and key-IN point reads
     O(files-that-contain-the-keys) on unclustered keys."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         _kf_hash_pair,
@@ -9712,18 +9308,13 @@ def io12(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io12:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io12_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io12")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         for i in range(8):
             part = orders.where(F.col("o_orderkey") % 8 == i).coalesce(1)
@@ -9744,8 +9335,8 @@ def io12(spark: SparkSession, sf_dir: str) -> DataFrame:
         ) and len(m["files"]) == 8
         beats = zone_all and 0 < len(touched) < len(m["files"])
         # measured false-positive rate on 500 ABSENT keys
-        kmax = orders.agg(F.max("o_orderkey")).collect()[0][0]
-        absent = [int(kmax) + 1 + i for i in range(500)]
+        kmax = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"][1]
+        absent = [kmax + 1 + i for i in range(500)]
         pairs = [_kf_hash_pair(v) for v in absent]
         admitted = 0
         for f in m["files"]:
@@ -9767,10 +9358,11 @@ def io12(spark: SparkSession, sf_dir: str) -> DataFrame:
             "fpr": fpr,
             "fpr_ok": fpr < 0.05,
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)
@@ -9818,10 +9410,8 @@ def io13(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is the difference between a tenant-scoped delta
     merge rewriting ~the files that hold those documents and rewriting
     the tenant's entire partition."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         _touched_by_keys,
@@ -9832,18 +9422,13 @@ def io13(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io13:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io13_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io13")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_orderkey", "o_custkey", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         for i in range(8):
             part = orders.where(F.col("o_orderkey") % 8 == i).coalesce(1)
@@ -9875,10 +9460,11 @@ def io13(spark: SparkSession, sf_dir: str) -> DataFrame:
             "beats": 0 < len(both) < len(first_only)
             and set(m2["removed"]) <= set(both),
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)
@@ -9927,10 +9513,8 @@ def io14(spark: SparkSession, sf_dir: str) -> DataFrame:
     the anchor replay broke. The reference's cache layer keeps only a
     latest-only JSON blob (utils/cache_manager.py:34-60) — no
     versioned metadata at all."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     import querysight_spark.sources.versioned as vmod
     from querysight_spark.sources.versioned import (
@@ -9940,19 +9524,14 @@ def io14(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io14:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io14_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io14")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
     n_slices = vmod._ANCHOR_EVERY + 2
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         # per-commit threshold override (round 11): forces tiny
         # anchors to fold without rebinding the module global under
@@ -9996,10 +9575,11 @@ def io14(spark: SparkSession, sf_dir: str) -> DataFrame:
             "complete": bool(complete),
             "travel": int(mid) == int(expect_mid),
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)
@@ -10044,10 +9624,8 @@ def io15(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-rebuild aggregate hashes against the oracle). At 100 TB this is the
     difference between a merge-every-batch pipeline keeping its
     q <~ 1/fpr probe bound and quietly regressing to full scans."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     from querysight_spark.sources.versioned import (
         key_membership_pruned,
@@ -10058,18 +9636,13 @@ def io15(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io15:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io15_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io15")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         for i in range(8):
             part = orders.where(F.col("o_orderkey") % 8 == i).coalesce(1)
@@ -10117,10 +9690,11 @@ def io15(spark: SparkSession, sf_dir: str) -> DataFrame:
             and hit >= 1
         )
         flags = {"sat": bool(saturated), "rec": bool(recovered)}
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)
@@ -10167,10 +9741,8 @@ def io16(spark: SparkSession, sf_dir: str) -> DataFrame:
     from-first-principles oracle: the overwrite replaced every slice
     exactly once. The reference keeps a latest-only JSON cache blob
     (utils/cache_manager.py:34-60) — no versioned metadata at all."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     import querysight_spark.sources.versioned as vmod
     from querysight_spark.sources.versioned import (
@@ -10182,19 +9754,14 @@ def io16(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io16:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io16_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io16")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
     n_app = vmod._ANCHOR_EVERY  # appends v1..v32; the overwrite is v33
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         for i in range(n_app):
             part = orders.where(
@@ -10236,7 +9803,7 @@ def io16(spark: SparkSession, sf_dir: str) -> DataFrame:
             and hist["n_added"] == 4
             and hist["n_removed"] == n_app
         )
-        hi = int(orders.agg(F.max("o_orderkey")).first()[0]) // 8
+        hi = column_minmax(spark, sf_dir, "orders", ["o_orderkey"])["o_orderkey"][1] // 8
         vmod._ANCHOR_SIDE_CACHE.clear()
         vmod._MANIFEST_CACHE.clear()
         kept_lazy, _ = pruned_files(root, v, "o_orderkey", 1, hi)
@@ -10254,10 +9821,11 @@ def io16(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lazy": bool(lazy_ok),
             "plan": bool(plan_ok),
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)
@@ -10310,10 +9878,8 @@ def io17(spark: SparkSession, sf_dir: str) -> DataFrame:
     The reference keeps a latest-only JSON cache blob
     (utils/cache_manager.py:34-60) — no versioned metadata, no file
     skipping of any kind."""
-    import hashlib
     import json as _json
     import os
-    import tempfile
 
     import querysight_spark.sources.versioned as vmod
     from querysight_spark.sources.versioned import (
@@ -10326,18 +9892,13 @@ def io17(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_version,
     )
 
-    src = os.path.join(sf_dir, "orders.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"io17:{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    work = os.path.join(tempfile.gettempdir(), f"qs_io17_{tag}")
+    work, built = fixture_dir(sf_dir, "orders", "io17")
     root = os.path.join(work, "table")
-    done = os.path.join(work, "_flags.json")
+    flags_path = os.path.join(work, "_flags.json")
     orders = load_table(spark, "orders", sf_dir).select(
         "o_orderstatus", "o_orderkey", "o_totalprice"
     )
-    if not os.path.exists(done):
+    if not built:
         os.makedirs(work, exist_ok=True)
         even = orders.where(F.col("o_orderkey") % 2 == 0)
         write_version(
@@ -10414,10 +9975,11 @@ def io17(spark: SparkSession, sf_dir: str) -> DataFrame:
             "equiv": bool(cell_equiv_ok),
             "delta": bool(delta_resolve_ok),
         }
-        with open(done, "w") as f:
+        with open(flags_path, "w") as f:
             _json.dump(flags, f)
+        mark_built(work)
     else:
-        with open(done) as f:
+        with open(flags_path) as f:
             flags = _json.load(f)
     return (
         read_version(spark, root)

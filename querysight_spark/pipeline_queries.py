@@ -958,27 +958,14 @@ def ql27(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERMISSIVE reader with corrupt-line audit, and aggregated — the
     round-trip must be lossless, so the oracle aggregates the original
     parquet directly (same staging-free pattern as ql24)."""
-    import hashlib
-    import os
-    import tempfile
-
     from querysight_spark.sources.text_corpus import (
         DOCUMENTS_SCHEMA,
         assert_clean,
+        documents_jsonl,
         read_jsonl,
-        write_jsonl,
     )
 
-    from querysight_spark.sources.catalog import load_table
-
-    src = os.path.join(sf_dir, "documents.parquet")
-    st = os.stat(src)
-    tag = hashlib.sha256(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(tempfile.gettempdir(), f"qs_jsonl_{tag}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        write_jsonl(load_table(spark, "documents", sf_dir), path)
+    path = documents_jsonl(spark, sf_dir)
     docs = assert_clean(read_jsonl(spark, path, DOCUMENTS_SCHEMA))
     return (
         docs.groupBy("source", "lang")

@@ -14,7 +14,11 @@ maxPartitionBytes-sized tasks; nothing here collects to the driver.
 
 from __future__ import annotations
 
+import functools
+import hashlib
 import os
+import shutil
+import tempfile
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
@@ -25,41 +29,110 @@ from querysight_spark.schemas import TESTDATA_TABLES
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
-# Schema-inference memo (r15, VERDICT r14 ask #4): Spark re-reads parquet
-# footers to infer the schema on EVERY spark.read.parquet() call (~0.1 s
-# of driver latency per call on this host, any scale). The inferred
-# StructType is pure METADATA, so it follows the r14 manifest-cache
-# precedent: keyed on the source's identity (path + mtime_ns + size),
-# never on path alone, it invalidates the moment the file or directory
-# contents change — no result or data row is ever cached. Bounded to
-# keep a long-lived session from accumulating entries.
-_SCHEMA_CACHE: dict[tuple, object] = {}
-_SCHEMA_CACHE_MAX = 256
-
-
 def _source_identity(path: str) -> tuple:
+    """A source's identity: path + mtime_ns + size of the file or the TOP
+    directory. A write into a nested partition dir leaves the top dir's
+    entry unchanged, so such a write keeps the identity."""
     st = os.stat(path)
     return (path, st.st_mtime_ns, st.st_size)
 
 
+# Schema-inference memo (r15, VERDICT r14 ask #4): Spark re-reads parquet
+# footers to infer the schema on EVERY spark.read.parquet() call (~0.1 s
+# of driver latency per call on this host, any scale). The inferred
+# StructType is pure metadata; no data row is ever cached.
+@functools.lru_cache(maxsize=256)
+def _inferred_schema(spark: SparkSession, identity: tuple):
+    return spark.read.parquet(identity[0]).schema
+
+
 def read_parquet_known_schema(spark: SparkSession, path: str) -> DataFrame:
-    """``spark.read.parquet(path)`` that skips per-call footer-based
-    schema inference after the first read of a given source identity.
-    First read infers and memoizes; any rewrite of the file/directory
-    (new mtime) re-infers. Falls back to plain inference if the path
-    cannot be stat'ed (e.g. globs)."""
+    """``spark.read.parquet(path)`` that infers the schema once per
+    (session, source identity) and pins it on every later read.
+
+    The memo is keyed on the session (so a new session, whose reader
+    confs such as ``nanosAsLong`` may differ, re-infers) plus
+    ``_source_identity``: rewriting the file, or adding/removing an
+    entry in the top directory, re-infers. A write into a NESTED
+    partition dir does not change the top dir's identity, so the memo
+    assumes such appends keep the schema. Least-recently-used entries
+    are evicted past 256. Paths that cannot be stat'ed (e.g. globs) fall
+    back to plain inference."""
     try:
-        key = _source_identity(path)
+        identity = _source_identity(path)
     except OSError:
         return spark.read.parquet(path)
-    schema = _SCHEMA_CACHE.get(key)
-    if schema is None:
-        df = spark.read.parquet(path)
-        if len(_SCHEMA_CACHE) >= _SCHEMA_CACHE_MAX:
-            _SCHEMA_CACHE.clear()
-        _SCHEMA_CACHE[key] = df.schema
-        return df
-    return spark.read.schema(schema).parquet(path)
+    return spark.read.schema(_inferred_schema(spark, identity)).parquet(path)
+
+
+_BUILT = "_fixture_ok"
+
+
+def fixture_dir(
+    sf_dir: str, table: str, kind: str, root: str | None = None
+) -> tuple[str, bool]:
+    """A build-once working dir bound to the IDENTITY of
+    ``sf_dir/<table>.parquet`` (path + mtime_ns + size), not just its
+    path: the testdata tree is regenerated between rounds, so a
+    path-only key would silently reuse fixtures built from a prior
+    vintage (ADVICE r3). Returns ``(path, built)`` under ``root``
+    (default: the system temp dir). When ``built`` is False, ``path``
+    has been removed — a build that crashed part-way is redone from
+    empty — and the caller builds into it, then calls
+    ``mark_built(path)``; the marker is written only after the build."""
+    _, mtime_ns, size = _source_identity(os.path.join(sf_dir, f"{table}.parquet"))
+    tag = hashlib.sha256(f"{sf_dir}:{mtime_ns}:{size}".encode()).hexdigest()[:12]
+    path = os.path.join(root or tempfile.gettempdir(), f"qs_{kind}_{tag}")
+    if os.path.exists(os.path.join(path, _BUILT)):
+        return path, True
+    shutil.rmtree(path, ignore_errors=True)
+    return path, False
+
+
+def mark_built(path: str) -> None:
+    """Record that the fixture at ``path`` (from ``fixture_dir``) is
+    complete. ``_``-prefixed, so Spark and pyarrow readers skip it."""
+    os.makedirs(path, exist_ok=True)
+    open(os.path.join(path, _BUILT), "w").close()
+
+
+def row_count(sf_dir: str, table: str) -> int:
+    """Row count from the parquet footer (driver-side, no Spark job)."""
+    return pq.ParquetFile(os.path.join(sf_dir, f"{table}.parquet")).metadata.num_rows
+
+
+def column_minmax(
+    spark: SparkSession, sf_dir: str, table: str, cols: list[str]
+) -> dict[str, tuple]:
+    """Per-column (min, max) of a table. Read from the parquet footer's
+    row-group statistics when every column has them (exact for int64, so
+    identical to ``agg(min, max)``, and no Spark job); otherwise one
+    ``agg`` over the table."""
+    try:
+        md = pq.ParquetFile(os.path.join(sf_dir, f"{table}.parquet")).metadata
+        idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
+        out: dict[str, tuple] = {}
+        for c in cols:
+            stats = [md.row_group(g).column(idx[c]).statistics for g in range(md.num_row_groups)]
+            if not stats or any(s is None or not s.has_min_max for s in stats):
+                raise ValueError(c)
+            out[c] = (min(s.min for s in stats), max(s.max for s in stats))
+        return out
+    except (OSError, KeyError, ValueError):
+        aggs = [f(c) for c in cols for f in (F.min, F.max)]
+        r = load_table(spark, table, sf_dir).agg(*aggs).collect()[0]
+        return {c: (r[2 * i], r[2 * i + 1]) for i, c in enumerate(cols)}
+
+
+def vector_dim(sf_dir: str) -> int | None:
+    """Embedding length from the first 1024 rows of embeddings.parquet
+    (driver-side, whichever ids they hold); None for an empty corpus."""
+    import pyarrow.compute as pc
+    import pyarrow.dataset as pads
+
+    path = os.path.join(sf_dir, "embeddings.parquet")
+    head = pads.dataset(path).head(1024, columns=["embedding"])
+    return pc.max(pc.list_value_length(head.column("embedding"))).as_py()
 
 
 def _nano_timestamp_columns(path: str) -> list[str]:
@@ -75,9 +148,10 @@ def _nano_timestamp_columns(path: str) -> list[str]:
 
 
 def load_table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one testdata table. Plain parquet read — no schema option, so the
-    vectorized reader uses the file footer schema; column pruning and filter
-    pushdown happen in whatever plan the caller builds on top.
+    """Read one testdata table through the schema memo
+    (``read_parquet_known_schema``): the footer schema, inferred once per
+    source identity; column pruning and filter pushdown happen in
+    whatever plan the caller builds on top.
 
     The schema CONTRACT (pinned by ql22's oracle) is that timestamps
     surface as plain TimestampType, whatever the file stored:

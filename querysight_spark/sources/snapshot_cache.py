@@ -6,9 +6,9 @@ TTLs 24h/12h/6h/3h (utils/cache_manager.py:34-39), cache keys from hashed
 parameters (utils/data_acquisition.py:238-241, querysight.py:534-654).
 
 Design: each ``put`` writes a parquet snapshot under ``root/<level>/<key>/``
-plus a tiny JSON manifest carrying ``written_at``/``expires_at``. ``get``
-returns the DataFrame only if the manifest is still valid. Unlike the
-reference (which ignores the cache_key when reading logs back —
+plus a tiny JSON manifest carrying ``written_at``/``expires_at``, published
+last. ``get`` returns the DataFrame only if the manifest is still valid.
+Unlike the reference (which ignores the cache_key when reading logs back —
 utils/cache_manager.py:324, fidelity F7), reads are strictly keyed.
 
 Scale: snapshots are plain parquet directories — at 100 TB a snapshot is a
@@ -66,13 +66,21 @@ class SnapshotCache:
         return self._dir(level, key) + ".manifest.json"
 
     def put(self, df: DataFrame, level: str, key: str, now: float | None = None) -> str:
+        """Write the snapshot, then publish its manifest. The old manifest
+        is removed before the data is overwritten and the new one appears
+        by atomic rename only after the write, so a put that fails
+        part-way leaves ``get`` returning None, never partial data."""
         path = self._dir(level, key)
+        mp = self._manifest_path(level, key)
+        if os.path.exists(mp):
+            os.remove(mp)
         df.write.mode("overwrite").parquet(path)
         now = time.time() if now is None else now
         ttl = self.ttls.get(level, 3600)
         manifest = {"level": level, "key": key, "written_at": now, "expires_at": now + ttl}
-        with open(self._manifest_path(level, key), "w") as f:
+        with open(mp + ".tmp", "w") as f:
             json.dump(manifest, f)
+        os.replace(mp + ".tmp", mp)
         return path
 
     def is_valid(self, level: str, key: str, now: float | None = None) -> bool:

@@ -20,6 +20,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from querysight_spark.sources.catalog import fixture_dir, load_table, mark_built
+
 DOCUMENTS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -35,6 +37,16 @@ def write_jsonl(df: DataFrame, path: str, mode: str = "overwrite") -> None:
     """Export as newline-delimited JSON (one object per line, one file per
     partition — repartition first to control export file count)."""
     df.write.mode(mode).json(path)
+
+
+def documents_jsonl(spark: SparkSession, sf_dir: str) -> str:
+    """The testdata documents table exported once as JSONL per corpus
+    vintage (``catalog.fixture_dir``); returns the export dir."""
+    path, built = fixture_dir(sf_dir, "documents", "jsonl")
+    if not built:
+        write_jsonl(load_table(spark, "documents", sf_dir), path)
+        mark_built(path)
+    return path
 
 
 def read_jsonl(

@@ -116,6 +116,15 @@ def test_upstream_closure(spark, max_hops, expected):
     assert {r.model_name for r in closure.collect()} == expected
 
 
+def test_demo_dims_collect_without_jobs(spark):
+    from querysight_spark.demo import build_model_map, build_sources_dim
+
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    n = len(build_model_map(spark).collect()) + len(build_sources_dim(spark).collect())
+    assert n == 32 + 6 and set(tracker.getJobIdsForGroup()) - before == set()
+
+
 def test_coverage_metrics(spark, model_map, resolved):
     used = used_models(resolved)
     m = coverage_metrics(model_map, used).collect()[0]

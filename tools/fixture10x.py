@@ -6,7 +6,7 @@ fixture and prints the observed exponent per query
 (log10(t_10x / t_sf01)); 1.0 = linear, anything well above is a
 super-linear outlier to triage.
 
-Fixture (built once into /tmp, keyed to the sf0.1 corpus identity):
+Fixture (built once into the temp dir, keyed to the sf0.1 corpus identity):
 every table grown 10x the way the corpus actually grows —
  * facts (events / orders / lineitem / customer / supplier / part /
    documents / embeddings): 10 key-shifted copies with FOREIGN KEYS
@@ -52,21 +52,16 @@ def _cipher(c: int) -> str:
 
 
 def build_fixture() -> str:
-    import hashlib
-
     import duckdb
 
-    st = os.stat(os.path.join(SRC, "events.parquet"))
+    from querysight_spark.sources.catalog import fixture_dir, mark_built
+
     # v2: p_name copy-tagged (v1 left 10 copies of every part name, which
     # inflated lk03's name blocks quadratically by construction)
-    tag = hashlib.sha256(
-        f"10x:v2:{SRC}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join("/tmp", f"qs_sf1_fixture_{tag}")
-    done = os.path.join(out, "_fixture_ok")
-    if os.path.exists(done):
+    out, built = fixture_dir(SRC, "events", "sf1_fixture_v2")
+    if built:
         return out
-    os.makedirs(out, exist_ok=True)
+    os.makedirs(out)
     con = duckdb.connect()
     for t in [
         "region", "nation", "customer", "supplier", "part",
@@ -147,8 +142,7 @@ def build_fixture() -> str:
         "embeddings",
     )
     con.close()
-    with open(done, "w") as f:
-        f.write("ok")
+    mark_built(out)
     return out
 
 
