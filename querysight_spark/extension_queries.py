@@ -8372,6 +8372,7 @@ def io09(spark: SparkSession, sf_dir: str) -> DataFrame:
     of a decile."""
     from querysight_spark.sources.versioned import (
         pruned_files,
+        read_manifest,
         read_version,
         write_version,
     )
@@ -8391,15 +8392,26 @@ def io09(spark: SparkSession, sf_dir: str) -> DataFrame:
             stats_cols=["event_id", "ts_s"],
         )
         mark_built(root)
-    b = ev.agg(
-        F.min("event_id").alias("id_lo"), F.max("event_id").alias("id_hi"),
-        F.min("ts_s").alias("t_lo"), F.max("ts_s").alias("t_hi"),
-    ).collect()[0]
-    id_pred = ("event_id", b.id_lo, b.id_lo + (b.id_hi - b.id_lo) // 10)
+    # the column bounds from the commit's zone maps (driver-side manifest
+    # read); the agg runs only if some file lacks a zone map
+    m = read_manifest(root, 1, need=("stats",))
+    zones = [m["stats"].get(f, {}) for f in m["files"]]
+    if zones and all("event_id" in z and "ts_s" in z for z in zones):
+        id_lo, id_hi, t_lo, t_hi = (
+            min(z["event_id"][0] for z in zones),
+            max(z["event_id"][1] for z in zones),
+            min(z["ts_s"][0] for z in zones),
+            max(z["ts_s"][1] for z in zones),
+        )
+    else:
+        id_lo, id_hi, t_lo, t_hi = ev.agg(
+            F.min("event_id"), F.max("event_id"), F.min("ts_s"), F.max("ts_s")
+        ).collect()[0]
+    id_pred = ("event_id", id_lo, id_lo + (id_hi - id_lo) // 10)
     t_pred = (
         "ts_s",
-        b.t_lo + (b.t_hi - b.t_lo) // 20,
-        b.t_lo + (b.t_hi - b.t_lo) * 3 // 20,
+        t_lo + (t_hi - t_lo) // 20,
+        t_lo + (t_hi - t_lo) * 3 // 20,
     )
     kept_both, _ = pruned_files(root, 1, [id_pred, t_pred])
     kept_id, _ = pruned_files(root, 1, *id_pred)
@@ -8407,7 +8419,7 @@ def io09(spark: SparkSession, sf_dir: str) -> DataFrame:
     tighter = len(kept_both) < min(len(kept_id), len(kept_t)) or (
         len(kept_both) <= 2 and len(kept_both) < 16
     )
-    scan = read_version(spark, root, prune=[id_pred, t_pred])
+    scan = read_version(spark, root, prune=[id_pred, t_pred], schema=ev.schema)
     return (
         scan.groupBy("event_type")
         .agg(

@@ -368,9 +368,9 @@ def ql04(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @_q("ql05_uncovered_tables")
 def ql05(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # sort=False: resolve_models explodes + windows the pattern rows,
-    # so the E1 impact sort (a full range Exchange + Sort that Catalyst
-    # cannot eliminate across the explode) would be pure waste here
+    # sort=False: resolve_models explodes the pattern rows, so the E1
+    # impact sort (a full range Exchange + Sort that Catalyst cannot
+    # eliminate across the explode) would be pure waste here
     p = _patterns(spark, sf_dir, min_frequency=1, sort=False)
     return uncovered_tables(
         resolve_models(p, build_model_map(spark)), build_sources_dim(spark)

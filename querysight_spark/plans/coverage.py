@@ -2,72 +2,94 @@
 
 The reference resolves tables→models with per-row Python dict fallbacks
 (/root/reference/utils/dbt_mapper.py:263-300) and computes coverage with
-driver-side set algebra (utils/models.py:303-372). Here C1 runs once, in
-``resolve_models``: the exploded (pattern, table) relation joined against
-the broadcast model map — at 100 TB the fact side streams through a
-broadcast-hash join with zero shuffle. Every other report (C2-C5, F4, D6,
-and the recommender) is a small plan over that one resolved relation.
-C6 walks the dbt DAG on the driver, which already holds it, and joins the
-closure back as a broadcast dim.
+driver-side set algebra (utils/models.py:303-372). The catalog dims are
+small and the driver already holds them (``catalog_frames`` builds them as
+local relations, so collecting them starts no Spark job), so they enter the
+plan as literals. C1 runs once, in ``resolve_models``: the best model per
+lookup key is picked on the driver, and each (pattern, table) row resolves
+by a lookup in one map literal, a narrow projection with no join, window
+or shuffle. Every other report (C2-C5, F4, D6, and the recommender) is a
+small plan over that one resolved relation. C5 tests each unmapped table
+against a driver-built set of source names; C6 walks the dbt DAG on the
+driver and joins the closure back as a broadcast dim.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import json
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from querysight_spark.schemas import DBT_EDGES_SCHEMA
 from querysight_spark.sources.dbt_catalog import local_frame
 
 
-def _candidate_keys(tname_col):
+def _json_literal(value, ddl: str) -> Column:
+    """A driver-held map or list as ONE literal: a JSON string that
+    ``from_json`` parses and Catalyst constant-folds. Building it is one
+    py4j call; a ``create_map``/``isin`` of per-element ``F.lit``s costs one
+    call per element."""
+    return F.from_json(F.lit(json.dumps(value)), ddl)
+
+
+def _candidate_keys(tname_col) -> list[Column]:
     """Lookup-key candidates for a table ref, in priority order (C1):
-    rank 0 = exact ref (lowercased), rank 1 = bare table name,
-    rank 2 = schema.table (last two parts). Mirrors the fallback chain at
-    utils/dbt_mapper.py:263-300 as data instead of control flow."""
-    parts = F.split(F.lower(tname_col), r"\.")
-    n = F.size(parts)
+    exact ref (lowercased), bare table name, schema.table (last two
+    parts). The last two are NULL for a ref without a dot. Mirrors the
+    fallback chain at utils/dbt_mapper.py:263-300 as data instead of
+    control flow."""
+    low = F.lower(tname_col)
+    parts = F.split(low, r"\.")
+    dotted = F.size(parts) >= 2
     bare = F.element_at(parts, -1)
-    schema_table = F.concat_ws(".", F.element_at(parts, -2), F.element_at(parts, -1))
-    return F.array_distinct(
-        F.when(n >= 2, F.array(F.lower(tname_col), bare, schema_table)).otherwise(
-            F.array(F.lower(tname_col))
-        )
-    )
+    schema_table = F.concat_ws(".", F.element_at(parts, -2), bare)
+    return [low, F.when(dotted, bare), F.when(dotted, schema_table)]
+
+
+def _best_model_per_key(model_map: DataFrame) -> dict[str, str]:
+    """table_key → model_name of its smallest (match_rank, model_name).
+    Rows without a key or a model can never resolve a table and are
+    skipped."""
+    best: dict[str, tuple[int, str]] = {}
+    for key, model, rank in model_map.select(
+        "table_key", "model_name", "match_rank"
+    ).collect():
+        if key is not None and model is not None:
+            best[key] = min(best.get(key, (rank, model)), (rank, model))
+    return {key: model for key, (_, model) in best.items()}
 
 
 def resolve_models(patterns: DataFrame, model_map: DataFrame) -> DataFrame:
-    """C1 over every table of every pattern, as a broadcast hash join:
-    explode (pattern_id, tname), explode candidate keys (position =
-    priority), join against the pre-exploded model map, keep the best match
-    per (pattern_id, tname) via a row_number window.
+    """C1 over every distinct non-empty table of every pattern.
+
+    The best model per ``table_key`` is chosen on the driver (lowest
+    ``match_rank``, then smallest ``model_name``) and enters the plan as
+    one map literal; each table takes the first candidate key that hits
+    it (exact > bare > schema.table). Building the frame starts no Spark
+    job when ``model_map`` is a local relation. Spark scans a map
+    literal's keys linearly, so this beats a broadcast join up to ~10³
+    models (SCALE.md, Joins).
 
     Returns (pattern_id, tname, model_name) with model_name NULL when the
-    table resolves to nothing (left join keeps unmapped tables visible for
-    C4). This is the one resolved relation every coverage and
-    recommendation report reads."""
-    tabs = patterns.select(
-        "pattern_id", F.explode("tables_accessed").alias("tname")
-    ).where(F.col("tname") != "")
-    cands = tabs.select(
-        "pattern_id",
-        "tname",
-        F.posexplode(_candidate_keys(F.col("tname"))).alias("cand_rank", "cand_key"),
-    )
-    joined = cands.join(
-        F.broadcast(model_map), cands.cand_key == model_map.table_key, "left"
-    )
-    w = Window.partitionBy("pattern_id", "tname").orderBy(
-        F.col("model_name").isNull().cast("int"),  # any match beats no match
-        "cand_rank",
-        "match_rank",
-        "model_name",
-    )
+    table resolves to nothing (unmapped tables stay visible for C4). This
+    is the one resolved relation every coverage and recommendation report
+    reads."""
+    lookup = _json_literal(_best_model_per_key(model_map), "map<string,string>")
+    tname = F.col("tname")
     return (
-        joined.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") == 1)
-        .select("pattern_id", "tname", "model_name")
+        patterns.select(
+            "pattern_id",
+            F.explode(F.array_distinct("tables_accessed")).alias("tname"),
+        )
+        .where(tname != "")
+        .select(
+            "pattern_id",
+            "tname",
+            F.coalesce(*[lookup[k] for k in _candidate_keys(tname)]).alias(
+                "model_name"
+            ),
+        )
     )
 
 
@@ -95,21 +117,35 @@ def used_models(resolved: DataFrame) -> DataFrame:
     )
 
 
+def _source_names(sources: DataFrame) -> list[str]:
+    """Every lowercased ``physical_table`` and every suffix of it that
+    starts right after a ``.``: exactly the table names C5 counts as
+    covered. Spark does the lowercasing, so it matches ``F.lower`` on the
+    executor side."""
+    names: set[str] = set()
+    for (phys,) in sources.select(F.lower("physical_table")).collect():
+        if phys is not None:
+            names.add(phys)
+            names.update(phys[i + 1:] for i, c in enumerate(phys) if c == ".")
+    return sorted(names)
+
+
 def uncovered_tables(resolved: DataFrame, sources: DataFrame) -> DataFrame:
-    """C4 anti-join + C5 suffix theta-join: tables resolving to no model AND
+    """C4 anti-join + C5 suffix match: tables resolving to no model AND
     matching no declared dbt source (utils/models.py:344-354).
 
-    The source match is the reference's ``physical == t OR
-    physical endswith '.'+t`` (utils/models.py:346-351) — a non-equi
-    condition, executed as a broadcast nested-loop against the tiny sources
-    dim (bounded: |tables| × |sources| with |sources| ≈ dozens)."""
-    unmapped = resolved.where(F.col("model_name").isNull()).select("tname").distinct()
-    low_p = F.lower(sources.physical_table)
-    low_t = F.lower(unmapped.tname)
-    src_match = (low_p == low_t) | low_p.endswith(F.concat(F.lit("."), low_t))
+    The source match is the reference's ``physical == t OR physical
+    endswith '.'+t`` (utils/models.py:346-351). That holds exactly when
+    ``lower(t)`` is in ``_source_names``, so the test is one
+    ``array_contains`` against a driver-built literal: no nested-loop
+    join, and no Spark job to build it when ``sources`` is a local
+    relation."""
+    covered = _json_literal(_source_names(sources), "array<string>")
     return (
-        unmapped.join(F.broadcast(sources), src_match, "left_anti")
+        resolved.where(F.col("model_name").isNull())
         .select("tname")
+        .distinct()
+        .where(~F.array_contains(covered, F.lower("tname")))
         .orderBy("tname")
     )
 
@@ -174,17 +210,18 @@ def unused_models(model_map: DataFrame, used: DataFrame) -> DataFrame:
 
 
 def coverage_metrics(model_map: DataFrame, used: DataFrame) -> DataFrame:
-    """D6: one-row coverage summary (utils/models.py:356-368)."""
-    all_models = model_map.select("model_name").distinct()
-    totals = all_models.agg(F.count("*").alias("total_models"))
-    used_ct = used.agg(F.count("*").alias("used_models"))
-    return (
-        totals.crossJoin(used_ct)
-        .withColumn(
-            "coverage_pct",
-            F.when(F.col("total_models") > 0,
-                   F.col("used_models") * 100.0 / F.col("total_models"))
-            .otherwise(F.lit(0.0)),
-        )
-        .withColumn("unused_models", F.col("total_models") - F.col("used_models"))
+    """D6: one-row coverage summary (utils/models.py:356-368). The model
+    count comes from the driver-held dim; only the used count is a Spark
+    aggregate."""
+    total = len({m for (m,) in model_map.select("model_name").collect()})
+    used_ct = F.col("used_models")
+    return used.agg(F.count("*").alias("used_models")).select(
+        F.lit(total).cast("long").alias("total_models"),
+        used_ct,
+        (
+            F.when(F.lit(total) > 0, used_ct * 100.0 / F.lit(total))
+            .otherwise(F.lit(0.0))
+            .alias("coverage_pct")
+        ),
+        (F.lit(total) - used_ct).alias("unused_models"),
     )

@@ -11,30 +11,75 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
+
+from querysight_spark.sources.dbt_catalog import local_frame
 
 SLOW_MS = 1000.0  # querysight.py:107,147-149
 MEDIUM_MS = 100.0
 
 
+SUMMARY_SCHEMA = StructType(
+    [
+        StructField("total_queries", LongType(), False),
+        StructField("distinct_users", LongType(), False),
+        StructField("slow", LongType(), True),
+        StructField("medium", LongType(), True),
+        StructField("fast", LongType(), True),
+    ]
+)
+
+
+def _summary_columns(distinct_users: Column) -> list[Column]:
+    """The D4/D5 aggregates, with the distinct-user count passed in:
+    observed metrics reject DISTINCT aggregates."""
+    dur = F.col("query_duration_ms")
+    return [
+        F.count(F.lit(1)).alias("total_queries"),
+        distinct_users.alias("distinct_users"),
+        F.sum(F.when(dur > SLOW_MS, 1).otherwise(0)).alias("slow"),
+        F.sum(F.when((dur > MEDIUM_MS) & (dur <= SLOW_MS), 1).otherwise(0)).alias(
+            "medium"
+        ),
+        F.sum(F.when(dur <= MEDIUM_MS, 1).otherwise(0)).alias("fast"),
+    ]
+
+
 def summary_stats(logs: DataFrame) -> DataFrame:
     """D4/D5: one-row global summary with speed buckets
     (querysight.py:139-163)."""
-    return logs.agg(
-        F.count(F.lit(1)).alias("total_queries"),
-        F.countDistinct("user").alias("distinct_users"),
-        F.sum(F.when(F.col("query_duration_ms") > SLOW_MS, 1).otherwise(0)).alias("slow"),
-        F.sum(
-            F.when(
-                (F.col("query_duration_ms") > MEDIUM_MS)
-                & (F.col("query_duration_ms") <= SLOW_MS),
-                1,
-            ).otherwise(0)
-        ).alias("medium"),
-        F.sum(F.when(F.col("query_duration_ms") <= MEDIUM_MS, 1).otherwise(0)).alias("fast"),
-    )
+    return logs.agg(*_summary_columns(F.countDistinct("user")))
+
+
+def observe_summary(logs: DataFrame) -> tuple[DataFrame, Observation]:
+    """``logs`` carrying ``summary_stats``' aggregates as observed
+    metrics: the first action over a plan built on the returned frame
+    computes them on its own scan, and ``observed_summary`` reads them.
+    The distinct users are a ``collect_set``, so the driver receives the
+    set of distinct user names."""
+    obs = Observation()
+    users = F.size(F.collect_set("user")).cast("long")
+    return logs.observe(obs, *_summary_columns(users)), obs
+
+
+def observed_summary(spark: SparkSession, obs: Observation) -> DataFrame:
+    """``summary_stats``' one-row frame from an observation whose action
+    has finished, as a local relation: reading it starts no job.
+
+    AQE drops a query stage that produced no rows from the final plan,
+    and its observed metrics with it, so a metrics row with no fields
+    means the observed scan saw no rows: the summary of an empty log.
+    ``Observation.get`` fails on such a row, hence the look at the JVM
+    row first."""
+    if obs._jo.getRow().length() == 0:
+        row = (0, 0, None, None, None)
+    else:
+        got = obs.get
+        row = tuple(got[name] for name in SUMMARY_SCHEMA.fieldNames())
+    return local_frame(spark, [row], SUMMARY_SCHEMA)
 
 
 def pattern_summary(patterns: DataFrame) -> DataFrame:

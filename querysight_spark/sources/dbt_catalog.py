@@ -1,4 +1,4 @@
-"""A8/A9 — dbt project catalog loaders → broadcast dimension DataFrames.
+"""A8/A9 — dbt project catalog loaders → small dimension DataFrames.
 
 Re-implements the reference's DBTModelMapper / DBTProjectAnalyzer readers
 (/root/reference/utils/dbt_mapper.py:41-261, utils/dbt_analyzer.py:202-230):
@@ -7,15 +7,17 @@ declarations, ``**/*.sql`` model files, and the regex dependency scan over
 ``ref()``/``source()`` macros.
 
 These are driver-side parses by design: a dbt project is a few thousand tiny
-files — a dimension, not a fact table. The output DataFrames are built with
-``spark.createDataFrame`` and joined with explicit ``broadcast()`` hints, so
-even at 100 TB of log data the catalog never shuffles.
+files — a dimension, not a fact table. The output DataFrames are local
+relations (``local_frame``), so the coverage plans collect them without a
+Spark job and fold them into the plan as literals: even at 100 TB of log
+data the catalog never shuffles.
 
 Lookup-key semantics (C1): the reference registers each model under several
 keys and resolves a table ref by trying exact key → bare name → schema.table
 (utils/dbt_mapper.py:263-300). We pre-explode the keys with a ``match_rank``
-(lower wins) so resolution is a single broadcast hash join + min-rank window
-instead of a per-row Python fallback chain.
+(lower wins), so resolution is one driver-side pick of the best model per
+key plus a map lookup per table (``plans.coverage.resolve_models``) instead
+of a per-row Python fallback chain.
 """
 
 from __future__ import annotations

@@ -2169,6 +2169,7 @@ def read_version(
     prune: tuple | None = None,
     apply_dvs: bool = True,
     keys_in: tuple | None = None,
+    schema=None,
 ) -> DataFrame:
     """Scan the table as of ``version`` (default: latest). Plans directly
     from the manifest's file list — no directory listing, and an empty
@@ -2201,7 +2202,11 @@ def read_version(
     instead of the whole snapshot (zone ranges all overlap there);
     composes with ``prune``. Values are a driver-side list — the
     bounded point-lookup shape; for a large distributed key set use
-    the merge-style planning (``_touched_by_keys``) instead."""
+    the merge-style planning (``_touched_by_keys``) instead.
+
+    ``schema`` is the files' schema when the caller already holds it
+    (e.g. it wrote them from a frame it still has): planning then skips
+    Spark's schema-inference job. A manifest-recorded schema wins."""
     if version is None:
         version = table_version(root)
     # LAZY: the scan plans from files/dvs/fv/dvv + schema alone; the
@@ -2230,11 +2235,12 @@ def read_version(
         kept, _skipped = key_membership_pruned(
             root, version, k_col, list(k_vals), candidates=kept
         )
-    sch = _schema_of(manifest)
+    sch = _schema_of(manifest) or schema
     reader = spark.read
     if sch is not None:
-        # evolved table: plan with the manifest-recorded schema so
-        # pre-evolution files backfill the added columns as NULL
+        # a known schema skips inference; on an evolved table the
+        # manifest-recorded one makes pre-evolution files backfill the
+        # added columns as NULL
         reader = reader.schema(sch)
     elif merge_schema:
         reader = reader.option("mergeSchema", "true")

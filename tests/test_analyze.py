@@ -3,6 +3,7 @@ snapshot-cache warm starts, TTL expiry, JSON export — the §3.1 lifecycle."""
 
 from __future__ import annotations
 
+import datetime as dt
 import json
 import os
 
@@ -158,3 +159,135 @@ def test_connection_probe_and_level_keys(spark):
     k2 = level_key("level2", "win", schema_fingerprint="v2")
     assert k1 != k2 and k1.split("_")[1] == k2.split("_")[1]  # same params, new schema prefix
     assert len(level_key("x")) == 64  # bare sha256
+
+
+def _new_jobs(spark, build):
+    """(build(), ids of the Spark jobs it started)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup())
+    out = build()
+    return out, set(tracker.getJobIdsForGroup()) - before
+
+
+@pytest.fixture(scope="module")
+def local_dims(spark):
+    """The test dims as local relations, the way catalog_frames builds a
+    parsed project's: collecting them starts no Spark job."""
+    from querysight_spark.sources.dbt_catalog import DbtCatalog, catalog_frames
+
+    cat = DbtCatalog(
+        models=[
+            {"name": "stg_orders", "schema": "main", "materialized": "table"},
+            {"name": "daily_sales", "schema": "analytics", "materialized": "table"},
+            {"name": "mart_unused", "schema": "main", "materialized": "table"},
+        ],
+        sources=[("raw.events", "staging.raw_events")],
+        edges=[("daily_sales", "stg_orders"), ("stg_orders", "raw_base")],
+    )
+    return catalog_frames(spark, cat)
+
+
+def test_run_analysis_job_budget(spark, query_log, local_dims):
+    """At level optimization the only jobs are the pattern checkpoint's;
+    the summary, the resolve and the coverage reports start none."""
+    from querysight_spark.plans.coverage import (
+        coverage_metrics,
+        resolve_models,
+        uncovered_tables,
+        used_models,
+    )
+    from querysight_spark.plans.patterns import aggregate_patterns
+
+    model_map, sources, edges = local_dims
+    _, checkpoint_jobs = _new_jobs(
+        spark,
+        lambda: aggregate_patterns(query_log, min_frequency=1, sort=False)
+        .localCheckpoint(),
+    )
+    res, jobs = _new_jobs(
+        spark,
+        lambda: run_analysis(
+            spark, query_log, model_map, sources, edges,
+            level="optimization", min_frequency=1,
+        ),
+    )
+    assert checkpoint_jobs and len(jobs) == len(checkpoint_jobs)
+    summary, jobs = _new_jobs(spark, res.summary.first)
+    assert jobs == set() and summary.total_queries == 6
+
+    def build():
+        resolved = resolve_models(res.patterns, model_map)
+        uncovered_tables(resolved, sources)
+        coverage_metrics(model_map, used_models(resolved))
+
+    _, jobs = _new_jobs(spark, build)
+    assert jobs == set()
+
+
+def _log_with_nulls(spark, query_log):
+    extra = spark.createDataFrame(
+        [
+            ("n1", "SELECT 1", "select ?", "SELECT", None, dt.datetime(2024, 1, 7),
+             2000.0, 0, 0, 1, 1, 16, "", [], [], []),
+            ("n2", "SELECT 1", "select ?", "SELECT", "dave", dt.datetime(2024, 1, 7),
+             None, 0, 0, 1, 1, 16, "", [], [], []),
+            ("n3", "SELECT 2", "select ?", "SELECT", None, dt.datetime(2024, 1, 8),
+             None, 0, 0, 1, 1, 16, "", [], [], []),
+        ],
+        schema=query_log.schema,
+    )
+    return query_log.unionByName(extra)
+
+
+@pytest.mark.parametrize(
+    "case", ["fixture", "empty_window", "null_user_and_duration", "sample"]
+)
+def test_observed_summary_matches_summary_stats(spark, query_log, local_dims, case):
+    from querysight_spark.plans.report import summary_stats
+
+    logs, kw = query_log, {}
+    if case == "empty_window":
+        kw["start_time"] = dt.datetime(2030, 1, 1)
+    elif case == "null_user_and_duration":
+        logs = _log_with_nulls(spark, query_log)
+    elif case == "sample":
+        kw["sample_fraction"] = 0.5
+    res = run_analysis(
+        spark, logs, local_dims[0], level="dbt_integration", min_frequency=1, **kw
+    )
+    observed, jobs = _new_jobs(spark, res.summary.collect)
+    assert jobs == set()  # the observed row, not a second scan
+    assert res.summary.schema == summary_stats(res.logs).schema
+    assert observed == summary_stats(res.logs).collect()
+    if case == "empty_window":
+        assert observed[0].total_queries == 0 and observed[0].slow is None
+    if case == "null_user_and_duration":
+        assert observed[0].total_queries == 9 and observed[0].distinct_users == 5
+    if case == "fixture":
+        assert observed[0].asDict() == dict(
+            total_queries=6, distinct_users=4, slow=3, medium=1, fast=2
+        )
+    assert_impact_order(res.patterns)
+
+
+def assert_impact_order(patterns):
+    """res.patterns keeps the E1 impact order over the unsorted checkpoint."""
+    rows = patterns.collect()
+    impact = [(-(p.frequency * p.avg_duration_ms), p.pattern_id) for p in rows]
+    assert impact == sorted(impact)
+    return rows
+
+
+def test_summary_after_pattern_cache_hit(spark, query_log, local_dims, tmp_path):
+    """A level-2 snapshot hit skips the pattern scan, so the summary is
+    summary_stats over the (cached) log and matches the cold run's."""
+    cache = SnapshotCache(str(tmp_path / "snap"))
+    kw = dict(level="dbt_integration", min_frequency=1, cache=cache, now=1000.0)
+    cold = run_analysis(spark, query_log, local_dims[0], **kw)
+    cold_summary = cold.summary.collect()
+    warm = run_analysis(spark, query_log, local_dims[0], **kw)
+    assert any(h.startswith("pattern_analysis/") for h in warm.cache_hits)
+    warm_summary, jobs = _new_jobs(spark, warm.summary.collect)
+    assert jobs  # summary_stats scans the cached log
+    assert warm_summary == cold_summary
+    assert len(assert_impact_order(warm.patterns)) == 4

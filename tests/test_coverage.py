@@ -130,3 +130,72 @@ def test_coverage_metrics(spark, model_map, resolved):
     m = coverage_metrics(model_map, used).collect()[0]
     assert m.total_models == 3 and m.used_models == 3
     assert m.coverage_pct == 100.0 and m.unused_models == 0
+
+
+def _resolve_map(spark, tables, map_rows):
+    pats = spark.createDataFrame(
+        [("p", tables)], "pattern_id string, tables_accessed array<string>"
+    )
+    mm = spark.createDataFrame(map_rows, schema=DBT_MODEL_MAP_SCHEMA)
+    return resolve_models(pats, mm)
+
+
+def test_resolve_models_ties_and_candidate_priority(spark):
+    rows = [
+        # equal match_rank on one key: the smaller model_name wins
+        ("shared", "zeta", None, None, 0),
+        ("shared", "alpha", None, None, 0),
+        # a.b.c: the exact key wins even with a worse match_rank
+        ("a.b.c", "m_exact", None, None, 5),
+        ("c", "m_bare", None, None, 0),
+        ("b.c", "m_schema_table", None, None, 0),
+        # y.w: only the schema.table key exists
+        ("y.w", "m_yw", None, None, 1),
+    ]
+    tables = ["shared", "A.B.C", "q.b.c", "z.y.w", "nothing.here"]
+    got = {r.tname: r.model_name for r in _resolve_map(spark, tables, rows).collect()}
+    assert got == {
+        "shared": "alpha",
+        "A.B.C": "m_exact",
+        "q.b.c": "m_bare",  # bare beats schema.table
+        "z.y.w": "m_yw",
+        "nothing.here": None,
+    }
+
+
+def test_resolve_models_degenerate_table_names(spark):
+    rows = [("a", "m_a", None, None, 0), ("b", "m_b", None, None, 0)]
+    tables = ["a.", ".b", "A.B.C", "", None, "a", "a", ".b"]
+    got = sorted(
+        (r.tname, r.model_name) for r in _resolve_map(spark, tables, rows).collect()
+    )
+    # '' and NULL are dropped, duplicates resolve once; 'a.' has the
+    # candidates 'a.', '' and 'a.', none of which is a key
+    assert got == [(".b", "m_b"), ("A.B.C", None), ("a", "m_a"), ("a.", None)]
+
+
+def test_resolve_and_uncovered_with_empty_dims(spark):
+    model_map, sources, _ = catalog_frames(spark, DbtCatalog())
+    pats = spark.createDataFrame(
+        [("p1", ["b.t", "a"]), ("p2", ["a"])], ["pattern_id", "tables_accessed"]
+    )
+    resolved = resolve_models(pats, model_map)
+    assert {r.model_name for r in resolved.collect()} == {None}
+    assert [r.tname for r in uncovered_tables(resolved, sources).collect()] == [
+        "a", "b.t",
+    ]
+    m = coverage_metrics(model_map, used_models(resolved)).first()
+    assert (m.total_models, m.used_models, m.coverage_pct, m.unused_models) == (
+        0, 0, 0.0, 0,
+    )
+
+
+def test_uncovered_tables_dot_boundary_suffix_rule(spark):
+    model_map, sources, _ = catalog_frames(
+        spark, DbtCatalog(sources=[("src.z", "x.y.z")])
+    )
+    tables = ["z", "y.z", "x.y.z", "Y.Z", ".z", "w.z"]
+    pats = spark.createDataFrame([("p", tables)], ["pattern_id", "tables_accessed"])
+    out = [r.tname for r in uncovered_tables(resolve_models(pats, model_map), sources)
+           .collect()]
+    assert out == [".z", "w.z"]
