@@ -162,8 +162,11 @@ def run_analysis(
             sample_fraction=sample_fraction,
         ),
     )
-    res.summary = summary_stats(res.logs)
+    # the summary is built where it is returned: below dbt_integration and
+    # on a level-2 cache hit it is summary_stats(res.logs); from level 3 on
+    # it is observed on the pattern build's scan
     if target < 1:
+        res.summary = summary_stats(res.logs)
         return res
 
     # Level 2 — pattern analysis (querysight.py:561-585). From level 3 on
@@ -184,6 +187,7 @@ def run_analysis(
 
     patterns = _cached("pattern_analysis", l2_key, _build_patterns)
     if target < 2:
+        res.summary = summary_stats(res.logs)
         res.patterns = sort_patterns(patterns, by="impact")
         return res
 
@@ -201,8 +205,11 @@ def run_analysis(
     # E1 sort, which res.patterns applies lazily and paginate/sort_patterns
     # sorts replace
     checkpoint = patterns.localCheckpoint()
-    if summary_obs is not None:
-        res.summary = observed_summary(spark, summary_obs)
+    res.summary = (
+        summary_stats(res.logs)
+        if summary_obs is None  # level-2 cache hit: the build did not run
+        else observed_summary(spark, summary_obs)
+    )
     res.patterns = sort_patterns(checkpoint, by="impact")
     resolved = resolve_models(checkpoint, model_map)
     res.patterns_enriched = patterns_with_models(checkpoint, resolved)

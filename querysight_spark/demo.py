@@ -78,7 +78,7 @@ def build_model_map(spark: SparkSession) -> DataFrame:
         for db in range(3):
             rows.append((f"db{db}.t{i}", f"model_{i}", f"db{db}", "table", 1))
     from querysight_spark.schemas import DBT_MODEL_MAP_SCHEMA
-    from querysight_spark.sources.dbt_catalog import local_frame
+    from querysight_spark.sources.catalog import local_frame
 
     return local_frame(spark, rows, DBT_MODEL_MAP_SCHEMA)
 
@@ -87,7 +87,7 @@ def build_sources_dim(spark: SparkSession) -> DataFrame:
     """dbt sources analog: t8/t9 are declared sources (matched by the C5
     suffix rule), t10/t11 stay truly uncovered."""
     from querysight_spark.schemas import DBT_SOURCES_SCHEMA
-    from querysight_spark.sources.dbt_catalog import local_frame
+    from querysight_spark.sources.catalog import local_frame
 
     rows = [
         ("raw.t8", "warehouse.db0.t8"),
@@ -103,7 +103,7 @@ def build_sources_dim(spark: SparkSession) -> DataFrame:
 def build_edges(spark: SparkSession) -> DataFrame:
     """dbt DAG analog: model_i depends on model_{i-1} (chain of depth 8)."""
     from querysight_spark.schemas import DBT_EDGES_SCHEMA
-    from querysight_spark.sources.dbt_catalog import local_frame
+    from querysight_spark.sources.catalog import local_frame
 
     rows = [(f"model_{i}", f"model_{i - 1}") for i in range(1, 8)]
     return local_frame(spark, rows, DBT_EDGES_SCHEMA)

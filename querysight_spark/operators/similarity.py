@@ -15,13 +15,48 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
 from querysight_spark.operators.vectors import as_double as _as_double
+from querysight_spark.operators.vectors import cosine_vs_column as _cosine_vs_column
 from querysight_spark.operators.vectors import cosine_vs_query as _cosine_vs_query
 from querysight_spark.operators.vectors import dot as _dot_dim
+from querysight_spark.sources.catalog import local_frame
+
+_DOUBLES = ArrayType(DoubleType(), False)
+# per-probe rows that make a probe plan the same for every query: the
+# values arrive as data of a broadcast local relation, not as literals
+_QUERY_ROW = StructType(
+    [StructField("_q", _DOUBLES, False), StructField("_qn", DoubleType(), False)]
+)
+_PQ_LUT = StructType(
+    [
+        StructField("ld", _DOUBLES, False),
+        StructField("ls", _DOUBLES, False),
+        StructField("qn", DoubleType(), False),
+    ]
+)
+_IVFPQ_LUT = StructType(
+    [
+        StructField("list_id", IntegerType(), False),
+        StructField("qc", DoubleType(), False),
+        StructField("cc", DoubleType(), False),
+        StructField("ld", _DOUBLES, False),
+        StructField("lcd", _DOUBLES, False),
+        StructField("lsq", _DOUBLES, False),
+        StructField("qn", DoubleType(), False),
+    ]
+)
+_NODE_ROW = StructType([StructField("node", LongType(), False)])
 
 
 def _dot(a, b, dim=None):
@@ -35,17 +70,25 @@ def brute_force_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Exact cosine top-k against a literal query vector. Cosine is rounded
-    to 6 digits BEFORE ranking (with id tie-break) so the top-k frontier is
-    stable across engines/partitionings."""
+    """Exact cosine top-k of ``query_vec``. Cosine is rounded to 6 digits
+    BEFORE ranking (with id tie-break) so the top-k frontier is stable
+    across engines/partitionings.
+
+    The query vector and its norm ride ONE broadcast local row
+    (``local_frame``: no RDD, so no Python-worker job to broadcast it)
+    and the score is one parsed expression over those columns
+    (``vectors.cosine_vs_column``): the plan is the same for every
+    query, so a new query re-uses the compiled codegen classes, where
+    the query's values as literals compile new ones per query. Same
+    multiplication and addition order and the same ``round(…, 6)`` as
+    the literal form (``vectors.cosine_vs_query``), so scores are
+    bit-identical. This is the rerank every ``*_rerank`` path ends in."""
     q = [float(x) for x in query_vec]
     qn = float(np.sqrt(sum(x * x for x in q)))
-    # r14: the scoring column is two parsed SQL strings instead of ~4
-    # py4j calls per dimension (see vectors.dot_query_sql) — identical
-    # expression after constant folding, ~1 s less driver latency per
-    # probe plan at dim 64
-    scored = df.select(
-        F.col(id_col), _cosine_vs_query(vec_col, q, qn).alias("cosine")
+    qrow = local_frame(df.sparkSession, [(q, qn)], _QUERY_ROW)
+    scored = df.crossJoin(F.broadcast(qrow)).select(
+        F.col(id_col),
+        _cosine_vs_column(vec_col, "_q", "_qn", len(q)).alias("cosine"),
     )
     return scored.orderBy(F.col("cosine").desc(), F.col(id_col)).limit(k)
 
@@ -394,14 +437,18 @@ def pq_topk(
 ) -> DataFrame:
     """Asymmetric-distance top-k over PQ codes. The query side of every
     possible centroid dot product is a tiny ``m × k`` lookup table computed
-    on the driver and shipped as a BROADCAST one-row table (two flat
-    ``m·k`` arrays); per row the approximate cosine is
-    ``Σ_s ld[s·k + code_s] / (sqrt(Σ_s ls[s·k + code_s])·‖q‖)`` folded with
-    ``aggregate`` — all JVM, no Python and no shuffle in the probe path,
-    finishing in ``TakeOrderedAndProject``. The earlier form inlined the
-    LUTs as ~4k literal constants, which cost ~9 s of codegen compilation
-    per distinct query vector; a broadcast column compiles in milliseconds
-    with identical fold order (bit-identical results)."""
+    on the driver and shipped as a BROADCAST one-row local relation (two
+    flat ``m·k`` arrays plus ``qn`` = ‖q‖); per row the approximate cosine
+    is ``Σ_s ld[s·k + code_s] / (sqrt(Σ_s ls[s·k + code_s])·qn)``, an
+    unrolled codegen fold (``_adc_sum``) — all JVM, no Python and no
+    shuffle in the probe path, finishing in ``TakeOrderedAndProject``.
+
+    No query value is a literal of the plan, so the plan and its
+    compiled codegen classes are the same for every query: LUT values
+    as literals cost ~9 s of codegen per query vector, and ``qn`` alone
+    as a literal still compiled a few classes per probe. The LUT is a
+    ``local_frame`` (Arrow → LocalRelation), so its broadcast runs no
+    Python-worker job as an RDD-backed ``createDataFrame(list)`` does."""
     q = np.array([float(x) for x in query_vec], dtype=np.float64)
     books = [np.array(b, dtype=np.float64) for b in codebooks]
     dsub = books[0].shape[1]
@@ -412,17 +459,15 @@ def pq_topk(
         [C @ q[s * dsub : (s + 1) * dsub] for s, C in enumerate(books)]
     )
     ls = np.concatenate([(C * C).sum(axis=1) for C in books])
-    spark = codes_df.sparkSession
-    lut = spark.createDataFrame(
-        [([float(x) for x in ld], [float(x) for x in ls])],
-        "ld array<double>, ls array<double>",
+    lut = local_frame(
+        codes_df.sparkSession, [(ld.tolist(), ls.tolist(), qn)], _PQ_LUT
     )
 
     scored = codes_df.crossJoin(F.broadcast(lut)).select(
         F.col(id_col),
         F.round(
             _adc_sum("ld", kk, m)
-            / (F.sqrt(_adc_sum("ls", kk, m)) * F.lit(qn)),
+            / (F.sqrt(_adc_sum("ls", kk, m)) * F.col("qn")),
             6,
         ).alias("cosine"),
     )
@@ -433,6 +478,47 @@ def pq_topk(
 # larger shortlists (the exact-mode corpus-sized gate construct) keep the
 # broadcast join, whose build side Spark caps at 8 GB anyway
 _RERANK_ISIN_MAX = 1024
+
+
+def _in_filter(col: str, values: list) -> Column:
+    """``col IN (values)`` as ONE parsed expression: ``Column.isin``
+    makes one py4j ``lit`` call per value (~65 ms for 100 ids). Ints and
+    strings are written as SQL literals (strings backslash-escaped, the
+    default string-literal syntax); any other id type falls back to
+    ``isin``. An empty list is a constant-false filter, which the
+    optimizer prunes to an empty relation. Either way the optimizer
+    turns a long list into ``InSet``, and both reach a parquet scan as
+    ``PushedFilters: [In(…)]``."""
+    if not values:
+        return F.lit(False)
+    if all(isinstance(v, int) and not isinstance(v, bool) for v in values):
+        lits = [str(v) for v in values]
+    elif all(isinstance(v, str) for v in values):
+        lits = [
+            "'" + v.replace("\\", "\\\\").replace("'", "\\'") + "'"
+            for v in values
+        ]
+    else:
+        return F.col(col).isin(values)
+    name = col.replace("`", "``")
+    return F.expr(f"`{name}` IN ({', '.join(lits)})")
+
+
+def _in_array(col: str, values: list[int]) -> Column:
+    """``array_contains(array(values), col)``: membership in ONE array
+    literal, which codegen references as an object instead of inlining
+    each value as ``In`` does. The join on ``col`` copies the filter to
+    the other side, and over a local relation the optimizer compiles that
+    copy into a predicate, so with ``In`` each new set of values compiled
+    a new class. It still prunes partitions on a partition column, but a
+    parquet scan cannot push it down as a row-group filter (use
+    ``_in_filter`` for that)."""
+    if not values:
+        return F.lit(False)
+    return F.expr(
+        f"array_contains(array({', '.join(str(int(v)) for v in values)}), "
+        f"`{col}`)"
+    )
 
 
 def _rerank_candidates(
@@ -449,10 +535,18 @@ def _rerank_candidates(
     either way as the broadcast build) and applied as an In filter,
     which reaches the parquet scan as PushedFilters and prunes row
     groups by statistics. Same candidate set, same rerank result; the
-    corpus-sized exact-mode shortlists keep the broadcast join."""
+    corpus-sized exact-mode shortlists keep the broadcast join.
+
+    The ids are applied as one parsed ``id IN (…)`` (``_in_filter``),
+    one parse instead of a py4j call per id; an empty shortlist gives an
+    empty frame, and string ids are quoted. The ids are the only
+    per-query literals of the rerank: for long and string ids ``InSet``
+    holds them in a referenced hash set, so its compiled code is shared
+    across probes, while for int ids (up to 400 values) it compiles a
+    ``switch`` on the values, i.e. new classes per shortlist."""
     if n_short <= _RERANK_ISIN_MAX:
         ids = [r[0] for r in short.select(id_col).collect()]
-        return df.where(F.col(id_col).isin(ids))
+        return df.where(_in_filter(id_col, ids))
     return df.join(F.broadcast(short.select(id_col)), id_col)
 
 
@@ -784,7 +878,14 @@ def ivfpq_topk(
     blocks are orthogonal coordinates). The probe
     plan is scan(codes, list-pruned) → broadcast join → codegen fold →
     TakeOrderedAndProject: no Python, and with list-partitioned storage
-    the scan never opens unprobed lists."""
+    the scan never opens unprobed lists.
+
+    The LUT rows (one per probed list, ‖q‖ carried as the ``qn`` column)
+    are a ``local_frame`` LocalRelation, so broadcasting them starts no
+    Python-worker job, and the scoring plan holds no query value: a new
+    query re-uses the compiled codegen classes. The probed lists are
+    one array literal (``_in_array``), which prunes ``list_id=``
+    partitions like ``IN`` does."""
     q = np.array([float(x) for x in query_vec], dtype=np.float64)
     qn = float(np.linalg.norm(q))
     C = np.array(centroids, dtype=np.float64)
@@ -811,26 +912,23 @@ def ivfpq_topk(
                 lid,
                 float(q @ c),
                 float(c @ c),
-                [float(x) for x in ld],
-                [float(x) for x in lcd],
-                [float(x) for x in lsq],
+                ld.tolist(),
+                lcd.tolist(),
+                lsq.tolist(),
+                qn,
             )
         )
-    spark = codes_df.sparkSession
-    lut = spark.createDataFrame(
-        lut_rows,
-        "list_id int, qc double, cc double, "
-        "ld array<double>, lcd array<double>, lsq array<double>",
-    )
+    lut = local_frame(codes_df.sparkSession, lut_rows, _IVFPQ_LUT)
 
     # unrolled codegen-able ADC sums (see _adc_sum); the lcd fold feeds
     # both numerator and denominator, so it is computed ONCE in a prior
     # projection instead of twice per row (bit-identical: same value)
     scored = (
-        codes_df.where(F.col("list_id").isin(probe_ids))
+        codes_df.where(_in_array("list_id", probe_ids))
         .join(F.broadcast(lut), "list_id")
         .select(
             F.col(id_col),
+            F.col("qn"),
             F.col("qc"),
             F.col("cc"),
             _adc_sum("ld", kk, m).alias("_sld"),
@@ -842,7 +940,7 @@ def ivfpq_topk(
             F.round(
                 (F.col("qc") + F.col("_sld") + F.col("_slcd"))
                 / (
-                    F.lit(qn)
+                    F.col("qn")
                     * F.sqrt(
                         F.col("cc") + 2.0 * F.col("_slcd") + F.col("_slsq")
                     )
@@ -1785,7 +1883,7 @@ def probe_hnsw_index(
                 cur = best[0]
             else:
                 break
-    entry = spark.createDataFrame([(int(cur.node),)], "node long")
+    entry = local_frame(spark, [(int(cur.node),)], _NODE_ROW)
     adj0 = adj.where(F.col("layer") == 0).select("node", "nbr")
     return _graph_beam_topk(
         adj0, vecs, query_vec, k, beam_width, max_hops, entry, id_col

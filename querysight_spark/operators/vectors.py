@@ -27,6 +27,14 @@ def _elem_sql(vec_sql: str, i: int) -> str:
     return f"CAST(element_at(`{vec_sql}`, {i}) AS DOUBLE)"
 
 
+def _dot_sql(vec_sql: str, factors) -> str:
+    """``Σ_i vec[i] · factors[i]`` as one left-associated SQL sum, each
+    vector element cast to double (cast-then-index == index-then-cast)."""
+    return " + ".join(
+        f"({_elem_sql(vec_sql, i)} * {x})" for i, x in enumerate(factors, 1)
+    )
+
+
 def dot_query_sql(vec_sql: str, q: list[float]) -> str:
     """``vec · literal-query`` as ONE SQL string (r14, the _adc_sum
     precedent): building the unrolled chain with PySpark Column ops
@@ -34,14 +42,27 @@ def dot_query_sql(vec_sql: str, q: list[float]) -> str:
     measured ~1 s per brute_force_topk plan at dim 64 — while one parse
     of the equivalent string is milliseconds. Same left-associated
     addition order; ``repr(float)`` round-trips through Spark's double
-    literal ('…D' suffix) bit-exactly, and the old literal-array
-    ``element_at(array(lits), i)`` constant-folded to the same
-    per-element literals this writes directly. The element cast mirrors
-    the old ``as_double`` pre-projection (cast-then-index ==
-    index-then-cast), whose higher-order transform was also a
-    CodegenFallback node."""
-    return " + ".join(
-        f"({_elem_sql(vec_sql, i)} * {x!r}D)" for i, x in enumerate(q, 1)
+    literal ('…D' suffix) bit-exactly.
+
+    The query's values are literals of the plan, so every new query
+    vector compiles new codegen classes. ``brute_force_topk`` and so
+    every PQ/IVF-PQ rerank read the query as data instead
+    (``dot_column_sql``). The literal form stays where the data form
+    buys nothing: the LSH probes (their median stayed ≈350 ms with the
+    column form: the query row's broadcast job costs about what the
+    compile saves), the graph-beam scorer (a query row would add one
+    broadcast per hop), ``ivf_topk`` and ``grouped_topk``."""
+    return _dot_sql(vec_sql, (f"{x!r}D" for x in q))
+
+
+def dot_column_sql(vec_sql: str, q_sql: str, dim: int) -> str:
+    """``vec · q`` with ``q`` an ``array<double>`` COLUMN (typically
+    carried by a broadcast one-row local relation): the plan text is the
+    same for every query vector, so a new query re-uses the compiled
+    codegen classes. Same left-associated order and the same double
+    products as ``dot_query_sql``, so scores are bit-identical."""
+    return _dot_sql(
+        vec_sql, (f"element_at(`{q_sql}`, {i})" for i in range(1, dim + 1))
     )
 
 
@@ -54,12 +75,26 @@ def dot_self_sql(vec_sql: str, dim: int) -> str:
 
 
 def cosine_vs_query(vec_sql: str, q: list[float], qn: float) -> Column:
-    """round(cosine(vec, q), 6) — the engine-portable scoring column every
-    literal-query ranker uses, built as two parsed SQL strings."""
+    """round(cosine(vec, q), 6) against a LITERAL query, built as two
+    parsed SQL strings. The literals stay for the callers listed in
+    ``dot_query_sql``; see ``cosine_vs_column`` for the query-as-data
+    form."""
     return F.round(
         F.expr(dot_query_sql(vec_sql, q))
         / (F.sqrt(F.expr(dot_self_sql(vec_sql, len(q)))) * F.lit(qn)),
         6,
+    )
+
+
+def cosine_vs_column(vec_sql: str, q_sql: str, qn_sql: str, dim: int) -> Column:
+    """round(cosine(vec, q), 6) with the query vector ``q_sql`` and its
+    norm ``qn_sql`` read from columns, as ONE parsed SQL string. The
+    expression tree is ``cosine_vs_query``'s with each literal replaced
+    by the column holding the same double, so the rounded scores are
+    bit-identical while the plan no longer depends on the query."""
+    return F.expr(
+        f"round(({dot_column_sql(vec_sql, q_sql, dim)}) / "
+        f"(sqrt({dot_self_sql(vec_sql, dim)}) * `{qn_sql}`), 6)"
     )
 
 

@@ -22,7 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from querysight_spark.schemas import DBT_EDGES_SCHEMA
-from querysight_spark.sources.dbt_catalog import local_frame
+from querysight_spark.sources.catalog import local_frame
 
 
 def _json_literal(value, ddl: str) -> Column:

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
 from pyspark.sql.window import Window
 
-from querysight_spark.sources.dbt_catalog import local_frame
+from querysight_spark.sources.catalog import local_frame
 
 SLOW_MS = 1000.0  # querysight.py:107,147-149
 MEDIUM_MS = 100.0

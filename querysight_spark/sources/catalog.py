@@ -23,6 +23,7 @@ import tempfile
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from querysight_spark.schemas import TESTDATA_TABLES
 
@@ -63,6 +64,18 @@ def read_parquet_known_schema(spark: SparkSession, path: str) -> DataFrame:
     except OSError:
         return spark.read.parquet(path)
     return spark.read.schema(_inferred_schema(spark, identity)).parquet(path)
+
+
+def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
+    """Driver-held rows as a LocalRelation, built through Arrow: collecting
+    or broadcasting it starts no Spark job, where ``createDataFrame(list)``
+    parallelizes the rows into an RDD that does. Empty ``rows`` skip Arrow
+    and come back RDD-backed (still typed)."""
+    import pandas as pd
+
+    return spark.createDataFrame(
+        pd.DataFrame(rows, columns=schema.fieldNames()), schema=schema
+    )
 
 
 _BUILT = "_fixture_ok"

@@ -8,9 +8,9 @@ declarations, ``**/*.sql`` model files, and the regex dependency scan over
 
 These are driver-side parses by design: a dbt project is a few thousand tiny
 files — a dimension, not a fact table. The output DataFrames are local
-relations (``local_frame``), so the coverage plans collect them without a
-Spark job and fold them into the plan as literals: even at 100 TB of log
-data the catalog never shuffles.
+relations (``sources.catalog.local_frame``), so the coverage plans collect
+them without a Spark job and fold them into the plan as literals: even at
+100 TB of log data the catalog never shuffles.
 
 Lookup-key semantics (C1): the reference registers each model under several
 keys and resolves a table ref by trying exact key → bare name → schema.table
@@ -29,13 +29,13 @@ from dataclasses import dataclass, field
 from glob import glob
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.types import StructType
 
 from querysight_spark.schemas import (
     DBT_EDGES_SCHEMA,
     DBT_MODEL_MAP_SCHEMA,
     DBT_SOURCES_SCHEMA,
 )
+from querysight_spark.sources.catalog import local_frame
 
 # {{ config(materialized='table', schema='x') }} (utils/dbt_analyzer.py:183-190)
 _CONFIG_BLOCK = re.compile(r"\{\{\s*config\s*\((.*?)\)\s*\}\}", re.S)
@@ -156,15 +156,3 @@ def catalog_frames(
     sources = local_frame(spark, cat.sources, DBT_SOURCES_SCHEMA)
     edges = local_frame(spark, cat.edges, DBT_EDGES_SCHEMA)
     return model_map, sources, edges
-
-
-def local_frame(spark: SparkSession, rows: list, schema: StructType) -> DataFrame:
-    """Driver-held rows as a LocalRelation, built through Arrow: collecting
-    or broadcasting it starts no Spark job, where ``createDataFrame(list)``
-    parallelizes the rows into an RDD that does. Empty ``rows`` skip Arrow
-    and come back RDD-backed (still typed)."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=schema.fieldNames()), schema=schema
-    )

@@ -892,6 +892,274 @@ def test_ann_recall_floor_on_clustered_fixture(spark):
     assert r_ivfpq >= 0.6, r_ivfpq
 
 
+# --- PQ / IVF-PQ production probes: numpy reference and plan invariants ---
+
+
+def _spark_round6(x: float) -> float:
+    """Spark's ``round(x, 6)`` on a double: HALF_UP on its decimal form."""
+    from decimal import ROUND_HALF_UP, Decimal
+
+    return float(
+        Decimal(repr(float(x))).quantize(Decimal("1e-6"), rounding=ROUND_HALF_UP)
+    )
+
+
+def _fold(lut, flat):
+    """``Σ_s lut[flat[:, s]]`` added left to right from 0.0 (the order of
+    similarity._adc_sum)."""
+    import numpy as np
+
+    acc = np.zeros(len(flat))
+    for s in range(flat.shape[1]):
+        acc = acc + lut[flat[:, s]]
+    return acc
+
+
+@pytest.fixture(scope="module")
+def ann_prod(spark, tmp_path_factory):
+    """The clustered fixture (long ids, the bench corpus's 2k x 64 shape)
+    as parquet, with a PQ and an IVF-PQ index built with the parameters of
+    the ``ss06_pq_probe_prod`` / ``ss09_ivfpq_probe_prod`` operating
+    points. Query vectors are perturbed corpus vectors."""
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    from querysight_spark.extension_queries import (
+        IVFPQ_INDEX_CENTROIDS,
+        PQ_INDEX_K,
+        PQ_INDEX_M,
+    )
+    from querysight_spark.operators.similarity import (
+        build_ivfpq_index,
+        build_pq_index,
+    )
+    from querysight_spark.testing import make_clustered_embeddings
+
+    root = tmp_path_factory.mktemp("ann_prod")
+    corpus = str(root / "corpus")
+    make_clustered_embeddings(spark, n=2000, dim=64).select(
+        F.col("vec_id").cast("long").alias("vec_id"), "embedding"
+    ).write.parquet(corpus)
+    vecs = spark.read.parquet(corpus)
+    paths = {"pq": str(root / "pq"), "ivfpq": str(root / "ivfpq")}
+    build_pq_index(vecs, paths["pq"], dim=64, m=PQ_INDEX_M, k=PQ_INDEX_K)
+    build_ivfpq_index(
+        vecs, paths["ivfpq"], dim=64, n_centroids=IVFPQ_INDEX_CENTROIDS,
+        m=PQ_INDEX_M, k=PQ_INDEX_K,
+    )
+    t = pq.read_table(corpus)
+    X = np.array(t.column("embedding").to_pylist(), dtype=np.float64)
+    rng = np.random.RandomState(7)
+    queries = [
+        (X[i] + 0.1 * rng.randn(X.shape[1])).tolist()
+        for i in rng.choice(len(X), 3, replace=False)
+    ]
+    return SimpleNamespace(
+        vecs=vecs, paths=paths, queries=queries, X=X,
+        ids=np.array(t.column("vec_id").to_pylist()),
+    )
+
+
+def _prod_probe(spark, ann_prod, family, q, rerank=True):
+    """The production probe of ``extension_queries._ann_bench_{pq,ivfpq}_probe``
+    against the fixture's index; ``rerank=False`` returns the ADC shortlist
+    the rerank starts from (k·oversample = 100 ids)."""
+    from querysight_spark.operators.similarity import (
+        probe_ivfpq_index,
+        probe_pq_index,
+    )
+
+    kw = {"k": 100}
+    if rerank:
+        kw = {"k": 10, "rerank_df": ann_prod.vecs, "oversample": 10}
+    if family == "pq":
+        return probe_pq_index(spark, ann_prod.paths["pq"], q, **kw)
+    return probe_ivfpq_index(spark, ann_prod.paths["ivfpq"], q, n_probes=8, **kw)
+
+
+def _adc_reference(path, family, q):
+    """(ids, unrounded ADC cosine) of every candidate the probe scores,
+    recomputed in numpy from the persisted index alone: the codebooks /
+    centroids JSON and the codes parquet read with pyarrow."""
+    import json
+
+    import numpy as np
+    import pyarrow.parquet as pq
+
+    q = np.array(q, dtype=np.float64)
+    qn = float(np.linalg.norm(q))
+    t = pq.read_table(path)
+    ids = np.array(t.column("vec_id").to_pylist())
+    codes = np.array(t.column("codes").to_pylist(), dtype=np.int64)
+    if family == "pq":
+        with open(path + "/_codebooks.json") as f:
+            books = [np.array(b) for b in json.load(f)]
+        lists, probes, C = np.zeros(len(ids), dtype=np.int64), [0], None
+    else:
+        with open(path + "/_ivfpq.json") as f:
+            meta = json.load(f)
+        books = [np.array(b) for b in meta["codebooks"]]
+        C = np.array(meta["centroids"])
+        lists = np.array([int(x) for x in t.column("list_id").to_pylist()])
+        probes = [int(i) for i in np.argsort(((q - C) ** 2).sum(axis=1))[:8]]
+    kk, dsub = books[0].shape
+    flat = codes + np.arange(len(books)) * kk
+    lsq = np.concatenate([(B * B).sum(axis=1) for B in books])
+    out_ids, out_s = [], []
+    for lid in probes:
+        rows = np.where(lists == lid)[0]
+        if family == "pq":
+            ld = np.concatenate(
+                [B @ q[s * dsub : (s + 1) * dsub] for s, B in enumerate(books)]
+            )
+            s = _fold(ld, flat[rows]) / (np.sqrt(_fold(lsq, flat[rows])) * qn)
+        else:
+            c = C[lid]
+            ld = np.concatenate(
+                [B @ (q - c)[s * dsub : (s + 1) * dsub] for s, B in enumerate(books)]
+            )
+            lcd = np.concatenate(
+                [B @ c[s * dsub : (s + 1) * dsub] for s, B in enumerate(books)]
+            )
+            sld, slcd = _fold(ld, flat[rows]), _fold(lcd, flat[rows])
+            s = (float(q @ c) + sld + slcd) / (
+                qn * np.sqrt(float(c @ c) + 2.0 * slcd + _fold(lsq, flat[rows]))
+            )
+        out_ids.extend(ids[rows].tolist())
+        out_s.extend(s.tolist())
+    return out_ids, out_s
+
+
+@pytest.mark.parametrize("family", ["pq", "ivfpq"])
+def test_production_probe_matches_numpy_reference(spark, ann_prod, family):
+    """The ss06/ss09 production probes (k=10, oversample=10; IVF-PQ
+    n_probes=8) on the clustered fixture, recomputed in numpy from the
+    persisted index: the ADC shortlist holds every id above the
+    k·oversample cut and none below it (1e-9 tie band) with the same
+    rounded cosines, and the top-10 equals the exact rerank of that
+    shortlist."""
+    import numpy as np
+
+    n_short = 100
+    pos = {int(v): i for i, v in enumerate(ann_prod.ids)}
+    for q in ann_prod.queries:
+        cand, raw = _adc_reference(ann_prod.paths[family], family, q)
+        s6 = {i: _spark_round6(x) for i, x in zip(cand, raw)}
+        order = sorted(cand, key=lambda i: (-s6[i], i))
+        cut = s6[order[n_short - 1]]
+        got = {
+            r.vec_id: r.cosine
+            for r in _prod_probe(spark, ann_prod, family, q, rerank=False).collect()
+        }
+        assert len(got) == n_short
+        assert {i for i in cand if s6[i] > cut + 1e-9} <= set(got)
+        assert not {i for i in cand if s6[i] < cut - 1e-9} & set(got)
+        assert all(abs(got[i] - s6[i]) <= 1e-9 for i in got), family
+
+        # exact rerank of the reference shortlist: the brute_force_topk
+        # algebra (left-to-right dot over float32 values widened to double)
+        short = order[:n_short]
+        V = ann_prod.X[[pos[i] for i in short]]
+        qn = float(np.sqrt(sum(x * x for x in q)))
+        dot, sq = np.zeros(len(short)), np.zeros(len(short))
+        for d in range(V.shape[1]):
+            dot = dot + V[:, d] * q[d]
+            sq = sq + V[:, d] * V[:, d]
+        exact = {i: _spark_round6(x) for i, x in zip(short, dot / (np.sqrt(sq) * qn))}
+        want = sorted(short, key=lambda i: (-exact[i], i))[:10]
+        top = _prod_probe(spark, ann_prod, family, q).collect()
+        assert [r.vec_id for r in top] == want, family
+        assert all(abs(r.cosine - exact[r.vec_id]) <= 1e-9 for r in top)
+
+
+@pytest.mark.parametrize("family", ["pq", "ivfpq"])
+def test_production_probe_plan_is_query_invariant(spark, ann_prod, family):
+    """A PQ / IVF-PQ probe only submits work: no RDD-backed scan (the LUT
+    and the rerank's query row are LocalTableScans), the shortlist reaches
+    the rerank scan as a pushed In filter, and probes with new query
+    vectors compile no new codegen classes."""
+    import re
+
+    import numpy as np
+
+    # query vectors no other probe in this Spark session used, so the codegen
+    # cache cannot hold classes compiled for their values
+    rng = np.random.RandomState({"pq": 11, "ivfpq": 13}[family])
+    X = ann_prod.X
+    q0, q1, q2 = (
+        (X[i] + 0.1 * rng.randn(X.shape[1])).tolist()
+        for i in rng.choice(len(X), 3, replace=False)
+    )
+    for rerank in (False, True):
+        df = _prod_probe(spark, ann_prod, family, q0, rerank=rerank)
+        df.collect()
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "ExistingRDD" not in plan, plan
+        assert "LocalTableScan" in plan, plan
+    assert re.search(r"PushedFilters: \[[^\]]*In(Set)?\(vec_id", plan), plan
+    metric = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    before = metric.METRIC_COMPILATION_TIME().getCount()
+    for q in (q1, q2):
+        assert len(_prod_probe(spark, ann_prod, family, q).collect()) == 10
+    assert metric.METRIC_COMPILATION_TIME().getCount() == before
+
+
+def test_ivfpq_probe_of_empty_lists_is_empty(spark, ann_prod):
+    """When every probed list is empty the shortlist is empty, and the
+    rerank returns an empty frame with the probe's columns."""
+    import json
+
+    import numpy as np
+
+    from querysight_spark.operators.similarity import ivfpq_topk_rerank
+
+    path = ann_prod.paths["ivfpq"]
+    with open(path + "/_ivfpq.json") as f:
+        meta = json.load(f)
+    q = ann_prod.queries[0]
+    C = np.array(meta["centroids"])
+    nearest = int(np.argmin(((np.array(q) - C) ** 2).sum(axis=1)))
+    codes = spark.read.parquet(path).where(F.col("list_id") != nearest)
+    out = ivfpq_topk_rerank(
+        ann_prod.vecs, codes, meta["centroids"], meta["codebooks"], q,
+        k=10, n_probes=1, oversample=10,
+    )
+    assert out.columns == ["vec_id", "cosine"]
+    assert out.collect() == []
+
+
+@pytest.mark.parametrize("id_kind", ["int", "string"])
+def test_rerank_shortlist_pushes_in_filter(spark, vecs, tmp_path, id_kind):
+    """The rerank applies the shortlist as one ``id IN (...)`` that reaches
+    the parquet scan, for int ids and for string ids that need quoting,
+    with the same ranking either way."""
+    import re
+
+    from querysight_spark.operators.similarity import (
+        pq_encode,
+        pq_topk_rerank,
+        train_pq_codebooks,
+    )
+
+    name = {"int": F.col("vec_id").cast("int"),
+            "string": F.concat(F.lit("v'\\"), F.col("vec_id").cast("string"))}
+    path = str(tmp_path / id_kind)
+    vecs.select(name[id_kind].alias("vec_id"), "embedding").write.parquet(path)
+    corpus = spark.read.parquet(path)
+    books = train_pq_codebooks(vecs, dim=4, m=2, k=4, sample_size=5)
+    q = [1.0, 0.05, 0.0, 0.0]
+    out = pq_topk_rerank(corpus, pq_encode(corpus, books), books, q, k=3)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert re.search(r"PushedFilters: \[[^\]]*In(Set)?\(vec_id", plan), plan
+    got = [(str(r.vec_id), r.cosine) for r in out.collect()]
+    want = [(str(r.vec_id), r.cosine) for r in brute_force_topk(vecs, q, k=3).collect()]
+    if id_kind == "string":
+        want = [("v'\\" + i, c) for i, c in want]
+    assert got == want
+
+
 def test_contamination_check(spark):
     from querysight_spark.operators.textstats import contamination_check
 
