@@ -28,7 +28,7 @@
                 unigram/bigram-LM quality scores, vocab fingerprint,
                 positional-postings exact-phrase retrieval, upsertable
                 index with O(delta) absorb and forward-index tombstone
-                delete + compaction).
+                delete).
   * cl01-cl03 — embedding clustering (nearest-centroid assignment),
                 SemDeDup semantic dedup, iterative k-means refinement.
   * ss01-ss17 — similarity search (brute force through persisted IVF+PQ,

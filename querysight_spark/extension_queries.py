@@ -5683,9 +5683,7 @@ def tx25(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle keys, the tx08 bucket discipline — a pure function of pack
     ids, stable under re-runs and any partitioning) with per-shard size
     accounting under the hash: rows, tokens, and the first/last shuffle
-    keys, i.e. the write-order fingerprint of each shard. The actual
-    sorted-shard parquet writer (``write_shards``) shares this exact
-    layout and is pinned by pytest on determinism and balance."""
+    keys, i.e. the write-order fingerprint of each shard."""
     from querysight_spark.operators.textstats import (
         emit_packed_sequences,
         shard_accounting,

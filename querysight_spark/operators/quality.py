@@ -358,23 +358,6 @@ def corpus_diff(
     )
 
 
-def corpus_diff_summary(diff: DataFrame) -> DataFrame:
-    """Reconciliation scoreboard over ``corpus_diff``: count and share
-    per status — the alerting surface a vintage-promotion gate reads.
-    Totals come from summing the (<= 4-row) per-status counts broadcast
-    back, never a second pass over the diff."""
-    per = diff.groupBy("status").agg(F.count(F.lit(1)).alias("n"))
-    per = per.localCheckpoint(eager=True)  # 2 consumers: rows + total
-    tot = per.agg(F.sum("n").alias("_tot"))
-    return (
-        per.crossJoin(F.broadcast(tot))
-        .select(
-            "status", "n", F.round(F.col("n") / F.col("_tot"), 6).alias("share")
-        )
-        .orderBy("status")
-    )
-
-
 def mad_outliers(
     df: DataFrame,
     value_col: str = "value",

@@ -79,81 +79,6 @@ def reaggregate(
     )
 
 
-def with_avg(rollup: DataFrame) -> DataFrame:
-    """Derived average at read time (avg = sum/n; stored averages would
-    not re-aggregate)."""
-    return rollup.withColumn("avg", F.col("sum") / F.col("n"))
-
-
-def write_rollup_tier(
-    rollup: DataFrame,
-    path: str,
-    partition_granularity: str = "day",
-    mode: str = "overwrite",
-) -> None:
-    """Persist a rollup tier partitioned by a coarser calendar unit of its
-    bucket (hypertable chunk layout): time-range queries against the tier
-    prune whole ``p_date=`` directories before any IO, and appending a new
-    day of data touches only that day's partition. The bucket column
-    itself stays at full resolution inside the files."""
-    out = rollup.withColumn(
-        "p_date", F.date_trunc(partition_granularity, F.col("bucket_start")).cast("date")
-    )
-    out.write.mode(mode).partitionBy("p_date").parquet(path)
-
-
-def read_rollup_tier(
-    spark, path: str, start=None, end=None, partition_granularity: str = "day"
-) -> DataFrame:
-    """Read a persisted tier with partition-pruned time-range filters: the
-    ``p_date`` predicates hit the partition column (PartitionFilters in the
-    scan), the ``bucket_start`` predicates refine within files.
-
-    ``partition_granularity`` must match the value the tier was written
-    with: a week/month chunk's ``p_date`` is truncated BELOW an
-    intra-chunk ``start``, so the start-side partition bound compares
-    against ``date_trunc(granularity, start)`` — otherwise the partial
-    first chunk (rows with ``bucket_start >= start``) would be pruned
-    away entirely. The end side needs no such adjustment: truncation
-    only lowers ``p_date``, so ``p_date <= end`` never drops a live
-    chunk."""
-    df = spark.read.parquet(path)
-    if start is not None:
-        df = df.where(
-            (
-                F.col("p_date")
-                >= F.date_trunc(partition_granularity, F.lit(start)).cast("date")
-            )
-            & (F.col("bucket_start") >= F.lit(start))
-        )
-    if end is not None:
-        df = df.where(
-            (F.col("p_date") <= F.to_date(F.lit(end)))
-            & (F.col("bucket_start") < F.lit(end))
-        )
-    return df.drop("p_date")
-
-
-def merge_rollups(*rollups: DataFrame, group_cols: Sequence[str] = ()) -> DataFrame:
-    """Merge same-granularity rollups (e.g. an existing tier chunk and a
-    new batch's partial): additive metrics re-combine exactly — sum of
-    n/sum, min of min, max of max — per (bucket_start, groups). This is
-    the read-modify-write step of streaming absorption; cost ∝ state
-    size of the touched chunks, never raw history."""
-    df = rollups[0]
-    for r in rollups[1:]:
-        df = df.unionByName(r)
-    return (
-        df.groupBy("bucket_start", *group_cols)
-        .agg(
-            F.sum("n").alias("n"),
-            F.sum("sum").alias("sum"),
-            F.min("min").alias("min"),
-            F.max("max").alias("max"),
-        )
-    )
-
-
 def upsert_rollup_tier(
     new_rollup: DataFrame,
     path: str,

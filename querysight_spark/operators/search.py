@@ -257,7 +257,7 @@ def build_text_index_upsertable(
     - ``lens/``      (id, dl) — append-only.
     - ``stats/``     1 row (n_docs, avgdl) — O(1) incremental merge.
     - ``deletes/``   (id) tombstones, created by the first delete —
-      probes anti-join it; compaction folds it into postings/forward.
+      probes anti-join it.
 
     Probes join df_t back from the tiny filtered termdf side (broadcast),
     so scores stay bit-identical to the rebuild index and ``bm25_topk``."""
@@ -585,15 +585,14 @@ def delete_from_text_index(
     3. stats decrement O(1) — each deleted doc's dl is the sum of its
        forward tf row group, no lens scan;
     4. the ids append to ``deletes/`` tombstones; probes anti-join them
-       (postings/forward/lens keep the rows until ``compact_text_index``
-       folds the tombstones in).
+       (postings/forward/lens keep the rows).
 
     Idempotent at the DATA level (the st13 discipline): ids already
     tombstoned — or never indexed — are dropped before any counting, so
     a re-delivered delete request decrements nothing twice. A deleted id
-    must never be re-upserted (tombstones are forever until compaction;
-    the upsert contract already requires globally-new ids). Returns the
-    number of documents actually deleted.
+    must never be re-upserted (tombstones are forever; the upsert
+    contract already requires globally-new ids). Returns the number of
+    documents actually deleted.
 
     ``txn_id``: same crash-atomicity discipline as ``upsert_text_index``
     — a committed delete no-ops on retry; a crashed attempt rolls back
@@ -729,76 +728,6 @@ def delete_from_text_index(
         shutil.rmtree(stage_p, ignore_errors=True)
         os.unlink(done_p)
     return n_del
-
-
-def compact_text_index(spark, path: str) -> int:
-    """Fold the tombstones in: physically drop deleted rows from
-    postings/forward/lens and clear ``deletes/`` — the amortized
-    maintenance pass (the io05 compaction story applied to the index;
-    probes pay the anti-join until it runs). A full rewrite by design:
-    run it when the tombstone fraction justifies one, not per delete.
-    Returns the number of tombstones folded.
-
-    Compaction also GARBAGE-COLLECTS the txn journal (``txns/``): a
-    COMMITTED maintenance txn replayed after the compaction that
-    absorbed it falls back to the DATA-level guards —
-    ``start_index_absorb`` anti-joins lens before upserting, and a
-    replayed delete finds its ids neither indexed nor tombstoned and
-    no-ops — so COMMIT markers are only needed between compactions,
-    the bound that keeps the journal from growing one file per
-    streaming epoch forever. That argument covers committed txns ONLY:
-    a ``*.pending.json`` marker means an UNCOMMITTED transaction whose
-    pre-write listing is the retry's only way to roll back the crashed
-    attempt's partial postings/forward/lens appends — and worse, a
-    compaction run over those partial appends would ABSORB them into
-    its rewritten files, which the retry's rollback would then delete
-    as strays. So compaction REFUSES to run while any pending marker
-    exists (crashed txn awaiting retry, or an upsert/delete in
-    flight): retry or finish the transaction first, then compact.
-    With no pending markers, the whole journal (commit markers plus
-    any stage leftovers orphaned by a crash AFTER the commit marker
-    landed — their txns short-circuit on the marker, so the stage is
-    garbage) is safe to drop."""
-    import os
-    import shutil
-
-    txns_dir = f"{path}/txns"
-    if os.path.isdir(txns_dir):
-        pending = sorted(
-            f for f in os.listdir(txns_dir) if f.endswith(".pending.json")
-        )
-        if pending:
-            raise RuntimeError(
-                f"compact_text_index({path}): {len(pending)} uncommitted "
-                f"transaction(s) have pending rollback listings "
-                f"({pending[:3]}...); retry or complete them before "
-                "compacting — compacting now would absorb their partial "
-                "appends and strand the rollback"
-            )
-        shutil.rmtree(txns_dir, ignore_errors=True)
-    if not os.path.exists(f"{path}/deletes"):
-        return 0
-    dead = spark.read.parquet(f"{path}/deletes").localCheckpoint(eager=True)
-    n = dead.count()
-    id_col = dead.columns[0]
-    for part, bucket_col in (
-        ("postings", "term_bucket"),
-        ("forward", "doc_bucket"),
-        ("lens", None),
-    ):
-        src = spark.read.parquet(f"{path}/{part}")
-        kept = src.join(dead, id_col, "left_anti").localCheckpoint(eager=True)
-        if bucket_col:
-            (
-                kept.repartition(bucket_col)
-                .write.partitionBy(bucket_col)
-                .mode("overwrite")
-                .parquet(f"{path}/{part}")
-            )
-        else:
-            kept.write.mode("overwrite").parquet(f"{path}/{part}")
-    shutil.rmtree(f"{path}/deletes", ignore_errors=True)
-    return n
 
 
 def bm25_topk_upsertable(

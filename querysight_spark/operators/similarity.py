@@ -1067,14 +1067,12 @@ def ivfpq_batch_topk(
     pair with the SAME algebra as ``ivfpq_topk`` (identical rounding),
     each partition emits only its local top-k per query (rounded-cosine
     + id tie-break — the total order the final window applies, so the
-    merge is exact; the batch_topk GEMM discipline). Tombstones
-    (``delete_from_ivfpq_index``) are honored.
+    merge is exact; the batch_topk GEMM discipline).
 
     With ``rerank_df`` the ADC shortlist (k·oversample per query)
     reranks exactly against the original vectors — at full ``n_probes``
     coverage this is exact-mode, equal to per-query brute force."""
     import json
-    import os
 
     from pyspark.sql.window import Window
 
@@ -1166,12 +1164,6 @@ def ivfpq_batch_topk(
     codes_df = read_parquet_known_schema(spark, path).where(
         F.col("list_id").isin(probed_lists)
     )
-    if os.path.exists(path + "/_deletes"):
-        codes_df = codes_df.join(
-            read_parquet_known_schema(spark, path + "/_deletes"),
-            id_col,
-            "left_anti",
-        )
     cand = codes_df.mapInPandas(
         _score, schema=f"{qid_col} long, {id_col} long, cosine double"
     )
@@ -1218,75 +1210,6 @@ def ivfpq_batch_topk(
     )
 
 
-def delete_from_ivfpq_index(
-    spark,
-    path: str,
-    ids: DataFrame,
-    id_col: str = "vec_id",
-) -> int:
-    """Right-to-be-forgotten for the persisted ANN index (the ir10
-    tombstone discipline on the vector side): deleted ids append to a
-    ``_deletes`` table INSIDE the index root (underscore-prefixed, so
-    the partitioned codes scan never sees it) and probes anti-join it
-    after the ``list_id`` pruning — O(probed candidates), not O(index).
-    No stats to decrement here (ADC scoring carries no corpus-global
-    term like df_t), so delete is tombstone-only; ``compact_ivfpq_index``
-    folds tombstones into the code partitions when the fraction
-    justifies a rewrite. Idempotent at the data level: already-deleted
-    ids are dropped before the append. Returns the count newly
-    tombstoned."""
-    import os
-
-    todo = ids.select(F.col(id_col)).distinct()
-    if os.path.exists(path + "/_deletes"):
-        done = spark.read.parquet(path + "/_deletes").select(id_col)
-        todo = todo.join(done, id_col, "left_anti")
-    todo = todo.localCheckpoint(eager=True)  # count + append consumers
-    n = todo.count()
-    if n:
-        todo.write.mode("append").parquet(path + "/_deletes")
-    return n
-
-
-def compact_ivfpq_index(spark, path: str, id_col: str = "vec_id") -> int:
-    """Fold ANN tombstones in: dynamic-overwrite only the ``list_id``
-    partitions that contain deleted rows (untouched lists' files stay
-    put — the ir10/io05 compaction story), remove list directories whose
-    rows are ALL deleted, and clear ``_deletes``. Returns the number of
-    tombstones folded."""
-    import os
-    import shutil
-
-    if not os.path.exists(path + "/_deletes"):
-        return 0
-    dead = spark.read.parquet(path + "/_deletes").localCheckpoint(eager=True)
-    n = dead.count()
-    codes = spark.read.parquet(path)
-    hit = codes.join(dead, id_col, "left_semi")
-    affected = {r.list_id for r in hit.select("list_id").distinct().collect()}
-    kept = (
-        codes.where(F.col("list_id").isin(list(affected)))
-        .join(dead, id_col, "left_anti")
-        .localCheckpoint(eager=True)  # materialize BEFORE overwriting source
-    )
-    alive = {r.list_id for r in kept.select("list_id").distinct().collect()}
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            kept.repartition("list_id")
-            .write.partitionBy("list_id")
-            .mode("overwrite")
-            .parquet(path)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    for dead_list in affected - alive:  # lists emptied by the deletion
-        shutil.rmtree(os.path.join(path, f"list_id={dead_list}"), True)
-    shutil.rmtree(path + "/_deletes", ignore_errors=True)
-    return n
-
-
 def probe_ivfpq_index(
     spark,
     path: str,
@@ -1302,9 +1225,7 @@ def probe_ivfpq_index(
     """Top-k against a ``build_ivfpq_index`` layout: load centroids and
     codebooks driver-side, ADC-score the persisted codes (the ``list_id
     IN (probes)`` filter prunes whole partition directories before IO),
-    optionally exact-rerank the shortlist against ``rerank_df``. If the
-    index carries tombstones (``delete_from_ivfpq_index``), they
-    anti-join here — after partition pruning, before scoring.
+    optionally exact-rerank the shortlist against ``rerank_df``.
 
     ``filter_keys`` (a one-column frame of qualifying ids) makes this
     the PERSISTED-index half of ``filtered_topk`` — metadata-filtered
@@ -1316,7 +1237,6 @@ def probe_ivfpq_index(
     raise n_probes (or run all lists, as the exact-mode gate entry
     does) as selectivity tightens."""
     import json
-    import os
 
     from querysight_spark.sources.catalog import read_parquet_known_schema
 
@@ -1324,12 +1244,6 @@ def probe_ivfpq_index(
         meta = json.load(f)
     # r15: schema-memoized reads — skip per-probe footer inference
     codes = read_parquet_known_schema(spark, path)
-    if os.path.exists(path + "/_deletes"):
-        codes = codes.join(
-            read_parquet_known_schema(spark, path + "/_deletes"),
-            id_col,
-            "left_anti",
-        )
     if filter_keys is not None:
         codes = codes.join(
             filter_keys.select(F.col(filter_keys.columns[0]).alias(id_col)),

@@ -1201,28 +1201,3 @@ def shard_accounting(
         .orderBy("shard_id")
     )
 
-
-def write_shards(
-    df: DataFrame,
-    path: str,
-    n_shards: int = 8,
-    id_col: str = "pack_id",
-    salt: str = "shard",
-    token_col: str = "n_tokens",
-) -> DataFrame:
-    """Materialize the ``shard_layout`` to disk: one Hive directory per
-    shard (``shard_id=K/``), rows within each shard written in
-    shuffle_key order (repartition on shard_id + sortWithinPartitions —
-    the standard sorted-shard write, no global sort). Returns the
-    accounting of what was actually WRITTEN (read back from the files,
-    not echoed from the plan), so callers audit the bytes on disk."""
-    sharded = shard_layout(df, n_shards, id_col, salt)
-    (
-        sharded.repartition(n_shards, "shard_id")
-        .sortWithinPartitions("shuffle_key", id_col)
-        .write.partitionBy("shard_id")
-        .mode("overwrite")
-        .parquet(path)
-    )
-    back = df.sparkSession.read.parquet(path)
-    return shard_accounting(back, token_col)

@@ -78,9 +78,3 @@ def get_spark(
         builder = builder.config(k, v)
     return builder.getOrCreate()
 
-
-def test_connection(spark: SparkSession) -> bool:
-    """A4 connection probe (`SELECT 1`,
-    /root/reference/utils/data_acquisition.py:243-248): cheapest possible
-    round-trip through the SQL engine."""
-    return spark.sql("SELECT 1").first()[0] == 1

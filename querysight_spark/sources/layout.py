@@ -82,8 +82,7 @@ def zorder_value(cols: Sequence[str], mins: Sequence[float],
     column arithmetic — no UDF, no shuffle of its own. NULL values land
     in bucket 0 (the column minimum) by construction of the
     greatest/least clamp — callers with meaningfully-null clustering
-    columns should filter or fill first (``write_zordered`` rejects
-    all-null columns outright)."""
+    columns should filter or fill first."""
     from pyspark.sql import functions as F
 
     n = len(cols)
@@ -108,56 +107,6 @@ def zorder_value(cols: Sequence[str], mins: Sequence[float],
     for p in parts[1:]:
         z = z.bitwiseOR(p)
     return z
-
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    cols: Sequence[str],
-    bits: int = 8,
-    num_files: int = 8,
-    mode: str = "overwrite",
-    parquet_block_bytes: int | None = None,
-) -> None:
-    """Z-order-clustered write: range-repartition + sort by the Morton
-    value of ``cols``, so parquet row-group min/max stats become TIGHT on
-    EVERY clustering column at once — a point/range predicate on any of
-    them prunes most row groups at scan time. This is the multi-column
-    complement to ``write_partitioned`` (one column, directory-level) and
-    the standard lakehouse layout for "filter by either user or time"
-    fact tables at 100 TB: sort by one column and the other's stats are
-    useless; Z-order degrades each column's clustering only by bits/n.
-
-    Column min/max for the bucketization come from one tiny agg (driver
-    reads 2·n scalars). ``parquet_block_bytes`` shrinks row groups in
-    tests so pruning is observable on small data; leave None (128 MB
-    default) in production."""
-    from pyspark.sql import functions as F
-
-    stats = df.agg(
-        *[F.min(F.col(c).cast("double")).alias(f"lo{i}") for i, c in enumerate(cols)],
-        *[F.max(F.col(c).cast("double")).alias(f"hi{i}") for i, c in enumerate(cols)],
-    ).first()
-    mins = [stats[f"lo{i}"] for i in range(len(cols))]
-    maxs = [stats[f"hi{i}"] for i in range(len(cols))]
-    empty = [c for c, lo, hi in zip(cols, mins, maxs) if lo is None or hi is None]
-    if empty:
-        raise ValueError(
-            f"write_zordered: clustering column(s) {empty} are empty or "
-            "all-NULL — no min/max to bucketize on. Drop them from `cols` "
-            "(NULL rows in a partially-null column interleave at bucket 0)."
-        )
-    z = zorder_value(cols, mins, maxs, bits).alias("_z")
-    out = (
-        df.withColumn("_z", z)
-        .repartitionByRange(num_files, "_z")
-        .sortWithinPartitions("_z")
-        .drop("_z")
-    )
-    writer = out.write.mode(mode)
-    if parquet_block_bytes is not None:
-        writer = writer.option("parquet.block.size", str(parquet_block_bytes))
-    writer.parquet(path)
 
 
 def dataset_file_stats(path: str) -> tuple[int, int]:

@@ -31,8 +31,6 @@ with the classic log-structured design the public formats
 - ``rollback`` is a METADATA commit: a new version whose file list is a
   byte-copy of the target's. History stays linear and the bad
   version remains inspectable; no data moves.
-- ``vacuum`` deletes data files unreachable from every retained
-  manifest — the only destructive operation, explicitly invoked.
 
 Scale notes (100 TB): per-commit metadata is O(changed entries) —
 ~1.25 KB flat in both commit count and file count (rounds 9-10: map
@@ -156,20 +154,16 @@ def table_version(root: str) -> int:
 # though each commit changed a handful of entries (VERDICT r9 #3).
 # With it, per-commit metadata is O(changed entries) amortized +
 # O(files)/_ANCHOR_EVERY, readers hydrate by replaying at most
-# _ANCHOR_EVERY-1 deltas onto the nearest anchor (cached, below), and
-# vacuum re-anchors the oldest retained manifest before dropping the
-# chain beneath it. v1 is always an anchor, so pre-round-9 tables
-# (all-full manifests) hydrate as a zero-length replay.
+# _ANCHOR_EVERY-1 deltas onto the nearest anchor (cached, below).
+# v1 is always an anchor, so pre-round-9 tables (all-full manifests)
+# hydrate as a zero-length replay.
 _ANCHOR_EVERY = 32
 # per-file manifest maps that delta-fold between anchors; "rows" is
 # each file's footer row count (round 10), recorded once at commit so
-# maintenance gates (small-file count, DV-debt fraction) plan from the
-# manifest alone instead of re-opening 10^5 footers per scheduler call
+# maintenance gates (optimize's small-file count, the key-filter
+# saturation check) plan from the manifest alone instead of re-opening
+# 10^5 footers per call
 _DELTA_KEYS = ("stats", "kf", "fv", "dvv", "rows")
-
-# grace window before vacuum treats a `.tmp-` file as a crash orphan;
-# anything younger may be a live writer's in-flight rename source
-_VACUUM_TMP_GRACE_S = 15 * 60
 
 # PARQUET-ENCODED ANCHORS (round 10): anchors were the one remaining
 # O(files) JSON term — ~75 MB per anchor projected at 10^5 files
@@ -189,7 +183,7 @@ _VACUUM_TMP_GRACE_S = 15 * 60
 # Below the threshold plain JSON is both smaller and one fewer
 # IO, so small tables never pay the sidecar read. Sidecars are
 # IMMUTABLE and uniquely named — a commit that loses the version-claim
-# race unlinks its own; vacuum sweeps unreferenced ones (age-gated).
+# race unlinks its own.
 _ANCHOR_PARQUET_MIN = 512
 
 # sidecar row kinds: snapshot members (0/1) carry the per-file map
@@ -748,11 +742,10 @@ def _anchor_side(root: str, raw: dict, need=()) -> _AnchorSide:
         _ANCHOR_SIDE_CACHE[path] = side
     return side
 
-# raw-manifest cache: manifests are immutable once written (vacuum's
-# re-anchor replaces one file — the (mtime_ns, size, ino) key catches
-# it: os.replace swaps the inode even when a coarse-mtime filesystem
-# reports an equal timestamp and the rewrite happens to be equal-sized,
-# ADVICE r9), so hydration walks hit memory, not the object store.
+# raw-manifest cache: manifests are immutable once written, so
+# hydration walks hit memory, not the object store. The (mtime_ns,
+# size, ino) key still catches a file swapped in place by os.replace,
+# even on a coarse-mtime filesystem.
 _MANIFEST_CACHE: dict[str, tuple[tuple[int, int, int], dict]] = {}
 _MANIFEST_CACHE_CAP = 512
 
@@ -783,8 +776,7 @@ def _load_manifest_raw(root: str, version: int) -> dict:
 # call put a linear-in-table-size driver cost back on the ~ms
 # point-lookup path the function exists to protect. Cache the
 # frozenset per manifest path under the same (mtime_ns, size, ino)
-# invalidation contract as _MANIFEST_CACHE (manifests are immutable
-# except vacuum's re-anchor os.replace, which swaps the inode).
+# invalidation contract as _MANIFEST_CACHE.
 _LIVE_SET_CACHE: dict[str, tuple[tuple[int, int, int], frozenset]] = {}
 _LIVE_SET_CACHE_CAP = 32
 
@@ -824,19 +816,8 @@ def read_manifest(root: str, version: int, need=None) -> dict:
     cold planning at 10^5 files (SCALE.md anchor_curve). ``need`` is a
     floor, not a projection: maps outside it MAY still be present
     (JSON-form manifests carry everything; an earlier full hydration
-    stays cached), so callers must not rely on their absence.
-
-    Concurrent-vacuum safety (ADVICE r9): a reader that loaded the
-    oldest-retained manifest's OLD delta form just before vacuum's
-    re-anchor ``os.replace`` would walk the chain below it into
-    just-deleted manifests. Vacuum re-anchors BEFORE deleting, so on a
-    ``FileNotFoundError`` mid-walk one retry with the starting manifest
-    re-statted (the stale cache entry misses on the new inode) sees the
-    re-anchored full form and hydrates with no chain below."""
-    try:
-        return _hydrate_manifest(root, version, need)
-    except FileNotFoundError:
-        return _hydrate_manifest(root, version, need)
+    stays cached), so callers must not rely on their absence."""
+    return _hydrate_manifest(root, version, need)
 
 
 def read_kf_cells(
@@ -866,17 +847,13 @@ def read_kf_cells(
     per-cell decode so a planner's path decision threads through
     instead of being re-gated on the anchor's file count. Returned
     cell dicts are shared with the manifest caches: treat them as
-    immutable. Same concurrent-vacuum retry contract as
-    ``read_manifest``."""
+    immutable."""
     if live_only:
         # cached frozenset (ADVICE r13): membership costs O(len(paths)),
         # not an O(n_files) set rebuild per probe — see _live_file_set
         live = _live_file_set(root, version)
         paths = [p for p in paths if p in live]
-    try:
-        return _read_kf_cells(root, version, paths, force_cells)
-    except FileNotFoundError:
-        return _read_kf_cells(root, version, paths, force_cells)
+    return _read_kf_cells(root, version, paths, force_cells)
 
 
 def _read_kf_cells(
@@ -996,8 +973,7 @@ def committed_txn(root: str, txn_id: str) -> int | None:
     checkpointed txn map plus a scan of only the commits SINCE it —
     O(delta), the bound a streaming sink needs when the table carries
     millions of micro-batch txns. Without one, the linear scan is the
-    honest baseline; it also survives vacuumed history (the checkpoint
-    map remembers txns whose manifests were vacuumed)."""
+    honest baseline."""
     ckpt = _latest_checkpoint(root)
     floor = 0
     if ckpt is not None:
@@ -1006,16 +982,13 @@ def committed_txn(root: str, txn_id: str) -> int | None:
             return hit
         floor = ckpt["version"]
     for v in range(table_version(root), floor, -1):
-        path = _manifest_path(root, v)
-        if not os.path.exists(path):
-            break  # vacuumed history below here
         # raw: the scan needs txn_id only — no map hydration
         if _load_manifest_raw(root, v).get("txn_id") == txn_id:
             return v
     return None
 
 
-def checkpoint_manifest(root: str, txn_retention: int | None = None) -> int:
+def checkpoint_manifest(root: str) -> int:
     """Write a manifest CHECKPOINT at the current version: the
     _last_checkpoint discipline the public log-structured formats
     document. ``ckpt-v{N}.json`` carries N plus the full txn-id ->
@@ -1025,17 +998,7 @@ def checkpoint_manifest(root: str, txn_retention: int | None = None) -> int:
     from the map + an O(delta) tail scan. Run it on the maintenance
     cadence (e.g. every K streaming batches, beside compact/optimize);
     cost is O(commits since the last checkpoint). Returns the
-    checkpointed version.
-
-    ``txn_retention`` (round 10) BOUNDS the map: entries whose commit
-    landed more than that many versions ago are pruned — without it a
-    micro-batch sink at 10^6 batches makes every checkpoint rewrite a
-    ~50-100 MB ever-growing map. The contract is the public formats'
-    transaction-retention window: a writer retrying a txn OLDER than
-    the window may double-apply (``committed_txn`` answers exactly for
-    anything younger — map for pruned-era scans don't look below the
-    checkpoint floor). Size it generously above the longest plausible
-    retry delay, and at least the vacuum retention."""
+    checkpointed version."""
     prev = _latest_checkpoint(root)
     floor = prev["version"] if prev else 0
     txns = dict(prev["txns"]) if prev else {}
@@ -1044,13 +1007,6 @@ def checkpoint_manifest(root: str, txn_retention: int | None = None) -> int:
         t = _load_manifest_raw(root, v).get("txn_id")  # txn_id only
         if t is not None:
             txns[t] = v
-    if txn_retention is not None:
-        if txn_retention < 1:
-            raise ValueError(
-                f"txn_retention must be >= 1, got {txn_retention}"
-            )
-        keep_from = latest - txn_retention + 1
-        txns = {t: v for t, v in txns.items() if v >= keep_from}
     path = os.path.join(root, _MANIFESTS, f"ckpt-{latest:08d}.json")
     tmp = path + f".tmp-{uuid.uuid4().hex}"
     with open(tmp, "w") as f:
@@ -1203,8 +1159,7 @@ def _kf_build(
     data file (``p`` = relative path, ``<datafile>.<col>.kf``) so
     manifests stay metadata-sized at production file sizes — the
     planner loads sidecars lazily, only for files the zone stage
-    admitted, and a sidecar lives and dies with its data file
-    (``vacuum`` removes both together). Membership is the pruning
+    admitted, and a sidecar lives beside its data file. Membership is the pruning
     complement to zone RANGES for keys the table is NOT clustered on,
     where every file's range overlaps and zone maps prune nothing.
     Integer columns build VECTORIZED (numpy splitmix64 over the whole
@@ -1298,8 +1253,7 @@ def _kf_build(
         }
     # ``tag`` (a rebuild pass) versions the sidecar NAME: older
     # manifests keep referencing the original bitmap byte-for-byte
-    # (their recorded m/k must match it for time travel), vacuum drops
-    # whichever name no retained manifest references
+    # (their recorded m/k must match it for time travel)
     sidecar = (
         f"{path}.{col}.{tag}.kf" if tag else f"{path}.{col}.kf"
     )
@@ -1745,8 +1699,8 @@ def _commit(root: str, files: list[str], added: list[str],
         # per-file ROW COUNTS (round 10): one footer read per ADDED
         # file at commit time (carried files keep their entry; hints
         # cover rollback's re-entering files), so maintenance gates —
-        # small-file count, DV-debt fraction — plan from the manifest
-        # alone. Absent entries (pre-rows history, unreadable footer)
+        # optimize's small-file count, the key-filter saturation check —
+        # plan from the manifest alone. Absent entries (pre-rows history, unreadable footer)
         # mean "unknown"; gates fall back to a footer read for those.
         prev_rows = prev_m.get("rows", {})
         hint_rows = file_rows or {}
@@ -1818,7 +1772,7 @@ def _commit(root: str, files: list[str], added: list[str],
             # O(files) per-commit term. Omit it when this snapshot is
             # EXACTLY (prev files - removed) + added in that order —
             # true for every append/merge/compact/optimize/zorder/
-            # delete/evolve/policy commit by construction; hydration
+            # delete/evolve commit by construction; hydration
             # replays the transition. Kept verbatim when the check
             # fails (e.g. a rollback whose target interleaves files
             # differently), so correctness never rides on the fold.
@@ -1830,12 +1784,6 @@ def _commit(root: str, files: list[str], added: list[str],
                 del manifest["files"]
         if extra:
             manifest.update(extra)
-        if "policy" not in manifest and prev_m.get("policy") is not None:
-            # table-level maintenance policy is STICKY (like stats_cols):
-            # every commit carries it until a policy commit replaces or
-            # clears it, so maintain_table() can plan from the latest
-            # manifest alone
-            manifest["policy"] = prev_m["policy"]
         if sch is not None:
             manifest["schema"] = sch
         # commit wall-clock, for DESCRIBE HISTORY / timestamp travel;
@@ -1871,20 +1819,8 @@ def _commit(root: str, files: list[str], added: list[str],
             # fold rides along and bounds every later scan to one
             # anchor window. Best-effort: the commit itself already
             # landed, and a failed checkpoint only costs scan depth.
-            # The stored checkpoint policy's txn_retention rides along
-            # (round 10): the auto-checkpoint is where an unbounded
-            # txn map would otherwise grow forever.
             try:
-                pol = manifest.get("policy") or {}
-                ckpt_pol = (
-                    pol.get("checkpoint")
-                    if isinstance(pol, dict) and "cols" not in pol
-                    else None
-                )
-                checkpoint_manifest(
-                    root,
-                    txn_retention=(ckpt_pol or {}).get("txn_retention"),
-                )
+                checkpoint_manifest(root)
             except Exception:
                 pass
         return version
@@ -1912,7 +1848,7 @@ def write_version(
     ``'overwrite'`` replaces it (previous files leave the snapshot but
     stay on disk for time-travel). Returns the committed version.
 
-    ``txn_id`` makes the commit IDEMPOTENT: if any retained manifest
+    ``txn_id`` makes the commit IDEMPOTENT: if any manifest
     already carries it, the write is a no-op returning that version —
     the transactional-writer discipline that turns a retried streaming
     micro-batch into exactly-once (see ``start_versioned_sink``).
@@ -2315,7 +2251,7 @@ def start_versioned_sink(
 # commits are separately visible (and separately refused/emitted).
 # Their `added` files carry no rows that were APPENDED in the range,
 # so an incremental consumer skips them — the original appends' files
-# are immutable on disk (until vacuum) and keep reading correctly even
+# are immutable on disk and keep reading correctly even
 # after a rewrite removed them from the current snapshot.
 _REWRITE_OPS = ("optimize", "zorder", "compact")
 
@@ -2371,7 +2307,7 @@ def incremental_read(
             # sidecar (round 11); restore just the lists — need=()
             # skips the heavy map decode this path never wanted
             m = _anchor_expand(root, m, need=())
-        if m["op"] in ("evolve", "policy"):
+        if m["op"] == "evolve":
             continue  # metadata-only commits: no rows moved
         if (
             on_maintenance == "skip_rewrites"
@@ -2438,234 +2374,6 @@ def rollback(root: str, to_version: int) -> int:
         key_filters=target.get("kf"),
         file_rows=target.get("rows"),
     )
-
-
-def _kf_sidecar_refs(kf: dict, out: set) -> None:
-    """Sidecar bitmap paths a kf map references (inline filters
-    reference nothing)."""
-    for p, cols in kf.items():
-        for filt in cols.values():
-            if "p" in filt:
-                out.add(os.path.join(os.path.dirname(p), filt["p"]))
-
-
-def _vacuum_keep(root: str, retain_from: int, latest: int) -> set[str]:
-    """Everything reachable from any manifest in [retain_from, latest]:
-    data files, DV files, and the kf sidecar bitmaps their kf maps
-    reference (a rebuild pass leaves older vintages behind under
-    versioned names — see ``_kf_build``'s ``tag``).
-
-    O(files + changes), not O(retained x files) (round 10): hydrating
-    every retained version built a full file map per version — minutes
-    of pure set churn at 10^3 retained x 10^5 files. The union is
-    reconstructible from ONE hydration of the oldest retained version
-    plus each later commit's raw DELTAS: files(v+1) = (files(v) -
-    removed) + added, so the union of file lists is files(retain) U
-    all later `added` (plus any verbatim list a failed fold kept);
-    kf_add holds every reference new-or-changed at that commit, so
-    refs union the same way. Anchors in range carry full maps instead
-    of deltas — their O(files) read amortizes /32 and hits the
-    expanded-anchor cache."""
-    keep: set[str] = set()
-    base = read_manifest(root, retain_from, need=("kf",))
-    keep.update(base["files"])
-    keep.update(base.get("dvs", []))
-    _kf_sidecar_refs(base.get("kf", {}), keep)
-    for v in range(retain_from + 1, latest + 1):
-        raw = _load_manifest_raw(root, v)
-        if raw.get("delta_maps"):
-            keep.update(raw.get("added", []))
-            if "files" in raw:
-                # fold check failed at commit time (e.g. a rollback
-                # interleaving differently): trust the verbatim list
-                keep.update(raw["files"])
-            keep.update(raw.get("dvs", []))
-            _kf_sidecar_refs(raw.get("kf_add", {}), keep)
-        else:
-            m = _anchor_expand(root, raw, need=("kf",))
-            keep.update(m["files"])
-            keep.update(m.get("dvs", []))
-            _kf_sidecar_refs(m.get("kf", {}), keep)
-    return keep
-
-
-def vacuum(root: str, retain_from: int) -> list[str]:
-    """Delete data files unreachable from every manifest >=
-    ``retain_from`` (and drop the older manifests). Time-travel before
-    ``retain_from`` dies here — this is the one destructive operation,
-    so it returns the deleted paths for the caller's audit log.
-
-    Before dropping history, vacuum writes a manifest CHECKPOINT so
-    the txn-id map of the deleted manifests survives — a very late
-    retry of an old streaming batch must still find its txn committed
-    (no double-append), even though the manifest that carried it is
-    gone. Superseded checkpoints are dropped; the newest one stays."""
-    if retain_from < 1:
-        raise ValueError(
-            f"vacuum retain_from must be >= 1, got {retain_from}"
-        )
-    latest = table_version(root)
-    retain_from = min(retain_from, latest)
-    # the stored checkpoint policy's txn_retention applies here too
-    # (ADVICE r10): without it a vacuum-written checkpoint persists
-    # the unbounded txn map until the next anchor-cadence
-    # auto-checkpoint prunes it — same extraction as _commit's
-    pol = (
-        _load_manifest_raw(root, latest).get("policy")
-        if latest
-        else None
-    )
-    ckpt_pol = (
-        pol.get("checkpoint")
-        if isinstance(pol, dict) and "cols" not in pol
-        else None
-    )
-    checkpoint_manifest(
-        root, txn_retention=(ckpt_pol or {}).get("txn_retention")
-    )
-    # re-ANCHOR the oldest retained manifest before dropping the chain
-    # beneath it: a delta manifest hydrates by replaying onto an older
-    # anchor, and that anchor may be about to be deleted — rewriting
-    # the hydrated form in place (atomic replace) keeps every retained
-    # version readable with no chain below retain_from
-    if retain_from > 1 and os.path.exists(
-        _manifest_path(root, retain_from)
-    ):
-        if _load_manifest_raw(root, retain_from).get("delta_maps"):
-            hydrated = read_manifest(root, retain_from)
-            hydrated.pop("delta_maps", None)
-            # large re-anchors take the parquet-sidecar form too; the
-            # old sidecar (if the prior anchor had one) goes in the
-            # unreferenced sweep below once its manifest is dropped
-            _anchor_fold(root, hydrated)
-            path = _manifest_path(root, retain_from)
-            tmp = path + f".tmp-{uuid.uuid4().hex}"
-            with open(tmp, "w") as f:
-                json.dump(hydrated, f)
-            os.replace(tmp, path)
-    mdir = os.path.join(root, _MANIFESTS)
-    ckpts = sorted(
-        f for f in os.listdir(mdir)
-        if f.startswith("ckpt-") and f.endswith(".json")
-    )
-    for stale in ckpts[:-1]:
-        os.unlink(os.path.join(mdir, stale))
-    keep = _vacuum_keep(root, retain_from, latest)
-    deleted = []
-    for sub in (_DATA, _DV):
-        walk_root = os.path.join(root, sub)
-        for dirpath, _dirs, names in os.walk(walk_root):
-            # data files of this dir that retained manifests keep —
-            # the owners whose fresh unreferenced kf sidecars might be
-            # an in-flight rebuild's (see the .kf branch)
-            dir_kept = {
-                n for n in names
-                if os.path.relpath(os.path.join(dirpath, n), root)
-                in keep
-            }
-            for name in names:
-                if name.startswith(("_", ".")):
-                    continue  # markers/checksums aren't snapshot members
-                full = os.path.join(dirpath, name)
-                if ".tmp-" in name:
-                    # a tmp file is NEVER a snapshot member: a crash
-                    # between writing a sidecar tmp and its os.replace
-                    # would otherwise strand it forever (it matches
-                    # neither the .kf branch nor .parquet — ADVICE r8).
-                    # AGE-GATED (ADVICE r9): a young tmp may be a
-                    # concurrent commit's in-flight sidecar about to be
-                    # os.replace'd — deleting it would fail that commit.
-                    # Only crash orphans (older than the grace window)
-                    # are swept.
-                    try:
-                        age = time.time() - os.stat(full).st_mtime
-                    except FileNotFoundError:
-                        continue  # the writer just renamed it away
-                    if age >= _VACUUM_TMP_GRACE_S:
-                        os.unlink(full)
-                        deleted.append(full)
-                    continue
-                if name.endswith(".kf"):
-                    # a key-filter sidecar survives iff some RETAINED
-                    # manifest references it (rebuild passes version
-                    # the names, so name-parsing back to the data file
-                    # would over-keep replaced vintages). When its
-                    # OWNING data file is retained, a fresh
-                    # unreferenced sidecar may be a concurrent
-                    # rebuild's not-yet-committed output — age-gate
-                    # that case; a dead owner means history was
-                    # legitimately dropped, delete immediately.
-                    rel = os.path.relpath(full, root)
-                    if rel in keep:
-                        continue
-                    if _commit_of(rel) > latest:
-                        # a FINALIZED sidecar in a commit dir past the
-                        # latest committed version is a concurrent
-                        # in-flight commit's output (its data file is
-                        # spared by the same guard below, but neither
-                        # is in any retained manifest yet) — deleting
-                        # it would leave that commit's kf entry
-                        # pointing at a missing bitmap the moment its
-                        # manifest lands (ADVICE r10). A later vacuum
-                        # reclaims true orphans once the log passes.
-                        continue
-                    owner_live = any(
-                        name.startswith(b + ".") for b in dir_kept
-                    )
-                    if owner_live:
-                        try:
-                            age = time.time() - os.stat(full).st_mtime
-                        except FileNotFoundError:
-                            continue
-                        if age < _VACUUM_TMP_GRACE_S:
-                            continue
-                    os.unlink(full)
-                    deleted.append(full)
-                    continue
-                if not name.endswith(".parquet"):
-                    continue
-                if os.path.relpath(full, root) not in keep:
-                    # a file in a commit dir PAST the latest committed
-                    # version is an in-flight (or crashed-future)
-                    # writer's — never a vacuum target; a later vacuum
-                    # reclaims true orphans once the log passes them
-                    if _commit_of(os.path.relpath(full, root)) > latest:
-                        continue
-                    os.unlink(full)
-                    deleted.append(full)
-    for v in range(1, retain_from):
-        path = _manifest_path(root, v)
-        if os.path.exists(path):
-            os.unlink(path)
-    # sweep anchor PARQUET SIDECARS no remaining manifest references
-    # (a dropped anchor's, a re-anchor's replaced one, a crashed
-    # commit's) plus crash-orphaned manifest tmps — age-gated like the
-    # data-dir tmps so a mid-claim commit's sidecar isn't deleted in
-    # the instant before its JSON lands
-    referenced = set()
-    for f in os.listdir(mdir):
-        if f.startswith("v") and f.endswith(".json"):
-            ref = _load_manifest_raw(root, int(f[1:-5])).get(
-                "anchor_parquet"
-            )
-            if ref:
-                referenced.add(ref)
-    for f in os.listdir(mdir):
-        stale_sidecar = (
-            f.startswith("anchor-")
-            and f.endswith(".parquet")
-            and f not in referenced
-        )
-        if not (stale_sidecar or ".tmp-" in f):
-            continue
-        full = os.path.join(mdir, f)
-        try:
-            if time.time() - os.stat(full).st_mtime >= _VACUUM_TMP_GRACE_S:
-                os.unlink(full)
-                deleted.append(full)
-        except FileNotFoundError:
-            pass
-    return sorted(deleted)
 
 
 def _kf_risky_mask(vals):
@@ -3237,11 +2945,10 @@ def optimize_table(
     spark: SparkSession,
     root: str,
     min_rows_per_file: int,
-    target_rows_per_file: int | None = None,
 ) -> int:
     """Small-file OPTIMIZE: bin-pack every data file holding fewer than
     ``min_rows_per_file`` rows (row counts read from parquet FOOTERS —
-    metadata only) into ~``target_rows_per_file``-row files; files
+    metadata only) into ~``4 * min_rows_per_file``-row files; files
     already big enough carry into the new snapshot BY REFERENCE. When
     the table has zone maps, the rewritten rows are re-clustered with
     ``repartitionByRange`` on the first stats column so the new files'
@@ -3266,8 +2973,7 @@ def optimize_table(
             "optimize_table on a table with outstanding deletion vectors; "
             "run compact_table first"
         )
-    if target_rows_per_file is None:
-        target_rows_per_file = max(min_rows_per_file * 4, 1)
+    target_rows_per_file = max(min_rows_per_file * 4, 1)
     mrows = manifest.get("rows", {})
     rows_of = {
         # manifest row counts when recorded (round 10 — zero IO);
@@ -3317,17 +3023,12 @@ def optimize_table(
 
 
 def table_history(root: str) -> list[dict]:
-    """DESCRIBE HISTORY: one dict per retained commit, newest first —
+    """DESCRIBE HISTORY: one dict per commit, newest first —
     version, op, wall-clock ts (None for pre-round-7 manifests), txn_id,
     file counts and added/removed deltas, DV debt, and whether a schema
-    is recorded. Driver-side metadata only (manifests are small JSON);
-    vacuumed versions are absent, like the public formats' RETAIN
-    window."""
+    is recorded. Driver-side metadata only (manifests are small JSON)."""
     out = []
     for v in range(table_version(root), 0, -1):
-        path = _manifest_path(root, v)
-        if not os.path.exists(path):
-            break  # vacuumed history below here
         # hydrated: file list may be folded; need=() — history reads
         # list lengths only, never the per-file maps
         m = read_manifest(root, v, need=())
@@ -3347,33 +3048,12 @@ def table_history(root: str) -> list[dict]:
     return out
 
 
-def version_at_timestamp(root: str, ts: float) -> int:
-    """TIMESTAMP AS OF: the latest retained version whose commit time is
-    <= ``ts`` (pass to ``read_version``). Commit clocks can skew, so the
-    scan takes the MAX qualifying version rather than assuming
-    monotonicity; raises if every retained commit is newer (use plain
-    version travel for vacuumed history)."""
-    best = 0
-    for row in table_history(root):
-        if row["ts"] is not None and row["ts"] <= ts:
-            best = max(best, row["version"])
-    if best == 0:
-        raise ValueError(
-            f"no retained commit of {root} at or before ts={ts}"
-        )
-    return best
-
-
 def _last_zorder_version(root: str, version: int, cols: list[str]) -> int:
-    """Latest retained commit <= ``version`` that is a zorder rewrite on
+    """Latest commit <= ``version`` that is a zorder rewrite on
     exactly ``cols`` (the manifest records ``zorder_cols``), or 0 if
-    none is visible — vacuumed history below the walk reads as "never
-    clustered" (conservative: the incremental path then rewrites
-    everything, a full re-cluster, still correct)."""
+    there is none (the incremental path then rewrites everything, a
+    full re-cluster)."""
     for v in range(version, 0, -1):
-        path = _manifest_path(root, v)
-        if not os.path.exists(path):
-            return 0
         m = _load_manifest_raw(root, v)  # op/zorder_cols only
         if m["op"] == "zorder" and m.get("zorder_cols") == list(cols):
             return v
@@ -3535,176 +3215,6 @@ def zorder_table(
     )
 
 
-def set_zorder_policy(
-    root: str,
-    cols: list[str] | None,
-    bits: int = 8,
-    target_files: int = 16,
-    max_span: float | None = None,
-    min_delta_files: int = 8,
-) -> int:
-    """Store the table's Z-order MAINTENANCE POLICY as a metadata-only
-    commit (op=``policy``; no rows move — the change feed and
-    incremental readers read it as silence). The policy is STICKY:
-    every later commit carries it, so ``maintain_table`` plans from
-    the latest manifest alone. The knobs are ``zorder_table``'s
-    incremental-mode arguments — the drift signals that decide whether
-    a pass fires (``min_delta_files`` appends since the last zorder,
-    zone spans past ``max_span`` of the column domain) are all
-    manifest-computable, which is what makes a scheduled
-    ``maintain_table`` call below threshold METADATA-ONLY (VERDICT r9
-    ask #4; the caller-knob-per-call shape it replaces put the cadence
-    decision in every scheduler script). ``cols=None`` clears the
-    policy. Returns the policy commit's version."""
-    version = table_version(root)
-    if version == 0:
-        raise ValueError(f"set_zorder_policy target {root} does not exist")
-    manifest = read_manifest(root, version)
-    policy = (
-        None
-        if cols is None
-        else {
-            "cols": list(cols),
-            "bits": bits,
-            "target_files": target_files,
-            "max_span": max_span,
-            "min_delta_files": min_delta_files,
-        }
-    )
-    return _commit(
-        root,
-        [os.path.join(root, f) for f in manifest["files"]],
-        [],
-        [],
-        "policy",
-        expected_version=version,
-        stats=manifest.get("stats", {}),
-        stats_cols=manifest.get("stats_cols", []),
-        dvs=manifest.get("dvs", []),
-        dv_key=manifest.get("dv_key", []),
-        extra={"policy": policy},
-    )
-
-
-def set_table_policy(
-    root: str,
-    zorder: dict | None = None,
-    optimize: dict | None = None,
-    compact: dict | None = None,
-    vacuum: dict | None = None,
-    keyfilters: dict | None = None,
-    checkpoint: dict | None = None,
-) -> int:
-    """Store the table's WHOLE maintenance policy as one metadata-only
-    commit (VERDICT r10 ask #3 — ``set_zorder_policy`` covered only
-    the clustering cadence; the optimize / compact / vacuum knobs
-    still lived in every scheduler script). Sections, each optional:
-
-    - ``zorder``: ``{cols, bits=8, target_files=16, max_span=None,
-      min_delta_files=8}`` — incremental re-cluster drift gates.
-    - ``optimize``: ``{min_rows_per_file, target_rows_per_file=None,
-      min_small_files=2}`` — bin-pack when at least ``min_small_files``
-      data files fall under ``min_rows_per_file`` rows (counted from
-      the manifest's ``rows`` map — zero IO).
-    - ``compact``: ``{max_dv_fraction}`` — fold deletion-vector debt
-      when tombstone rows reach that fraction of table rows (a debt
-      PROXY: a tombstone key may match zero rows; the manifest row
-      map makes the check metadata-only).
-    - ``vacuum``: ``{retain_last, min_drop=_ANCHOR_EVERY}`` — drop
-      history beyond the newest ``retain_last`` versions, but only
-      once ``min_drop`` droppable manifests have accumulated (vacuum
-      walks the data tree, so it runs on the anchor-ish cadence, not
-      every call).
-    - ``keyfilters``: ``{max_density=0.6, bits=None}`` — rebuild
-      membership filters whose stored ones-density crossed the
-      threshold (``rebuild_key_filters``; fpr ~= density^k, so a
-      saturated filter admits ~every probe and pruning silently
-      dies — SCALE.md's q <~ 1/fpr bound).
-    - ``checkpoint``: ``{txn_retention}`` — bound the checkpoint's
-      txn-id map to commits within that many versions (applied by the
-      anchor-cadence auto-checkpoint; a txn retried from OUTSIDE the
-      window may double-apply — the public formats' transaction
-      retention contract. Size it at least the vacuum retention).
-
-    All sections None clears the policy. Like ``set_zorder_policy``
-    the stored policy is STICKY (every commit carries it, surviving
-    checkpoints and anchor folds) so ``maintain_table`` plans from the
-    latest manifest alone. Returns the policy commit's version."""
-    version = table_version(root)
-    if version == 0:
-        raise ValueError(f"set_table_policy target {root} does not exist")
-    sections = {
-        "zorder": zorder,
-        "optimize": optimize,
-        "compact": compact,
-        "vacuum": vacuum,
-        "keyfilters": keyfilters,
-        "checkpoint": checkpoint,
-    }
-    policy = (
-        None
-        if all(v is None for v in sections.values())
-        else {k: v for k, v in sections.items() if v is not None}
-    )
-    if policy and "zorder" in policy and "cols" not in policy["zorder"]:
-        raise ValueError("zorder policy requires 'cols'")
-    if policy and "optimize" in policy and (
-        "min_rows_per_file" not in policy["optimize"]
-    ):
-        raise ValueError("optimize policy requires 'min_rows_per_file'")
-    if policy and "compact" in policy and (
-        "max_dv_fraction" not in policy["compact"]
-    ):
-        raise ValueError("compact policy requires 'max_dv_fraction'")
-    if policy and "vacuum" in policy and (
-        "retain_last" not in policy["vacuum"]
-    ):
-        raise ValueError("vacuum policy requires 'retain_last'")
-    if policy and "checkpoint" in policy and (
-        "txn_retention" not in policy["checkpoint"]
-    ):
-        raise ValueError("checkpoint policy requires 'txn_retention'")
-    manifest = read_manifest(root, version)
-    return _commit(
-        root,
-        [os.path.join(root, f) for f in manifest["files"]],
-        [],
-        [],
-        "policy",
-        expected_version=version,
-        stats=manifest.get("stats", {}),
-        stats_cols=manifest.get("stats_cols", []),
-        dvs=manifest.get("dvs", []),
-        dv_key=manifest.get("dv_key", []),
-        extra={"policy": policy},
-    )
-
-
-def _dv_debt_fraction(root: str, manifest: dict) -> float:
-    """Tombstone rows as a fraction of table rows — the compact gate.
-    DV footer reads are O(outstanding vectors) (bounded by the debt
-    itself); table rows come from the manifest ``rows`` map, with a
-    footer read only for pre-rows history."""
-    import pyarrow.parquet as pq
-
-    dvs = manifest.get("dvs", [])
-    if not dvs:
-        return 0.0
-    dv_rows = sum(
-        pq.ParquetFile(os.path.join(root, d)).metadata.num_rows
-        for d in dvs
-    )
-    mrows = manifest.get("rows", {})
-    total = 0
-    for f in manifest["files"]:
-        total += (
-            mrows[f]
-            if f in mrows
-            else pq.ParquetFile(os.path.join(root, f)).metadata.num_rows
-        )
-    return dv_rows / max(1, total)
-
-
 def _kf_saturated(manifest: dict, max_density: float,
                   new_bits: int | None = None) -> list[str]:
     """Files whose stored filter ones-density exceeds ``max_density``
@@ -3780,132 +3290,6 @@ def rebuild_key_filters(
         key_filters={**manifest.get("kf", {}), **rebuilt},
         kf_bits=eff_bits,
     )
-
-
-def maintain_table(spark: SparkSession, root: str) -> int:
-    """Apply the table's stored maintenance policy — the ONE entry
-    point a scheduler calls after every ingest batch. No policy, or
-    every drift signal below its threshold, is a no-op returning the
-    current version; the gates are manifest metadata (file count, the
-    ``rows`` map, zone spans), zero data IO, so calling this every
-    batch costs ~a manifest read. Above a threshold each due stage
-    runs as its own atomic commit, in dependency order:
-
-    1. ``compact_table`` when DV debt crosses ``compact.max_dv_fraction``
-       (or unconditionally when a zorder pass is configured and debt
-       is outstanding — zorder refuses to rewrite under tombstones).
-    2. ``optimize_table`` when at least ``optimize.min_small_files``
-       files fall under ``optimize.min_rows_per_file`` rows (skipped
-       while DV debt is deliberately outstanding: optimize refuses to
-       copy doomed rows, and the debt stays below the compact gate by
-       definition).
-    3. ``zorder_table(incremental=True)`` with the policy's drift
-       gates.
-    4. ``vacuum`` keeping the newest ``vacuum.retain_last`` versions,
-       once ``vacuum.min_drop`` droppable manifests accumulate.
-
-    Legacy flat ``set_zorder_policy`` policies keep their exact round-9
-    behavior (compact-if-debt, then incremental zorder)."""
-    version = table_version(root)
-    if version == 0:
-        return 0
-    # gate reads are need-floored (round 11): file list + fv (zorder
-    # drift) + rows (small-file and DV-debt gates) — never the stats
-    # map, so a gated scheduler call on a 10^5-file pointer-anchor
-    # table skips the heavy column decodes entirely; the kf map
-    # hydrates separately below only when a keyfilters policy exists,
-    # and each FIRING stage does its own full read
-    manifest = read_manifest(root, version, need=("rows",))
-    policy = manifest.get("policy")
-    if not policy:
-        return version
-    if "cols" in policy:
-        # legacy flat zorder policy (round 9)
-        if manifest.get("dvs"):
-            compact_table(spark, root)
-        return zorder_table(
-            spark,
-            root,
-            policy["cols"],
-            bits=policy.get("bits", 8),
-            target_files=policy.get("target_files", 16),
-            incremental=True,
-            max_span=policy.get("max_span"),
-            min_delta_files=policy.get("min_delta_files", 8),
-        )
-    zo = policy.get("zorder")
-    opt = policy.get("optimize")
-    comp = policy.get("compact")
-    vac = policy.get("vacuum")
-    if manifest.get("dvs"):
-        debt_due = comp is not None and (
-            _dv_debt_fraction(root, manifest)
-            >= comp["max_dv_fraction"]
-        )
-        # a DUE zorder pass forces the fold regardless of the debt
-        # fraction (zorder refuses tombstone debt, and waiting on the
-        # compact gate would starve re-clustering under a small
-        # permanent debt); the drift check mirrors zorder_table's
-        # append-drift gate, manifest-only
-        zorder_due = False
-        if zo is not None and not debt_due:
-            last_z = _last_zorder_version(root, version, zo["cols"])
-            fv = manifest.get("fv", {})
-            drift = sum(
-                1
-                for f in manifest["files"]
-                if fv.get(f, _commit_of(f)) > last_z
-            )
-            zorder_due = drift >= max(1, zo.get("min_delta_files", 8))
-        if debt_due or zorder_due or (comp is None and zo is not None):
-            compact_table(spark, root)
-            manifest = read_manifest(
-                root, table_version(root), need=("rows",)
-            )
-    dv_clear = not manifest.get("dvs")
-    if opt is not None and dv_clear:
-        mrows = manifest.get("rows", {})
-        small = sum(
-            1
-            for f in manifest["files"]
-            if mrows.get(f, opt["min_rows_per_file"])
-            < opt["min_rows_per_file"]
-        )
-        if small >= opt.get("min_small_files", 2):
-            optimize_table(
-                spark,
-                root,
-                opt["min_rows_per_file"],
-                opt.get("target_rows_per_file"),
-            )
-    if zo is not None and dv_clear:
-        zorder_table(
-            spark,
-            root,
-            zo["cols"],
-            bits=zo.get("bits", 8),
-            target_files=zo.get("target_files", 16),
-            incremental=True,
-            max_span=zo.get("max_span"),
-            min_delta_files=zo.get("min_delta_files", 8),
-        )
-    kfp = policy.get("keyfilters")
-    if kfp is not None:
-        # densities live inline in the kf map entries — the one heavy
-        # column this gate genuinely needs
-        latest = read_manifest(root, table_version(root), need=("kf",))
-        max_d = kfp.get("max_density", 0.6)
-        if _kf_saturated(latest, max_d, kfp.get("bits")):
-            rebuild_key_filters(
-                spark, root, bits=kfp.get("bits"), max_density=max_d
-            )
-    current = table_version(root)
-    if vac is not None:
-        retain_from = current - vac["retain_last"] + 1
-        probe = retain_from - vac.get("min_drop", _ANCHOR_EVERY)
-        if probe >= 1 and os.path.exists(_manifest_path(root, probe)):
-            vacuum(root, retain_from)
-    return current
 
 
 def start_dedup_versioned_sink(
@@ -4045,7 +3429,7 @@ def read_changes(
         m = read_manifest(root, v, need=())
         prev = read_manifest(root, v - 1, need=()) if v > 1 else {}
         typed: DataFrame | None = None
-        if m["op"] in ("evolve", "policy"):
+        if m["op"] == "evolve":
             continue  # metadata-only commits read as silence
         if m["op"] in _REWRITE_OPS:
             # physical rewrites preserve the logical row set by

@@ -85,15 +85,6 @@ ANOMALY_OUTPUT_SCHEMA = (
 ANOMALY_STATE_SCHEMA = "vals array<double>"
 
 
-def _round_half_up6(x: float) -> float:
-    """Spark/DuckDB ROUND(x, 6) parity: half-up away from zero. Python's
-    round() is banker's and would diverge exactly at ties."""
-    import math
-
-    s = -1.0 if x < 0 else 1.0
-    return s * math.floor(abs(x) * 1e6 + 0.5) / 1e6
-
-
 def stateful_anomalies(
     events: DataFrame,
     lookback: int = 20,
@@ -117,7 +108,7 @@ def stateful_anomalies(
     from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
     def _r6(x: "np.ndarray") -> "np.ndarray":
-        # vectorized _round_half_up6: identical IEEE ops elementwise
+        # round half away from zero to 6 digits, elementwise
         return np.where(x < 0, -1.0, 1.0) * np.floor(np.abs(x) * 1e6 + 0.5) / 1e6
 
     def update(

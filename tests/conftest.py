@@ -29,7 +29,6 @@ SLOW_TESTS = frozenset({
     "test_invariants_r4.py::test_funnel_is_monotone_nonincreasing",
     "test_invariants_r4.py::test_gap_fill_accounting_invariant",
     "test_round11_ops.py::test_lazy_scan_prune_membership_equivalence",
-    "test_round11_ops.py::test_vacuum_checkpoint_honors_txn_retention_policy",
     "test_round13_ops.py::test_rewrite_commits_silent_without_key_cols",
     "test_round6_ops.py::test_ann_serving_over_persisted_index",
     "test_round8_ops.py::test_key_filters_survive_zorder_and_compact",
@@ -64,24 +63,15 @@ SLOW_TESTS = frozenset({
     "test_invariants_r5.py::test_ks_drift_cache_is_collectable",
     "test_operators.py::test_ann_recall_floor_on_clustered_fixture",
     "test_operators.py::test_ivfpq_batch_topk_exact_mode_and_adc_parity",
-    "test_operators.py::test_ivfpq_delete_tombstones_and_compaction",
     "test_operators.py::test_nsw_graph_index_recall_and_pruning",
     "test_round10_ops.py::test_anchor_claim_race_loser_unlinks_sidecar",
-    "test_round10_ops.py::test_checkpoint_policy_prunes_at_anchor_cadence",
-    "test_round10_ops.py::test_checkpoint_txn_retention_bounds_map",
+    "test_round10_ops.py::test_auto_checkpoint_at_anchor_cadence",
     "test_round10_ops.py::test_key_filter_saturation_rebuild_recovers_pruning",
     "test_round10_ops.py::test_parquet_anchor_equals_json_anchor",
     "test_round10_ops.py::test_parquet_anchor_fold_and_hydrate",
     "test_round10_ops.py::test_parquet_anchor_never_carries_dead_files",
-    "test_round10_ops.py::test_reader_mid_vacuum_retries_onto_reanchored_manifest",
     "test_round10_ops.py::test_rollback_across_parquet_anchor_boundary",
     "test_round10_ops.py::test_rows_map_recorded_delta_folded_and_anchored",
-    "test_round10_ops.py::test_table_policy_survives_checkpoint_and_anchor_fold",
-    "test_round10_ops.py::test_table_policy_vacuum_gate",
-    "test_round10_ops.py::test_vacuum_keep_set_matches_bruteforce_union",
-    "test_round10_ops.py::test_vacuum_reanchors_to_parquet_form",
-    "test_round10_ops.py::test_vacuum_spares_inflight_future_commit_files",
-    "test_round10_ops.py::test_zorder_not_starved_by_small_dv_debt",
     "test_round13_ops.py::test_change_feed_replays_table_property",
     "test_round13_ops.py::test_read_kf_cells_live_only_default",
     "test_round13_ops.py::test_rewrite_skip_does_not_diff",
@@ -96,17 +86,13 @@ SLOW_TESTS = frozenset({
     "test_round6_ops.py::test_hnsw_upsert_flood_equals_brute_over_merged_corpus",
     "test_round6_ops.py::test_hnsw_upsert_levels_match_fresh_build",
     "test_round6_ops.py::test_stream_index_absorb_replay_is_noop",
-    "test_round8_ops.py::test_compact_text_index_refuses_pending_txn",
     "test_round8_ops.py::test_key_membership_filters_prune_unclustered_merges",
     "test_round9_ops.py::test_chunked_probe_matches_unchunked",
     "test_round9_ops.py::test_compound_key_merge_prunes_on_selective_column",
     "test_round9_ops.py::test_delta_manifests_fold_maps_and_hydrate",
     "test_round9_ops.py::test_manifest_metadata_never_carries_dead_files",
     "test_round9_ops.py::test_rollback_map_invariant_across_anchor_boundary",
-    "test_round9_ops.py::test_vacuum_reanchors_oldest_retained_manifest",
     "test_scd2.py::test_merge_equals_batch_rebuild[splits2]",
-    "test_search.py::test_compact_folds_tombstones_probe_unchanged",
-    "test_search.py::test_compact_gc_txn_journal",
     "test_search.py::test_delete_decrements_and_tombstones",
     "test_search.py::test_delete_drops_zero_df_terms_and_adjusts_stats",
     "test_search.py::test_delete_txn_crash_rollback_and_replay",

@@ -149,11 +149,9 @@ def test_export_writes_json(spark, query_log, dims, tmp_path):
     assert {"normalized_query", "frequency", "dbt_models_used"} <= set(rows[0])
 
 
-def test_connection_probe_and_level_keys(spark):
-    from querysight_spark.session import test_connection
+def test_cache_and_level_keys():
     from querysight_spark.sources.snapshot_cache import cache_key, level_key
 
-    assert test_connection(spark)
     assert cache_key("a", 1) == cache_key("a", 1) != cache_key("a", 2)
     k1 = level_key("level2", "win", schema_fingerprint="v1")
     k2 = level_key("level2", "win", schema_fingerprint="v2")

@@ -85,28 +85,3 @@ def test_export_and_generate_model(logs_dir, dbt_dir, tmp_path):
     # staging.raw_events is uncovered by the fixture project → model emitted
     assert any(f.startswith("stg_") and f.endswith(".sql") for f in files)
 
-
-def test_engine_config_validate():
-    from querysight_spark.config import EngineConfig
-
-    ok, probs = EngineConfig(cache_dir="/tmp/c", dbt_project_path="/tmp/p").validate()
-    assert ok and probs == []
-
-    ok, probs = EngineConfig().validate()
-    assert not ok and set(probs) == {"cache_dir", "dbt_project_path"}
-
-    ok, probs = EngineConfig(
-        cache_dir="/c", dbt_project_path="/p",
-        jdbc_url="jdbc:derby:memory:x", jdbc_table="  ",
-        llm_base_url="http://localhost:1", llm_model="",
-        days=0, min_frequency=0, sample_fraction=1.5, page_size=0,
-    ).validate()
-    assert not ok
-    assert {"jdbc_table", "llm_model"} <= set(probs)
-    assert any(p.startswith("days") for p in probs)
-    assert any(p.startswith("sample_fraction") for p in probs)
-
-    # feature groups are optional when absent
-    ok, _ = EngineConfig(cache_dir="/c", dbt_project_path="/p",
-                         require=("cache_dir",)).validate()
-    assert ok

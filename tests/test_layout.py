@@ -65,72 +65,6 @@ def test_partitioned_write_prunes(spark, tmp_path):
     # partition filter is applied at the file-index level, not as a row filter
     assert "PartitionFilters: [isnotnull(part" in plan or "part#" in plan
 
-def test_zorder_write_prunes_on_both_columns(spark, tmp_path):
-    """write_zordered: multi-column clustering must leave parquet row-group
-    min/max stats tight on BOTH clustering columns — a single-column sort
-    only helps its own column. Measured directly from the file footers:
-    the fraction of row groups a point predicate on each column could
-    prune. Data content must be unchanged."""
-    import pyarrow.parquet as pq
-
-    from querysight_spark.sources.catalog import load_table
-    from querysight_spark.sources.layout import write_zordered
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.01").select(
-        "event_id", "user_id", "value"
-    )
-    zpath = str(tmp_path / "zorder")
-    spath = str(tmp_path / "valsorted")
-    write_zordered(ev, zpath, ["user_id", "value"], num_files=1,
-                   parquet_block_bytes=16 * 1024)
-    (ev.repartition(1).sortWithinPartitions("value")
-       .write.option("parquet.block.size", str(16 * 1024)).parquet(spath))
-
-    got = spark.read.parquet(zpath)
-    assert got.count() == ev.count()
-
-    def _dsum(df):  # decimal sum: exact, order-independent
-        return df.select(F.sum(F.col("value").cast("decimal(18,2)"))).first()[0]
-
-    assert _dsum(got) == _dsum(ev)
-
-    import os
-
-    def match_fraction(path, col, point):
-        fracs = []
-        for f in os.listdir(path):
-            if not f.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(os.path.join(path, f)).metadata
-            idx = md.schema.to_arrow_schema().get_field_index(col)
-            n = md.num_row_groups
-            hit = sum(
-                1 for g in range(n)
-                if (lambda s: s.min <= point <= s.max)(
-                    md.row_group(g).column(idx).statistics)
-            )
-            fracs.append(hit / n)
-        return sum(fracs) / len(fracs)
-
-    # value-sorted layout: value prunes hard, user_id not at all
-    assert match_fraction(spath, "value", 100.0) < 0.2
-    assert match_fraction(spath, "user_id", 7) > 0.9
-    # z-ordered layout: BOTH columns prune
-    zf_user = match_fraction(zpath, "user_id", 7)
-    zf_value = match_fraction(zpath, "value", 100.0)
-    assert zf_user < 0.6, zf_user
-    assert zf_value < 0.6, zf_value
-
-
-def test_zorder_rejects_all_null_column(spark, tmp_path):
-    df = spark.createDataFrame(
-        [(1, None), (2, None)], "a int, b int"
-    )
-    from querysight_spark.sources.layout import write_zordered
-
-    with pytest.raises(ValueError, match="empty or all-NULL"):
-        write_zordered(df, str(tmp_path / "z"), ["a", "b"], num_files=1)
-
 
 def test_hive_partitioned_write_prunes_on_partition_column(spark, tmp_path):
     from pyspark.sql import functions as F

@@ -450,7 +450,7 @@ def test_multimodal_real_path_rejects_undecodable(spark):
 def test_time_rollup_reaggregation(spark):
     import datetime as dt
 
-    from querysight_spark.operators.rollup import reaggregate, time_rollup, with_avg
+    from querysight_spark.operators.rollup import reaggregate, time_rollup
 
     rows = [(dt.datetime(2024, 1, 1, h, m), float(h * 10 + m)) for h in range(3)
             for m in (0, 30)]
@@ -459,11 +459,10 @@ def test_time_rollup_reaggregation(spark):
     assert hourly.count() == 3
     h0 = hourly.orderBy("bucket_start").first()
     assert (h0.n, h0.sum, h0.min, h0.max) == (2, 30.0, 0.0, 30.0)
-    daily = with_avg(reaggregate(hourly, "1 day")).first()
+    daily = reaggregate(hourly, "1 day").first()
     assert daily.n == 6
     assert daily.sum == sum(v for _, v in rows)
     assert (daily.min, daily.max) == (0.0, 50.0)
-    assert daily.avg == daily.sum / 6
 
 
 def test_persisted_lsh_index_matches_inflight(spark, vecs, tmp_path):
@@ -612,52 +611,12 @@ def test_interleave_corpora_deterministic_weights(spark):
     assert solo == {x for x in rows if x[1] == "a"}
 
 
-def test_rollup_tier_partition_pruning(spark, tmp_path):
-    import datetime as dt
-
-    from querysight_spark.operators.rollup import (
-        read_rollup_tier,
-        reaggregate,
-        time_rollup,
-        write_rollup_tier,
-    )
-    from querysight_spark.sources.catalog import load_table
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").withColumn(
-        "value", F.col("value").cast("decimal(18,2)")
-    )
-    hourly = time_rollup(ev, "ts", "value", every="1 hour")
-    path = str(tmp_path / "tier_hourly")
-    write_rollup_tier(hourly, path)
-
-    start, end = dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 5)
-    ranged = read_rollup_tier(spark, path, start=start, end=end)
-    # the p_date predicate must prune partitions at planning time
-    plan = ranged._jdf.queryExecution().executedPlan().toString()
-    assert "PartitionFilters" in plan and "p_date" in plan
-    # pruned read re-aggregates to the same daily tier as the raw scan
-    direct = (
-        ev.where((F.col("ts") >= start) & (F.col("ts") < end))
-        .groupBy(F.date_trunc("day", "ts").alias("bucket_start"))
-        .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("sum"))
-    )
-    via_tier = reaggregate(ranged, "1 day").select("bucket_start", "n", "sum")
-    got = {tuple(r) for r in via_tier.collect()}
-    want = {tuple(r) for r in direct.collect()}
-    assert got == want
-
-
 def test_rollup_tier_incremental_upsert(spark, tmp_path):
     import datetime as dt
     import glob
     import os
 
-    from querysight_spark.operators.rollup import (
-        read_rollup_tier,
-        time_rollup,
-        upsert_rollup_tier,
-        write_rollup_tier,
-    )
+    from querysight_spark.operators.rollup import time_rollup, upsert_rollup_tier
     from querysight_spark.sources.catalog import load_table
 
     ev = load_table(spark, "events", "/root/testdata/sf0.001").withColumn(
@@ -667,7 +626,7 @@ def test_rollup_tier_incremental_upsert(spark, tmp_path):
     day4 = dt.datetime(2024, 1, 4)
     path = str(tmp_path / "tier")
     # backfill everything BEFORE day 3, then absorb day 3 incrementally
-    write_rollup_tier(time_rollup(ev.where(F.col("ts") < day3), "ts", "value"), path)
+    upsert_rollup_tier(time_rollup(ev.where(F.col("ts") < day3), "ts", "value"), path)
     files_before = {
         p: os.path.getmtime(p) for p in glob.glob(f"{path}/p_date=*/*.parquet")
     }
@@ -682,7 +641,8 @@ def test_rollup_tier_incremental_upsert(spark, tmp_path):
     # tier now equals a from-scratch rollup over the combined range
     got = {
         tuple(r)
-        for r in read_rollup_tier(spark, path, end=day4)
+        for r in spark.read.parquet(path)
+        .where(F.col("bucket_start") < day4)
         .select("bucket_start", "n")
         .collect()
     }
@@ -1200,23 +1160,6 @@ def test_cluster_keep_best(spark):
     assert keep == {2: 1, 9: 9}
 
 
-def test_merge_rollups_recombines_exactly(spark):
-    import datetime as dt
-
-    from querysight_spark.operators.rollup import merge_rollups, time_rollup
-
-    rows = [(dt.datetime(2024, 1, 1, h, m), float(h * 10 + m), f"t{h % 2}")
-            for h in range(3) for m in (0, 30)]
-    df = spark.createDataFrame(rows, "ts timestamp, value double, g string")
-    full = time_rollup(df, "ts", "value", "1 hour", ["g"])
-    a = time_rollup(df.where("minute(ts) = 0"), "ts", "value", "1 hour", ["g"])
-    b = time_rollup(df.where("minute(ts) = 30"), "ts", "value", "1 hour", ["g"])
-    merged = merge_rollups(a, b, group_cols=["g"])
-    want = {(r.bucket_start, r.g): (r.n, r.sum, r.min, r.max) for r in full.collect()}
-    got = {(r.bucket_start, r.g): (r.n, r.sum, r.min, r.max) for r in merged.collect()}
-    assert got == want and len(got) == 3
-
-
 def test_filtered_and_grouped_topk(vecs, spark):
     from querysight_spark.operators.similarity import filtered_topk, grouped_topk
 
@@ -1443,82 +1386,11 @@ def test_nsw_graph_index_recall_and_pruning(spark, tmp_path):
     assert flood_rows == truth_rows
 
 
-def test_ivfpq_delete_tombstones_and_compaction(spark, vecs, tmp_path):
-    """delete_from_ivfpq_index / compact_ivfpq_index: tombstoned ids
-    vanish from probes (remaining rows' scores untouched), re-delivered
-    deletes are no-ops, and compaction folds tombstones while leaving
-    untouched list partitions' files alone and probe results identical."""
-    import os
-
-    from querysight_spark.operators.similarity import (
-        build_ivfpq_index,
-        compact_ivfpq_index,
-        delete_from_ivfpq_index,
-        probe_ivfpq_index,
-    )
-
-    q = [1.0, 0.0, 0.0, 0.0]
-    path = str(tmp_path / "ix")
-    build_ivfpq_index(vecs, path, dim=4, n_centroids=2, m=2, k=4)
-    before = [
-        (r.vec_id, r.cosine)
-        for r in probe_ivfpq_index(
-            spark, path, q, k=8, n_probes=2, rerank_df=vecs, oversample=10
-        ).collect()
-    ]
-    doomed = {before[0][0], before[2][0]}
-    ids = spark.createDataFrame([(i,) for i in doomed], ["vec_id"])
-    assert delete_from_ivfpq_index(spark, path, ids) == len(doomed)
-    assert delete_from_ivfpq_index(spark, path, ids) == 0  # idempotent
-
-    got = [
-        (r.vec_id, r.cosine)
-        for r in probe_ivfpq_index(
-            spark, path, q, k=6, n_probes=2, rerank_df=vecs, oversample=10
-        ).collect()
-    ]
-    assert got == [p for p in before if p[0] not in doomed][:6]
-
-    def files(p):
-        out = set()
-        for root, _d, fs in os.walk(p):
-            if "_deletes" in root:
-                continue
-            out |= {
-                os.path.join(root, f) for f in fs
-                if not f.startswith(("_", ".")) and not f.endswith(".crc")
-            }
-        return out
-
-    pre = files(path)
-    hit_lists = {
-        r.list_id
-        for r in spark.read.parquet(path)
-        .where(F.col("vec_id").isin(list(doomed)))
-        .select("list_id").distinct().collect()
-    }
-    assert compact_ivfpq_index(spark, path) == len(doomed)
-    post = files(path)
-    untouched = {f for f in pre if not any(f"list_id={b}/" in f for b in hit_lists)}
-    assert untouched <= post  # unaffected lists' files survived in place
-    assert not os.path.exists(path + "/_deletes")
-    left = {r.vec_id for r in spark.read.parquet(path).collect()}
-    assert not left & doomed
-    after = [
-        (r.vec_id, r.cosine)
-        for r in probe_ivfpq_index(
-            spark, path, q, k=6, n_probes=2, rerank_df=vecs, oversample=10
-        ).collect()
-    ]
-    assert after == got
-    assert compact_ivfpq_index(spark, path) == 0
-
-
 def test_ivfpq_batch_topk_exact_mode_and_adc_parity(spark, tmp_path):
     """ivfpq_batch_topk: (a) exact mode (all lists + rerank) equals the
     exact batch_topk answer per query; (b) the ADC-only path equals the
     single-query ivfpq_topk for each query in the batch (same algebra,
-    same rounding); (c) tombstoned ids are honored."""
+    same rounding)."""
     import json
 
     import numpy as np
@@ -1526,7 +1398,6 @@ def test_ivfpq_batch_topk_exact_mode_and_adc_parity(spark, tmp_path):
     from querysight_spark.operators.similarity import (
         batch_topk,
         build_ivfpq_index,
-        delete_from_ivfpq_index,
         ivfpq_batch_topk,
         ivfpq_topk,
     )
@@ -1561,15 +1432,6 @@ def test_ivfpq_batch_topk_exact_mode_and_adc_parity(spark, tmp_path):
             [float(x) for x in row.qvec], k=5, n_probes=2,
         )
         assert by_q[row.qid] == [(r.vec_id, r.cosine) for r in single.collect()]
-
-    # tombstones: delete every current top-1 and probe again
-    doomed = sorted({v[0][0] for v in by_q.values()})
-    delete_from_ivfpq_index(
-        spark, path, spark.createDataFrame([(i,) for i in doomed], ["vec_id"])
-    )
-    adc2 = ivfpq_batch_topk(spark, path, qs, k=5, n_probes=2)
-    left = {r.vec_id for r in adc2.collect()}
-    assert not left & set(doomed)
 
     # production operating point prunes unprobed list partitions
     plan = (

@@ -186,10 +186,10 @@ def test_ks_drift_binned_approx_edges_close_to_exact(spark):
     assert approx_edges.drift == exact_edges.drift
 
 
-def test_corpus_diff_statuses_and_summary(spark):
+def test_corpus_diff_statuses(spark):
     """Hand vintages: one added, one removed, one changed, one unchanged
-    — statuses exact; summary counts and shares reconcile to 1.0."""
-    from querysight_spark.operators.quality import corpus_diff, corpus_diff_summary
+    — statuses exact."""
+    from querysight_spark.operators.quality import corpus_diff
 
     old = spark.createDataFrame(
         [(1, "a"), (2, "b"), (3, "c")], "doc_id long, text string"
@@ -199,12 +199,6 @@ def test_corpus_diff_statuses_and_summary(spark):
     )
     d = {r.id: r.status for r in corpus_diff(old, new).collect()}
     assert d == {1: "unchanged", 2: "removed", 3: "changed", 4: "added"}
-    s = {r.status: (r.n, r.share) for r in
-         corpus_diff_summary(corpus_diff(old, new)).collect()}
-    assert s == {
-        "added": (1, 0.25), "removed": (1, 0.25),
-        "changed": (1, 0.25), "unchanged": (1, 0.25),
-    }
 
 
 def test_column_profile_one_pass_and_values(spark):

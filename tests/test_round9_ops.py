@@ -2,15 +2,12 @@
 key-membership planner — no Bloom false negative when Arrow promotes a
 null-bearing int64 key batch past 2^53, the driver never reading
 sidecar bitmaps past the candidate threshold (executor-side broadcast
-probe), compound-key merges intersecting per-column filters, vacuum
-unlinking orphaned ``.tmp-`` sidecar writes, NaN keys disabling zone
-pruning (NaN join-matches NaN in Spark but is invisible to footer
-stats), and manifests never re-carrying stats/kf entries for files
-that left the snapshot."""
+probe), compound-key merges intersecting per-column filters, NaN keys
+disabling zone pruning (NaN join-matches NaN in Spark but is invisible
+to footer stats), and manifests never re-carrying stats/kf entries for
+files that left the snapshot."""
 
 from __future__ import annotations
-
-import os
 
 import pytest
 from pyspark.sql import functions as F
@@ -21,7 +18,6 @@ from querysight_spark.sources.versioned import (
     read_manifest,
     read_version,
     table_version,
-    vacuum,
     write_version,
     zorder_table,
 )
@@ -248,35 +244,6 @@ def test_compound_key_merge_prunes_on_selective_column(spark, root):
     assert out.count() == 6 * 3 * 200  # update, not duplicate
 
 
-def test_vacuum_unlinks_orphaned_tmp_sidecars(spark, root):
-    """ADVICE r8 low: a crash between the sidecar tmp write and its
-    os.replace leaves ``<file>.<col>.kf.tmp-<hex>`` forever — vacuum
-    must unlink a STALE ``.tmp-`` name (never a snapshot member).
-    ADVICE r9 low: a YOUNG tmp may be a concurrent commit's in-flight
-    rename source, so only tmps older than the grace window go."""
-    import time as _time
-
-    from querysight_spark.sources.versioned import _VACUUM_TMP_GRACE_S
-
-    write_version(spark, _kv(spark, range(10)), root,
-                  key_filter_cols=["id"])
-    files = read_manifest(root, 1)["files"]
-    orphan = os.path.join(root, files[0] + ".id.kf.tmp-deadbeef")
-    fresh = os.path.join(root, files[0] + ".id.kf.tmp-cafebabe")
-    for p in (orphan, fresh):
-        with open(p, "wb") as f:
-            f.write(b"\x00" * 64)
-    old = _time.time() - _VACUUM_TMP_GRACE_S - 60
-    os.utime(orphan, (old, old))
-    deleted = vacuum(root, retain_from=1)
-    assert orphan in deleted and not os.path.exists(orphan)
-    assert fresh not in deleted and os.path.exists(fresh), (
-        "a young tmp (possible live writer) must survive vacuum"
-    )
-    # the live snapshot is untouched
-    assert read_version(spark, root).count() == 10
-
-
 def test_nan_key_file_stays_touched(spark, root):
     """NaN keys DO join-match NaN in Spark but are invisible to
     parquet footer min/max — zone pruning must not skip a
@@ -314,67 +281,6 @@ def test_nan_key_file_stays_touched(spark, root):
     nan_rows = [r for r in rows if r["k"] != r["k"]]
     assert len(nan_rows) == 1 and nan_rows[0]["v"] == 20
     assert math.isnan(nan_rows[0]["k"])
-
-
-def test_zorder_policy_maintain_table(spark, root):
-    """VERDICT r9 ask #4: the zorder cadence knobs live ON THE TABLE
-    (``set_zorder_policy``, sticky across commits) and
-    ``maintain_table`` applies them — no-op below the drift threshold
-    (no commit, metadata only), ONE atomic zorder commit above it, and
-    the policy survives checkpoints and later commits."""
-    from querysight_spark.sources.versioned import (
-        checkpoint_manifest,
-        maintain_table,
-        read_changes,
-        set_zorder_policy,
-    )
-
-    def _append(lo):
-        df = spark.range(lo, lo + 50).select(
-            F.col("id"), (F.col("id") % 5).alias("g")
-        ).coalesce(1)
-        write_version(spark, df, root, stats_cols=["id"],
-                      key_filter_cols=["id"])
-
-    for lo in (0, 50, 100):
-        _append(lo)
-    v_pol = set_zorder_policy(
-        root, ["id", "g"], target_files=2, min_delta_files=5
-    )
-    assert read_manifest(root, v_pol)["op"] == "policy"
-    # the policy commit moves no rows: a policy-only range is all
-    # silence (the documented all-metadata contract, same as evolve)
-    # and needs no key_cols
-    with pytest.raises(ValueError, match="no changes"):
-        read_changes(spark, root, v_pol - 1, v_pol)
-    assert read_version(spark, root).count() == 150
-    # 3 drifted files < min_delta_files=5 -> no-op, no commit
-    assert maintain_table(spark, root) == v_pol
-    assert table_version(root) == v_pol
-    _append(150)
-    # a range straddling the policy commit carries ONLY the append
-    feed = read_changes(spark, root, v_pol - 1, v_pol + 1)
-    assert feed.count() == 50
-    assert feed.select("_change_type").distinct().collect()[0][0] == (
-        "insert"
-    )
-    _append(200)  # 5 drifted files now
-    v2 = maintain_table(spark, root)
-    assert v2 == table_version(root) > v_pol
-    m2 = read_manifest(root, v2)
-    assert m2["op"] == "zorder" and m2.get("policy") is not None
-    assert read_version(spark, root).count() == 250
-    # immediately after: zero drift -> metadata-only no-op again
-    assert maintain_table(spark, root) == v2
-    # the policy survives a checkpoint and later commits
-    checkpoint_manifest(root)
-    _append(250)
-    assert read_manifest(root, table_version(root))["policy"][
-        "cols"
-    ] == ["id", "g"]
-    # clearing the policy makes maintain_table a pure no-op
-    v_clear = set_zorder_policy(root, None)
-    assert maintain_table(spark, root) == v_clear
 
 
 def _raw_manifest(root, v):
@@ -455,36 +361,6 @@ def test_rollback_map_invariant_across_anchor_boundary(spark, root):
     # re-entering files keep their filters (no rebuild, no loss)
     assert set(m["kf"]) == set(target["kf"])
     assert read_version(spark, root).count() == 3
-
-
-def test_vacuum_reanchors_oldest_retained_manifest(spark, root):
-    """Vacuum drops the chain a delta manifest would hydrate through —
-    it must rewrite the oldest retained manifest as an ANCHOR first so
-    every retained version stays readable."""
-    from querysight_spark.sources.versioned import (
-        _ANCHOR_EVERY,
-        vacuum,
-    )
-
-    n = _ANCHOR_EVERY + 8
-    for i in range(n):
-        write_version(
-            spark, _kv(spark, [i]).coalesce(1), root,
-            stats_cols=["id"], key_filter_cols=["id"],
-        )
-    retain = _ANCHOR_EVERY + 3  # a DELTA version past the last anchor
-    assert _raw_manifest(root, retain).get("delta_maps")
-    vacuum(root, retain_from=retain)
-    assert not os.path.exists(
-        os.path.join(root, "_manifests", "v00000001.json")
-    )
-    raw = _raw_manifest(root, retain)
-    assert not raw.get("delta_maps"), "oldest retained must be an anchor"
-    for v in (retain, retain + 1, n):
-        m = read_manifest(root, v)
-        assert set(m["kf"]) == set(m["files"]), f"v{v} hydration broke"
-    assert read_version(spark, root, version=retain).count() == retain
-    assert read_version(spark, root).count() == n
 
 
 def test_manifest_metadata_never_carries_dead_files(spark, root):

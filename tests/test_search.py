@@ -477,47 +477,16 @@ def test_delete_drops_zero_df_terms_and_adjusts_stats(spark, corpus, tmp_path):
     assert abs(s.avgdl - (6 + 5 + 4 + 6) / 4) < 1e-9
 
 
-def test_compact_folds_tombstones_probe_unchanged(spark, corpus, tmp_path):
-    from querysight_spark.operators.search import (
-        bm25_topk_upsertable,
-        build_text_index_upsertable,
-        compact_text_index,
-        delete_from_text_index,
-    )
-
-    path = str(tmp_path / "ix")
-    build_text_index_upsertable(corpus, path, n_buckets=4)
-    delete_from_text_index(
-        spark, path, spark.createDataFrame([(2,), (5,)], ["doc_id"])
-    )
-    terms = ["spark", "query", "engine"]
-    before = [tuple(r) for r in bm25_topk_upsertable(spark, path, terms, k=5).collect()]
-    assert compact_text_index(spark, path) == 2
-    import os
-
-    assert not os.path.exists(path + "/deletes")
-    after = [tuple(r) for r in bm25_topk_upsertable(spark, path, terms, k=5).collect()]
-    assert after == before
-    # physically gone from every store
-    for part in ("postings", "forward", "lens"):
-        ids = {r.doc_id for r in spark.read.parquet(f"{path}/{part}").collect()}
-        assert not ids & {2, 5}
-    # compacting twice is a no-op
-    assert compact_text_index(spark, path) == 0
-
-
 def test_upsert_delete_algebra_random_sequences(spark, tmp_path):
     """Seeded randomized op sequences: any interleaving of upserts and
     deletes must leave the index probe equal to in-flight BM25 over the
-    surviving corpus (and compaction must not change it). The algebra
-    check for the maintenance trio."""
+    surviving corpus. The algebra check for the maintenance pair."""
     import random
 
     from querysight_spark.operators.search import (
         bm25_topk,
         bm25_topk_upsertable,
         build_text_index_upsertable,
-        compact_text_index,
         delete_from_text_index,
         upsert_text_index,
     )
@@ -568,11 +537,6 @@ def test_upsert_delete_algebra_random_sequences(spark, tmp_path):
             for r in bm25_topk_upsertable(spark, path, terms, k=30).collect()
         ]
         assert got == want, f"seed {seed}: divergence after op sequence"
-        compact_text_index(spark, path)
-        assert want == [
-            tuple(r)
-            for r in bm25_topk_upsertable(spark, path, terms, k=30).collect()
-        ], f"seed {seed}: compaction changed the probe"
 
 
 def test_upsert_txn_crash_rollback_and_replay(spark, corpus, tmp_path, monkeypatch):
@@ -704,27 +668,3 @@ def test_incremental_stats_exact_total(spark, corpus, tmp_path):
     assert (si.n_docs, si.total_dl) == (sf.n_docs, sf.total_dl)
     assert si.avgdl == sf.avgdl
 
-
-def test_compact_gc_txn_journal(spark, corpus, tmp_path):
-    """Compaction clears the txn journal; a maintenance txn replayed
-    afterwards falls back to the data-level guards (a replayed delete
-    finds its ids neither indexed nor tombstoned and no-ops)."""
-    import os
-
-    from querysight_spark.operators.search import (
-        build_text_index_upsertable,
-        compact_text_index,
-        delete_from_text_index,
-        upsert_text_index,
-    )
-
-    path = str(tmp_path / "ix")
-    build_text_index_upsertable(corpus.where("doc_id <= 3"), path, n_buckets=4)
-    upsert_text_index(spark, path, corpus.where("doc_id > 3"), txn_id="u:1")
-    ids = spark.createDataFrame([(4,)], ["doc_id"])
-    assert delete_from_text_index(spark, path, ids, txn_id="d:1") == 1
-    assert os.path.isdir(path + "/txns")
-    assert compact_text_index(spark, path) == 1
-    assert not os.path.exists(path + "/txns")
-    # replayed delete txn: marker gone, but the rows are gone too -> 0
-    assert delete_from_text_index(spark, path, ids, txn_id="d:1") == 0

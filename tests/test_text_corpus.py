@@ -383,42 +383,6 @@ def test_shard_layout_deterministic_and_balanced(spark):
         shard_layout(df, n_shards=0)
 
 
-def test_write_shards_round_trip(spark, tmp_path):
-    """The sorted-shard writer: Hive dirs shard_id=0..N-1 on disk, the
-    read-back accounting equals the in-flight accounting, totals
-    conserve the corpus, and each shard's parquet rows come back in
-    shuffle_key order."""
-    from querysight_spark.operators.textstats import (
-        shard_accounting,
-        shard_layout,
-        write_shards,
-    )
-
-    df = spark.createDataFrame(
-        [(i, 5 + i % 3) for i in range(120)], "pack_id long, n_tokens long"
-    )
-    path = str(tmp_path / "shards")
-    written = write_shards(df, path, n_shards=4).collect()
-    planned = shard_accounting(shard_layout(df, n_shards=4)).collect()
-    assert [r.asDict() for r in written] == [r.asDict() for r in planned]
-    assert sum(r.n_rows for r in written) == 120
-    assert sum(r.total_tokens for r in written) == sum(5 + i % 3 for i in range(120))
-
-    import os
-
-    dirs = sorted(d for d in os.listdir(path) if d.startswith("shard_id="))
-    assert dirs == [f"shard_id={k}" for k in range(4)]
-    back = spark.read.parquet(path)
-    for k in range(4):
-        keys = [
-            r.shuffle_key
-            for r in back.where(F.col("shard_id") == k)
-            .orderBy("shard_pos")
-            .collect()
-        ]
-        assert keys == sorted(keys)  # write order == shuffle_key order
-
-
 def test_bpe_encode_hand_corpus_and_boundaries(spark):
     """Encode must apply merges with the learner's exact fold: greedy
     left-to-right, boundary-respecting, correct on back-to-back

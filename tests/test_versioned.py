@@ -1,6 +1,6 @@
 """Versioned parquet tables (sources/versioned.py): snapshot isolation,
-time-travel, rollback-as-metadata, file-level CDC, optimistic commits,
-and vacuum reachability."""
+time-travel, rollback-as-metadata, file-level CDC and optimistic
+commits."""
 
 from __future__ import annotations
 
@@ -18,7 +18,6 @@ from querysight_spark.sources.versioned import (
     read_version,
     rollback,
     table_version,
-    vacuum,
     write_version,
 )
 
@@ -90,20 +89,6 @@ def test_optimistic_commit_skips_claimed_version(spark, root):
         json.dump({**m1, "version": 2, "op": "append", "added": []}, f)
     files = [os.path.join(root, f) for f in m1["files"]]
     assert _commit(root, files, [], [], "append") == 3
-
-
-def test_vacuum_reclaims_unreachable_only(spark, root):
-    write_version(spark, _df(spark, 0, 5), root)
-    write_version(spark, _df(spark, 100, 102), root, mode="overwrite")
-    write_version(spark, _df(spark, 102, 103), root)
-    n_before = len(_data_files(root))
-    deleted = vacuum(root, retain_from=2)
-    # v1's files (unreachable from v2+) gone, nothing else
-    assert len(deleted) > 0
-    assert len(_data_files(root)) == n_before - len(deleted)
-    assert _ids(read_version(spark, root, 2)) == [100, 101]
-    assert _ids(read_version(spark, root)) == [100, 101, 102]
-    assert not os.path.exists(os.path.join(root, "_manifests", "v00000001.json"))
 
 
 def test_bad_inputs(spark, root):
@@ -295,16 +280,13 @@ def test_compact_folds_dvs_and_preserves_untouched_files(spark, root):
     assert compact_table(spark, root) == v
 
 
-def test_vacuum_keeps_live_dv_files_and_rollback_carries_dvs(spark, root):
+def test_rollback_carries_dvs(spark, root):
     write_version(spark, _clustered(spark, 0, 50, 2), root, stats_cols=["id"])
     delete_keys(spark, root, spark.range(0, 5).select("id"))
     write_version(spark, _clustered(spark, 50, 60, 1), root)
     rollback(root, 2)  # back to the deleted-but-not-appended state
     m4 = read_manifest(root, 4)
     assert m4["dvs"] == read_manifest(root, 2)["dvs"]
-    assert _ids(read_version(spark, root)) == list(range(5, 50))
-    vacuum(root, retain_from=4)
-    # the DV sidecar survives vacuum (reachable from v4)
     assert _ids(read_version(spark, root)) == list(range(5, 50))
 
 
@@ -627,7 +609,7 @@ def test_merge_retry_after_conflict_converges(spark, root):
     assert len(got) == 105
 
 
-def test_manifest_checkpoint_bounds_planning_and_survives_vacuum(spark, root):
+def test_manifest_checkpoint_bounds_planning(spark, root):
     from querysight_spark.sources.versioned import (
         checkpoint_manifest,
         committed_txn,
@@ -647,12 +629,6 @@ def test_manifest_checkpoint_bounds_planning_and_survives_vacuum(spark, root):
     assert committed_txn(root, "nope") is None
     # idempotent retry of a checkpointed txn still no-ops
     assert write_version(spark, _df(spark, 0, 5), root, txn_id="load:2") == 3
-    # vacuum history below the checkpoint: the map still remembers
-    vacuum(root, retain_from=6)
-    assert not os.path.exists(
-        os.path.join(root, "_manifests", "v00000002.json")
-    )
-    assert committed_txn(root, "load:1") == 2
     assert table_version(root) == 7
     # a second checkpoint accumulates the delta on top of the first
     assert checkpoint_manifest(root) == 7
@@ -723,29 +699,26 @@ def test_maintenance_txns_are_idempotent(spark, root):
     assert len(_ids(read_version(spark, root))) == 90
 
 
-def test_vacuum_preserves_txn_idempotency_via_checkpoint(spark, root):
-    """A late retry of a vacuumed-away txn must still no-op: vacuum
-    checkpoints the txn map before dropping old manifests, and keeps
-    only the newest checkpoint file."""
-    from querysight_spark.sources.versioned import checkpoint_manifest
+def test_txn_idempotency_across_checkpoints(spark, root):
+    """A superseding checkpoint carries the previous one's txn map, so a
+    late retry of a txn from before both still no-ops."""
+    from querysight_spark.sources.versioned import (
+        _latest_checkpoint,
+        checkpoint_manifest,
+    )
 
     for k in range(5):
         write_version(spark, _df(spark, k * 3, k * 3 + 3), root,
                       txn_id=f"b:{k}")
     checkpoint_manifest(root)  # an older checkpoint to supersede
     write_version(spark, _df(spark, 50, 53), root, txn_id="b:5")
-    vacuum(root, retain_from=5)
-    assert not os.path.exists(
-        os.path.join(root, "_manifests", "v00000002.json")
-    )
-    # retried txns from the vacuumed era: no-op, no new version
+    assert checkpoint_manifest(root) == 6
+    assert _latest_checkpoint(root)["txns"] == {
+        f"b:{k}": k + 1 for k in range(6)
+    }
+    # retried txn from before both checkpoints: no-op, no new version
     assert write_version(spark, _df(spark, 0, 3), root, txn_id="b:1") == 2
     assert table_version(root) == 6
-    ckpts = [
-        f for f in os.listdir(os.path.join(root, "_manifests"))
-        if f.startswith("ckpt-")
-    ]
-    assert len(ckpts) == 1
     assert _ids(read_version(spark, root)) == sorted(
         list(range(15)) + [50, 51, 52]
     )
@@ -799,9 +772,9 @@ def test_compact_preserves_reinserted_rows(spark, root):
     assert read_changes(spark, root, v - 1, v, key_cols=["id"]).count() == 0
 
 
-def test_open_ended_prune_and_vacuum_validation(spark, root):
+def test_open_ended_prune(spark, root):
     """pruned_files/read_version treat a None bound as open-ended
-    (col >= lo or col <= hi); vacuum rejects retain_from < 1 loudly."""
+    (col >= lo or col <= hi)."""
     from querysight_spark.sources.versioned import pruned_files
 
     df = spark.range(0, 100).select(
@@ -818,8 +791,6 @@ def test_open_ended_prune_and_vacuum_validation(spark, root):
     assert _ids(read_version(spark, root, prune=("id", None, 19))) == list(
         range(20)
     )
-    with pytest.raises(ValueError, match="retain_from"):
-        vacuum(root, 0)
 
 
 def test_schema_evolution_column_add(spark, root):
@@ -997,22 +968,11 @@ def test_maintenance_preserves_evolved_columns(spark, root):
     assert _ids(cur) == list(range(2, 16))
 
 
-def test_table_history_and_timestamp_travel(spark, root):
-    """DESCRIBE HISTORY rows newest-first with ops/deltas/ts; TIMESTAMP
-    AS OF resolves the latest commit at-or-before a wall-clock point and
-    refuses timestamps older than retained history."""
-    import time as _time
+def test_table_history(spark, root):
+    """DESCRIBE HISTORY rows newest-first with ops/deltas/ts."""
+    from querysight_spark.sources.versioned import delete_keys, table_history
 
-    from querysight_spark.sources.versioned import (
-        delete_keys,
-        table_history,
-        version_at_timestamp,
-    )
-
-    t0 = _time.time() - 1.0
     write_version(spark, _df(spark, 0, 5), root, txn_id="a:1")
-    t_mid = _time.time()
-    _time.sleep(0.02)
     write_version(spark, _df(spark, 5, 8), root)
     delete_keys(spark, root, spark.range(0, 2).select("id"))
     hist = table_history(root)
@@ -1021,13 +981,6 @@ def test_table_history_and_timestamp_travel(spark, root):
     assert hist[0]["n_dvs"] >= 1 and hist[1]["n_dvs"] == 0
     assert hist[2]["txn_id"] == "a:1"
     assert all(r["ts"] is not None for r in hist)
-    assert version_at_timestamp(root, t_mid) == 1
-    assert version_at_timestamp(root, _time.time()) == 3
-    assert _ids(
-        read_version(spark, root, version_at_timestamp(root, t_mid))
-    ) == [0, 1, 2, 3, 4]
-    with pytest.raises(ValueError, match="no retained commit"):
-        version_at_timestamp(root, t0)
 
 
 def test_zorder_keeps_prior_stats_cols_prunable(spark, root):

@@ -46,7 +46,7 @@ def audit_dv_vintages(root: str) -> list[dict]:
 
     Pure driver-side metadata — one hydrated-manifest read per
     retained version (cached), no data reads; cost is O(retained
-    versions x live DVs), the same order as a vacuum keep-set walk.
+    versions x live DVs).
     """
     from querysight_spark.sources.versioned import (
         _commit_of,
@@ -58,7 +58,7 @@ def audit_dv_vintages(root: str) -> list[dict]:
     latest = table_version(root)
     lo = latest
     while lo > 1 and os.path.exists(_manifest_path(root, lo - 1)):
-        lo -= 1  # vacuum drops older manifests; audit what remains
+        lo -= 1  # tables from older engine versions may lack early manifests
 
     def _eff(m: dict, d: str) -> int:
         return m.get("dvv", {}).get(d, _commit_of(d))

@@ -209,89 +209,6 @@ def main() -> None:
                     }
                 )
             )
-        # maintain_table cadence (round 9): a scheduler calling it
-        # after EVERY batch must pay ~a manifest read while drift is
-        # below the stored policy's threshold, and exactly one zorder
-        # commit when it crosses.
-        from querysight_spark.sources.versioned import (
-            maintain_table,
-            set_zorder_policy,
-        )
-
-        root = zorder_base("policy_cadence")
-        set_zorder_policy(
-            root, ["x", "y"], target_files=N_FILES, min_delta_files=8
-        )
-        gated_ms: list[float] = []
-        fired_sec = None
-        for _b in range(10):
-            delta = spark.range(0, 1000).select(
-                ((F.col("id") * 7919) % N_ROWS).alias("x"),
-                ((F.col("id") * 104729) % N_ROWS).alias("y"),
-                F.lit("delta").alias("pad"),
-            ).coalesce(1)
-            write_version(spark, delta, root)
-            before = table_version(root)
-            t0 = time.time()
-            after = maintain_table(spark, root)
-            dt = time.time() - t0
-            if after > before:
-                fired_sec = round(dt, 2)
-            else:
-                gated_ms.append(dt * 1000)
-        print(
-            json.dumps(
-                {
-                    "op": "maintain_cadence",
-                    "gated_calls": len(gated_ms),
-                    "gated_mean_ms": round(
-                        sum(gated_ms) / max(1, len(gated_ms)), 1
-                    ),
-                    "gated_max_ms": round(max(gated_ms), 1),
-                    "fired_once_sec": fired_sec,
-                }
-            )
-        )
-        # FULL sectioned policy (round 10): optimize + compact +
-        # vacuum + zorder gates all stored; while every threshold is
-        # quiet the per-batch maintain_table call must stay metadata-
-        # only ~ms — the manifest rows map replaces the per-call
-        # footer sweep.
-        from querysight_spark.sources.versioned import set_table_policy
-
-        root = zorder_base("policy_full")
-        set_table_policy(
-            root,
-            zorder={"cols": ["x", "y"], "target_files": N_FILES,
-                    "min_delta_files": 64},
-            optimize={"min_rows_per_file": 100,
-                      "min_small_files": 1_000},
-            compact={"max_dv_fraction": 0.5},
-            vacuum={"retain_last": 100_000},
-        )
-        full_gated_ms: list[float] = []
-        for _b in range(10):
-            delta = spark.range(0, 1000).select(
-                ((F.col("id") * 7919) % N_ROWS).alias("x"),
-                ((F.col("id") * 104729) % N_ROWS).alias("y"),
-                F.lit("delta").alias("pad"),
-            ).coalesce(1)
-            write_version(spark, delta, root)
-            t0 = time.time()
-            maintain_table(spark, root)
-            full_gated_ms.append((time.time() - t0) * 1000)
-        print(
-            json.dumps(
-                {
-                    "op": "maintain_full_policy_gated",
-                    "files": table_version(root),
-                    "gated_mean_ms": round(
-                        sum(full_gated_ms) / len(full_gated_ms), 1
-                    ),
-                    "gated_max_ms": round(max(full_gated_ms), 1),
-                }
-            )
-        )
     finally:
         shutil.rmtree(work, ignore_errors=True)
     spark.stop()

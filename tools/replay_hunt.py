@@ -2,7 +2,7 @@
 
 The in-repo hypothesis property (tests/test_round14_ops.py) runs 6
 DERANDOMIZED examples of length <= 4 per CI run — deliberately cheap.
-This harness runs the same floor-tracked replay protocol over random
+This harness runs the same replay protocol over random
 seeds with op logs up to length 6, which is what caught X203 (seed 33:
 delete -> compact -> rollback re-adding DV-covered files) and X204
 (seed 94: DV-only rollback transitions) after the derandomized
@@ -17,7 +17,7 @@ from querysight_spark.session import get_spark
 from querysight_spark.sources.versioned import (
     compact_table, delete_keys, evolve_table_schema, merge_into,
     optimize_table, read_changes, read_version, rollback, table_version,
-    vacuum, write_version, zorder_table,
+    write_version, zorder_table,
 )
 
 spark = get_spark(app_name="replay-hunt", master="local[8]", shuffle_partitions=8)
@@ -25,14 +25,13 @@ spark = get_spark(app_name="replay-hunt", master="local[8]", shuffle_partitions=
 def _kv(ids):
     return spark.createDataFrame([(int(i), int(i) * 10) for i in ids], "id long, v long")
 
-OPS = ["append", "merge", "delete", "compact", "optimize", "zorder", "evolve", "rollback", "vacuum", "overwrite"]
+OPS = ["append", "merge", "delete", "compact", "optimize", "zorder", "evolve", "rollback", "overwrite"]
 
 def run_case(seed):
     rng = random.Random(seed)
     ops = [(rng.choice(OPS), rng.randint(0, 5)) for _ in range(rng.randint(2, 6))]
     root = os.path.join(tempfile.mkdtemp(), "t")
     write_version(spark, _kv(range(0, 12)).repartition(2), root)
-    floor = 1
     for kind, arg in ops:
         try:
             if kind == "append":
@@ -59,22 +58,18 @@ def run_case(seed):
                     spark, _kv(range(arg, arg + 8)).repartition(2), root,
                     mode="overwrite",
                 )
-            elif kind == "rollback":
+            else:  # rollback
                 cur = table_version(root)
-                target = max(floor, cur - max(1, arg % 4))
+                target = max(1, cur - max(1, arg % 4))
                 if target < cur:
                     rollback(root, target)
-            else:
-                rf = max(floor, table_version(root) - max(1, arg % 3))
-                vacuum(root, rf)
-                floor = rf
         except ValueError:
             continue
     V = table_version(root)
     def snap(v):
         return {r["id"]: r["v"] for r in read_version(spark, root, v).collect()}
-    prev = snap(floor)
-    for v in range(floor + 1, V + 1):
+    prev = snap(1)
+    for v in range(2, V + 1):
         cur = snap(v)
         try:
             events = read_changes(spark, root, v - 1, v, key_cols=["id"]).collect()
