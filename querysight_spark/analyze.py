@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import datetime as dt
 from dataclasses import dataclass, field
-from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 

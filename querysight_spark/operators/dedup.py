@@ -407,7 +407,6 @@ def ngram_jaccard_pairs(
     shingle_size: int = 3,
     threshold: float = 0.5,
     max_shingle_df: int | None = None,
-    hash_shingles: bool = True,
 ) -> DataFrame:
     """n-gram Jaccard near-dup pairs via a shingle inverted index:
     explode shingles → self-join on shingle → |A∩B| per pair →
@@ -424,12 +423,11 @@ def ngram_jaccard_pairs(
     for one query). At 100 TB, write the index to a temp parquet table
     instead of caching (same plan shape, executor-memory-independent).
 
-    ``hash_shingles`` (default) joins on ``xxhash64(shingle)`` instead of
-    the shingle string — 2× faster shuffle/compare (measured at sf0.1). A
-    64-bit collision could perturb one intersection count; with d distinct
-    shingles P ≈ d²/2⁶⁵ (~1e-11 at 10⁴·⁵, ~3% only past 10⁹ distinct
-    shingles, and even then jaccard moves by 1/|union|). Set False for the
-    strictly-exact string join.
+    The join key is ``xxhash64(shingle)`` rather than the shingle string
+    — 2× faster shuffle/compare (measured at sf0.1). A 64-bit collision
+    could perturb one intersection count; with d distinct shingles
+    P ≈ d²/2⁶⁵ (~1e-11 at 10⁴·⁵, ~3% only past 10⁹ distinct shingles,
+    and even then jaccard moves by 1/|union|).
 
     Pair generation is posting-list style: one groupBy(shingle) builds the
     sorted doc list per shingle, then a JVM-side nested ``transform`` emits
@@ -447,9 +445,7 @@ def ngram_jaccard_pairs(
     df = floor_parallelism(df)
     sh = df.select(
         F.col(id_col), F.explode(_shingles(text_col, shingle_size)).alias("sh")
-    )
-    if hash_shingles:
-        sh = sh.select(F.col(id_col), F.xxhash64("sh").alias("sh"))
+    ).select(F.col(id_col), F.xxhash64("sh").alias("sh"))
     # r15 (VERDICT r14 ask #7): localCheckpoint instead of persist — the
     # blocks release when the result frame is dropped (ContextCleaner on
     # the checkpoint RDD) instead of accumulating in the session cache
@@ -843,13 +839,12 @@ def embedding_cosine_duplicates_auto(
     vec_col: str = "embedding",
     threshold: float = 0.95,
     expected_n: int | None = None,
-    crossover: int = COSINE_AUTO_CROSSOVER,
     **lsh_kwargs,
 ) -> DataFrame:
     """Cosine near-dup pairs with the plan picked FOR the caller
-    (round-6 continuity item #4): exact all-pairs blocked GEMM below
-    ``crossover`` vectors, sign-LSH bucket prefilter above — the
-    measured ~1e5 boundary from SCALE.md's growth curves, so callers get
+    (round-6 continuity item #4): exact all-pairs blocked GEMM up to
+    ``COSINE_AUTO_CROSSOVER`` vectors, sign-LSH bucket prefilter above —
+    the measured ~1e5 boundary from SCALE.md's growth curves, so callers get
     the right plan without reading that file. ``expected_n`` accepts any
     row-count estimate (parquet footer metadata, catalog stats); when
     omitted one count job runs — the same estimate then sizes the exact
@@ -858,7 +853,7 @@ def embedding_cosine_duplicates_auto(
     pairs below ~0.99 cosine); dd06's equality-to-exact holds for its
     near-verbatim duplicate construction, which is the dedup use case."""
     n = expected_n if expected_n is not None else df.count()
-    if n <= crossover:
+    if n <= COSINE_AUTO_CROSSOVER:
         return embedding_cosine_duplicates(
             df, id_col, vec_col, threshold, expected_n=n
         )

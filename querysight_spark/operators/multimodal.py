@@ -544,7 +544,8 @@ def _real_features(
 
 
 def extract_features(media: DataFrame, fake: bool = True) -> DataFrame:
-    """mapInPandas feature extraction over MEDIA_SCHEMA rows.
+    """mapInPandas feature extraction over media rows (the
+    ``media_from_documents`` shape).
 
     Batch shape: input record batches with (asset_id, media_type, payload,
     meta); output FEATURE_SCHEMA. ``fake=True`` uses the md5-seeded
@@ -732,10 +733,6 @@ _IMG_STATS_SCHEMA = (
     "asset_id string, width int, height int, "
     "n_units long, sum_v long, sumsq_v long, min_v long, max_v long"
 )
-_AUD_STATS_SCHEMA = (
-    "asset_id string, sample_rate int, "
-    "n_units long, sum_v long, sumsq_v long, min_v long, max_v long"
-)
 
 
 def _int_stats(v: np.ndarray) -> tuple[int, int, int, int, int]:
@@ -858,8 +855,9 @@ def payload_stats(media: DataFrame) -> DataFrame:
 
 
 def media_from_documents(docs: DataFrame) -> DataFrame:
-    """Build a MEDIA_SCHEMA table from the documents fixture (payload =
-    utf-8 text bytes) so multimodal plumbing is testable on driver testdata."""
+    """Build a media table (asset_id, media_type, payload, meta) from the
+    documents fixture (payload = utf-8 text bytes) so multimodal plumbing
+    is testable on the testdata tables."""
     return docs.select(
         F.concat(F.lit("asset-"), F.col("doc_id").cast("string")).alias("asset_id"),
         F.element_at(

@@ -196,7 +196,6 @@ def ks_drift_binned(
     group_b: str,
     n_bins: int = 64,
     critical_coeff: float = 1.358,
-    relative_error: float | None = None,
 ) -> DataFrame:
     """``ks_drift``'s scale path: bucket by interpolated quantile edges
     of the combined sample, then run the KS max-gap on the <= ``n_bins``
@@ -210,16 +209,9 @@ def ks_drift_binned(
     the corpus size.
 
     Edge computation is the remaining cardinality-sensitive stage: the
-    default EXACT ``percentile`` (the vx02 percentile <-> quantile_cont
-    parity that makes the an06 gate hash-checkable) merges a
-    distinct-value counts map on one final task — fine for bounded-
-    distinct metrics. For genuinely unbounded-cardinality metrics set
-    ``relative_error`` (e.g. 0.001): edges then come from
-    ``approx_percentile`` — a bounded-memory Greenwald-Khanna sketch,
-    mergeable across partitions — at the cost of edge placement shifting
-    by at most relative_error of the rank range (the KS bound gains that
-    epsilon) and of exact cross-engine replay, which is why the gate
-    entry keeps the exact default."""
+    EXACT ``percentile`` (the vx02 percentile <-> quantile_cont parity
+    that makes the an06 gate hash-checkable) merges a distinct-value
+    counts map on one final task — fine for bounded-distinct metrics."""
     from pyspark.sql import Window
 
     tagged = df.where(F.col(group_col).isin([group_a, group_b])).select(
@@ -227,12 +219,7 @@ def ks_drift_binned(
         (F.col(group_col) == group_a).cast("long").alias("a"),
     )
     probs = ", ".join(str(i / n_bins) for i in range(1, n_bins))
-    if relative_error is None:
-        edge_expr = f"percentile(v, array({probs}))"
-    else:
-        acc = max(2, int(round(1.0 / float(relative_error))))
-        edge_expr = f"approx_percentile(v, array({probs}), {acc})"
-    edges = tagged.agg(F.expr(edge_expr).alias("edges"))
+    edges = tagged.agg(F.expr(f"percentile(v, array({probs}))").alias("edges"))
     # bucket = how many edges the value has passed (0..n_bins-1): the
     # 1-row edge array broadcasts onto the stream, bucketing is one
     # JVM-side size(filter(...)) per row, and the heavy groupBy shuffles

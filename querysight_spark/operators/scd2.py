@@ -128,7 +128,6 @@ def merge_scd2(
     key: str,
     value_cols: Sequence[str],
     effective_col: str,
-    broadcast_delta: bool = True,
 ) -> DataFrame:
     """Incremental SCD2 MERGE: fold one change batch into an existing
     history snapshot (the output shape of ``apply_scd2_history``).
@@ -145,12 +144,9 @@ def merge_scd2(
     (pinned by pytest across randomized batch splits, and by the wh02
     gate entry against the batch oracle).
 
-    Scale: ``broadcast_delta`` (default) broadcasts the delta key set so
-    the dimension-side semi/anti joins stay map-side — right for the
-    normal small-batch MERGE; disable for rare huge backfill batches."""
-    delta_keys = updates.select(key).distinct()
-    if broadcast_delta:
-        delta_keys = F.broadcast(delta_keys)
+    Scale: the delta key set is broadcast so the dimension-side
+    semi/anti joins stay map-side — right for the small-batch MERGE."""
+    delta_keys = F.broadcast(updates.select(key).distinct())
     untouched = current.join(delta_keys, key, "left_anti")
     touched = current.join(delta_keys, key, "left_semi")
     closed = touched.where(~F.col("is_current"))

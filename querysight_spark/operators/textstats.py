@@ -467,7 +467,6 @@ def contamination_check(
     shingle_size: int = 3,
     id_col: str = "doc_id",
     text_col: str = "text",
-    hash_shingles: bool = False,
 ) -> DataFrame:
     """Train/test contamination detection: for every test document, how
     many of its word n-gram OCCURRENCES also occur anywhere in the train
@@ -486,8 +485,7 @@ def contamination_check(
     one distinct (its own aggregation exchange) and the overlap is a
     shuffled equi-join on the shingle — no pairwise doc×doc work, cost ∝
     corpus shingle count, skew bounded because vocab rows are distinct.
-    ``hash_shingles`` joins on xxhash64(shingle) to halve shuffle width
-    at a ~d²/2⁶⁵ collision risk, same trade as ngram_jaccard_pairs."""
+    The join is on the shingle string, exact (no hash-collision risk)."""
     from querysight_spark.operators.dedup import _shingles
 
     from pyspark.storagelevel import StorageLevel
@@ -498,9 +496,6 @@ def contamination_check(
     vocab = train.select(
         F.explode(_shingles(text_col, shingle_size)).alias("sh")
     ).distinct()
-    if hash_shingles:
-        t_sh = t_sh.select(id_col, F.xxhash64("sh").alias("sh"))
-        vocab = vocab.select(F.xxhash64("sh").alias("sh")).distinct()
     # the test-side shingles feed the size agg AND the vocab join;
     # persist them (test sets are the small side) to avoid re-shingling
     t_sh = t_sh.persist(StorageLevel.MEMORY_AND_DISK)

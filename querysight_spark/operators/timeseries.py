@@ -295,8 +295,6 @@ def ewma(
     tiebreak_col: str = "event_id",
     value_col: str = "value",
     alpha: float = 0.25,
-    method: str = "fold",
-    block_size: int | None = None,
 ) -> DataFrame:
     """Per-row exponentially-weighted moving average per key:
     y_1 = x_1, y_t = alpha * x_t + (1 - alpha) * y_{t-1} over the
@@ -312,37 +310,11 @@ def ewma(
 
     One shuffle (the groupBy), map-side everything else. State is one
     key's series in memory — same per-key boundedness contract as the
-    session/window operators; for million-row single keys use
-    ``method="closed_form"`` (below) and accept last-digit float
-    differences vs the fold.
-
-    ``method`` picks the formulation:
-
-    - ``"fold"`` (default): the bit-deterministic left fold above. Note
-      the accumulator-array append makes it O(n^2) in the KEY length —
-      fine for the per-user series here, painful for million-row keys.
-    - ``"closed_form"``: block-renormalized geometric prefix sums.
-      Writing c_1 = x_1, c_j = alpha * x_j (j >= 2), the recursion is
-      exactly y_i = sum_{j<=i} c_j q^{i-j} with q = 1 - alpha; rows are
-      split into per-key blocks of ``block_size`` so the in-block part
-      is one codegen window cumsum of c_j q^{-r_j} (renormalized by
-      q^{r_i}, exponents bounded by the block size — no overflow), and
-      the cross-block carry y_end(b) = u_end(b) + q^{size_b} y_end(b-1)
-      is a fold over the tiny per-block summary list (n/block_size
-      elements of per-key state instead of n). O(n) work, vectorized
-      JVM throughput; float op ORDER differs from the fold, so expect
-      ~1e-12 relative differences (pinned by pytest tolerance + a
-      SCALE.md timing row on a long-key fixture). The default block
-      size leaves ~100 decades of magnitude headroom — series with
-      |value| beyond ~1e100 should use the fold (or pass a smaller
-      ``block_size``), or the renormalized cumsum saturates to inf.
+    session/window operators. The accumulator-array append makes the
+    fold O(n^2) in the KEY length — fine for the per-user series here,
+    painful for million-row keys; the ts05/ts06 oracles pin the fold's
+    bit-exact op order, so no reordered formulation can replace it.
     """
-    if method not in ("fold", "closed_form"):
-        raise ValueError(f"method must be 'fold' or 'closed_form', got {method!r}")
-    if method == "closed_form":
-        return _ewma_closed_form(
-            df, key_col, ts_col, tiebreak_col, value_col, alpha, block_size
-        )
     a = float(alpha)
     seq = df.groupBy(key_col).agg(
         F.sort_array(
@@ -373,111 +345,6 @@ def ewma(
     )
 
 
-def _ewma_closed_form(
-    df: DataFrame,
-    key_col: str,
-    ts_col: str,
-    tiebreak_col: str,
-    value_col: str,
-    alpha: float,
-    block_size: int | None,
-) -> DataFrame:
-    """The O(n) long-key path behind ``ewma(..., method="closed_form")``
-    — see that docstring for the contract. Derivation: with c_1 = x_1,
-    c_j = alpha*x_j and q = 1-alpha, y_i = sum_{j<=i} c_j q^(i-j).
-    Splitting j at the block boundary gives y_i = u_i + q^(r_i+1) *
-    y_end(b-1), where u_i = q^(r_i) * cumsum(c_j q^(-r_j)) is the
-    in-block renormalized prefix (a codegen window — exponents bounded
-    by the block size, which is capped so q^(-B) stays far from double
-    overflow) and the block-end values follow the B-times-shorter
-    recursion y_end(b) = u_end(b) + q^(size_b) * y_end(b-1), folded
-    over the per-key block-summary list."""
-    import math
-
-    from pyspark.sql import Window
-
-    a = float(alpha)
-    q = 1.0 - a
-    if q == 0.0:  # alpha == 1: the EWMA is the series itself
-        v = F.col(value_col).cast("double")
-        return df.select(
-            F.col(key_col), F.col(tiebreak_col), F.col(ts_col),
-            v.alias(value_col), v.alias("ewma"),
-        )
-    if block_size is None:
-        # the in-block term is c_j * q^(-r_j): cap the exponent at ~1e200
-        # so values up to ~1e100 in magnitude keep the cumsum finite
-        # (1e308 double ceiling minus 100 decades of data headroom); the
-        # fold path has no such bound — use it for astronomically-scaled
-        # series, or normalize first
-        block_size = max(2, min(256, int(200.0 / max(1e-8, -math.log10(q)))))
-    elif int(block_size) < 1:
-        raise ValueError(f"block_size must be >= 1, got {block_size}")
-    B = int(block_size)
-
-    w_order = Window.partitionBy(key_col).orderBy(ts_col, tiebreak_col)
-    rows = (
-        df.select(
-            F.col(key_col), F.col(ts_col), F.col(tiebreak_col),
-            F.col(value_col).cast("double").alias("v"),
-        )
-        .withColumn("i", F.row_number().over(w_order))
-        .withColumn("b", ((F.col("i") - 1) / B).cast("long"))
-        .withColumn("r", ((F.col("i") - 1) % B).cast("long"))
-        .withColumn(
-            "c",
-            F.when(F.col("i") == 1, F.col("v")).otherwise(F.lit(a) * F.col("v")),
-        )
-    )
-    wb = (
-        Window.partitionBy(key_col, "b")
-        .orderBy("r")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    rows = (
-        rows.withColumn(
-            "U", F.sum(F.col("c") * F.pow(F.lit(q), -F.col("r"))).over(wb)
-        )
-        .withColumn("u", F.pow(F.lit(q), F.col("r")) * F.col("U"))
-        # two consumers (block summaries + the final join) — checkpoint so
-        # the row_number/cumsum windows run once
-        .localCheckpoint(eager=True)
-    )
-    ends = rows.groupBy(key_col, "b").agg(
-        F.max_by("u", "r").alias("u_end"),
-        (F.max("r") + 1).alias("bsz"),
-    )
-    blocks = ends.groupBy(key_col).agg(
-        F.sort_array(
-            F.collect_list(F.struct(F.col("b"), F.col("u_end"), F.col("bsz")))
-        ).alias("bl")
-    )
-    folded = F.expr(
-        f"aggregate(slice(bl, 2, size(bl) - 1), "
-        f"array(double(bl[0].u_end)), "
-        f"(acc, s) -> array_append("
-        f"acc, s.u_end + pow({q!r}D, s.bsz) * element_at(acc, -1)))"
-    )
-    carries = blocks.select(
-        F.col(key_col), F.posexplode(folded).alias("bi", "yend")
-    ).select(
-        F.col(key_col), (F.col("bi") + 1).alias("b"), F.col("yend").alias("carry")
-    )
-    return rows.join(carries, [key_col, "b"], "left").select(
-        F.col(key_col),
-        F.col(tiebreak_col),
-        F.col(ts_col),
-        F.col("v").alias(value_col),
-        (
-            F.col("u")
-            + F.when(
-                F.col("carry").isNotNull(),
-                F.pow(F.lit(q), F.col("r") + 1) * F.col("carry"),
-            ).otherwise(F.lit(0.0))
-        ).alias("ewma"),
-    )
-
-
 def brown_double_smoothing(
     df: DataFrame,
     key_col: str = "user_id",
@@ -485,7 +352,6 @@ def brown_double_smoothing(
     tiebreak_col: str = "event_id",
     value_col: str = "value",
     alpha: float = 0.5,
-    method: str = "fold",
 ) -> DataFrame:
     """Brown's linear (double) exponential smoothing per key, final
     state: (key, n, s1, s2, level, trend, forecast) over the
@@ -502,47 +368,8 @@ def brown_double_smoothing(
     (measured, not theorized). Brown's model needs only two INDEPENDENT
     scalar folds — the ts05 ordered-fold discipline, engine-reproducible
     by construction — and spans the same level+trend model class. One
-    shuffle; per-key state is the key's series (ewma's contract).
-
-    ``method="closed_form"`` chains ``ewma``'s block-renormalized O(n)
-    path twice (s1 = EWMA(x), s2 = EWMA(s1) — the same first-element
-    initialization by construction) and keeps each key's last row: the
-    million-row-key escape, with the fold's float-order caveat
-    (~1e-12 relative differences, pinned in pytest)."""
-    if method not in ("fold", "closed_form"):
-        raise ValueError(f"method must be 'fold' or 'closed_form', got {method!r}")
+    shuffle; per-key state is the key's series (ewma's contract)."""
     a = float(alpha)
-    if method == "closed_form":
-        s1_rows = _ewma_closed_form(
-            df, key_col, ts_col, tiebreak_col, value_col, a, None
-        ).select(
-            F.col(key_col), F.col(ts_col), F.col(tiebreak_col),
-            F.col("ewma").alias("s1v"),
-        )
-        s2_rows = _ewma_closed_form(
-            s1_rows, key_col, ts_col, tiebreak_col, "s1v", a, None
-        )
-        last = s2_rows.groupBy(key_col).agg(
-            F.count(F.lit(1)).alias("n"),
-            F.max_by(
-                F.struct(F.col("s1v").alias("s1"), F.col("ewma").alias("s2")),
-                F.struct(F.col(ts_col), F.col(tiebreak_col)),
-            ).alias("fin"),
-        )
-        u6c = lambda c: F.floor(c * 1000000) / 1000000  # noqa: E731
-        coeff_c = a / (1.0 - a)
-        s1c, s2c = F.col("fin.s1"), F.col("fin.s2")
-        return last.select(
-            key_col,
-            F.col("n").cast("long").alias("n"),
-            u6c(s1c).alias("s1"),
-            u6c(s2c).alias("s2"),
-            u6c(F.lit(2.0) * s1c - s2c).alias("level"),
-            u6c(F.lit(coeff_c) * (s1c - s2c)).alias("trend"),
-            u6c(
-                (F.lit(2.0) * s1c - s2c) + F.lit(coeff_c) * (s1c - s2c)
-            ).alias("forecast"),
-        )
     seq = df.groupBy(key_col).agg(
         F.sort_array(
             F.collect_list(

@@ -41,7 +41,6 @@ from querysight_spark.plans.patterns import (
     aggregate_patterns,
     filter_logs,
     merge_pattern_runs,
-    merge_patterns,
 )
 from querysight_spark.plans.report import (
     latest_version_per_key,

@@ -12,12 +12,9 @@ from __future__ import annotations
 
 from pyspark.sql.types import (
     ArrayType,
-    BinaryType,
     DoubleType,
-    FloatType,
     IntegerType,
     LongType,
-    MapType,
     StringType,
     StructField,
     StructType,
@@ -44,25 +41,6 @@ QUERY_LOG_SCHEMA = StructType(
         StructField("databases", ArrayType(StringType()), True),
         StructField("tables", ArrayType(StringType()), True),
         StructField("columns", ArrayType(StringType()), True),
-    ]
-)
-
-# Aggregate row: one normalized query shape (QueryPattern, utils/models.py:95-204).
-QUERY_PATTERN_SCHEMA = StructType(
-    [
-        StructField("pattern_id", StringType(), False),
-        StructField("normalized_query", StringType(), True),
-        StructField("sql_pattern", StringType(), True),
-        StructField("frequency", LongType(), False),
-        StructField("total_duration_ms", DoubleType(), True),
-        StructField("avg_duration_ms", DoubleType(), True),
-        StructField("first_seen", TimestampType(), True),
-        StructField("last_seen", TimestampType(), True),
-        StructField("users", ArrayType(StringType()), True),
-        StructField("tables_accessed", ArrayType(StringType()), True),
-        StructField("memory_usage", LongType(), True),
-        StructField("total_read_rows", LongType(), True),
-        StructField("total_read_bytes", LongType(), True),
     ]
 )
 
@@ -96,82 +74,7 @@ DBT_EDGES_SCHEMA = StructType(
     ]
 )
 
-# dbt model catalog (one row per model; DBTModel, utils/models.py:206-249).
-DBT_MODEL_SCHEMA = StructType(
-    [
-        StructField("model_name", StringType(), False),
-        StructField("schema", StringType(), True),
-        StructField("database", StringType(), True),
-        StructField("materialized", StringType(), True),
-        StructField("columns", MapType(StringType(), StringType()), True),
-        StructField("freshness_seconds", LongType(), True),
-    ]
-)
-
-# Recommendation output row (AIRecommendation, utils/models.py:402-430).
-RECOMMENDATION_SCHEMA = StructType(
-    [
-        StructField("pattern_id", StringType(), False),
-        StructField("rec_type", StringType(), False),
-        StructField("description", StringType(), True),
-        StructField("impact", StringType(), True),
-        StructField("suggested_sql", StringType(), True),
-    ]
-)
-
 # --- driver testdata schemas (FIXTURES.md §1) -------------------------------
-
-EVENTS_SCHEMA = StructType(
-    [
-        StructField("event_id", LongType(), True),
-        StructField("ts", TimestampType(), True),
-        StructField("user_id", LongType(), True),
-        StructField("event_type", StringType(), True),
-        StructField("value", DoubleType(), True),
-        StructField("props", StringType(), True),
-    ]
-)
-
-DOCUMENTS_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType(), True),
-        StructField("text", StringType(), True),
-        StructField("lang", StringType(), True),
-        StructField("source", StringType(), True),
-        StructField("n_chars", LongType(), True),
-    ]
-)
-
-EMBEDDINGS_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType(), True),
-        StructField("embedding", ArrayType(FloatType()), True),
-        StructField("label", IntegerType(), True),
-    ]
-)
-
-# Multimodal asset table (extension; SURVEY §7.2 phase 8): opaque binary
-# payload + typed metadata struct. The decode stage is stubbed (no image/audio
-# libs in this container) but the schema/partitioning/UDF plumbing is real.
-MEDIA_SCHEMA = StructType(
-    [
-        StructField("asset_id", StringType(), False),
-        StructField("media_type", StringType(), False),  # image|audio|video
-        StructField("payload", BinaryType(), True),
-        StructField(
-            "meta",
-            StructType(
-                [
-                    StructField("width", IntegerType(), True),
-                    StructField("height", IntegerType(), True),
-                    StructField("duration_ms", LongType(), True),
-                    StructField("codec", StringType(), True),
-                ]
-            ),
-            True,
-        ),
-    ]
-)
 
 TESTDATA_TABLES = (
     "region",

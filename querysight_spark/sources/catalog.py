@@ -201,9 +201,7 @@ def load_tables(
 _REGISTERED: dict[str, str] = {}
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR, force: bool = False
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> None:
     """Register every testdata table as a temp view so spark.sql(...) probes
     can reference them by name (mirrors the driver's DuckDB view set).
 
@@ -212,7 +210,7 @@ def register_views(
     more than half the warm runtime of a small probe query)."""
     app = spark.sparkContext.applicationId
     target = os.path.abspath(sf_dir)
-    if not force and _REGISTERED.get(app) == target:
+    if _REGISTERED.get(app) == target:
         return
     for name, df in load_tables(spark, sf_dir).items():
         df.createOrReplaceTempView(name)

@@ -38,15 +38,12 @@ def write_bucketed(
     table: str,
     bucket_cols: Sequence[str],
     num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
     mode: str = "overwrite",
 ) -> None:
-    """Bucketed (and optionally sorted) managed table. Joins/aggregations
-    keyed on ``bucket_cols`` between tables sharing ``num_buckets`` read
+    """Bucketed managed table. Joins/aggregations keyed on
+    ``bucket_cols`` between tables sharing ``num_buckets`` read
     pre-shuffled data — no exchange in the plan."""
     writer = df.write.mode(mode).bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(table)
 
 
@@ -130,7 +127,6 @@ def compact_files(
     path: str,
     out_path: str,
     target_file_bytes: int = 128 * 1024 * 1024,
-    partition_cols: Sequence[str] | None = None,
 ) -> int:
     """Small-files compaction: rewrite a parquet dataset into
     ceil(total_bytes / target) evenly-sized files. Returns the output
@@ -143,15 +139,9 @@ def compact_files(
     planning (one local/FS listing, no data read) + one even
     ``repartition`` rewrite. Round-robin repartition keeps output sizes
     uniform — ``coalesce`` would skip the shuffle but glues ADJACENT
-    input files, preserving any size skew. With ``partition_cols`` the
-    rewrite keeps the Hive directory layout (file count then applies
-    per partition directory on average)."""
+    input files, preserving any size skew."""
     _n, total = dataset_file_stats(path)
     n_out = max(1, -(-total // target_file_bytes))
-    df = spark.read.parquet(path)
-    out = df.repartition(n_out)
-    w = out.write.mode("overwrite")
-    if partition_cols:
-        w = w.partitionBy(*partition_cols)
-    w.parquet(out_path)
+    out = spark.read.parquet(path).repartition(n_out)
+    out.write.mode("overwrite").parquet(out_path)
     return n_out

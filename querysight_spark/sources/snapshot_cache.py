@@ -53,9 +53,8 @@ def level_key(*params: object, schema_fingerprint: object | None = None) -> str:
 
 
 class SnapshotCache:
-    def __init__(self, root: str, ttls: dict[str, int] | None = None) -> None:
+    def __init__(self, root: str) -> None:
         self.root = root
-        self.ttls = dict(LEVEL_TTLS if ttls is None else ttls)
         os.makedirs(root, exist_ok=True)
 
     def _dir(self, level: str, key: str) -> str:
@@ -76,7 +75,7 @@ class SnapshotCache:
             os.remove(mp)
         df.write.mode("overwrite").parquet(path)
         now = time.time() if now is None else now
-        ttl = self.ttls.get(level, 3600)
+        ttl = LEVEL_TTLS.get(level, 3600)
         manifest = {"level": level, "key": key, "written_at": now, "expires_at": now + ttl}
         with open(mp + ".tmp", "w") as f:
             json.dump(manifest, f)

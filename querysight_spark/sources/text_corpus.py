@@ -53,21 +53,19 @@ def read_jsonl(
     spark: SparkSession,
     path: str,
     schema: T.StructType = DOCUMENTS_SCHEMA,
-    keep_corrupt: bool = True,
 ) -> DataFrame:
     """Schema-enforced JSONL read. Corrupt lines surface in
-    ``_corrupt_record`` (PERMISSIVE mode) instead of vanishing; pass
-    ``keep_corrupt=False`` to drop the audit column after checking."""
+    ``_corrupt_record`` (PERMISSIVE mode) instead of vanishing;
+    ``assert_clean`` checks and drops the audit column."""
     full = T.StructType(
         list(schema.fields) + [T.StructField("_corrupt_record", T.StringType())]
     )
-    df = (
+    return (
         spark.read.schema(full)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .json(path)
     )
-    return df if keep_corrupt else df.drop("_corrupt_record")
 
 
 def assert_clean(df: DataFrame) -> DataFrame:

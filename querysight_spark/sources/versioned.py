@@ -2041,7 +2041,6 @@ def _read_with_dvs(
     files: list[str],
     dvs: list[str],
     dv_key: list[str],
-    merge_schema: bool = False,
     schema=None,
     fv: dict | None = None,
     dvv: dict | None = None,
@@ -2077,8 +2076,6 @@ def _read_with_dvs(
         reader = spark.read
         if schema is not None:
             reader = reader.schema(schema)
-        elif merge_schema:
-            reader = reader.option("mergeSchema", "true")
         part = reader.parquet(*[os.path.join(root, f) for f in groups[idx]])
         if dvs_sorted[idx:]:
             # no broadcast hint: Spark's size estimate (file-backed)
@@ -2089,11 +2086,7 @@ def _read_with_dvs(
                 *[os.path.join(root, d) for d in dvs_sorted[idx:]]
             )
             part = part.join(tombstones, on=dv_key, how="left_anti")
-        out = (
-            part
-            if out is None
-            else out.unionByName(part, allowMissingColumns=merge_schema)
-        )
+        out = part if out is None else out.unionByName(part)
     return out
 
 
@@ -2101,19 +2094,16 @@ def read_version(
     spark: SparkSession,
     root: str,
     version: int | None = None,
-    merge_schema: bool = False,
     prune: tuple | None = None,
-    apply_dvs: bool = True,
     keys_in: tuple | None = None,
     schema=None,
 ) -> DataFrame:
     """Scan the table as of ``version`` (default: latest). Plans directly
     from the manifest's file list — no directory listing, and an empty
     snapshot is an error (there is nothing to infer a schema from).
-
-    ``merge_schema=True`` unions the schemas across the snapshot's files
-    (columns added by later appends read as NULL in older files) — the
-    additive half of schema evolution; renames/retypes need a rewrite.
+    Schema evolution is the metadata-only ``evolve`` commit: its
+    manifest-recorded schema makes older files read the added columns
+    as NULL.
 
     ``prune=(col, lo, hi)`` — or a LIST of such triples for a
     conjunction — plans only the files whose zone maps intersect every
@@ -2122,12 +2112,10 @@ def read_version(
     the kept files). An empty kept list returns an empty frame with the
     snapshot's schema.
 
-    ``apply_dvs``: when the snapshot carries deletion vectors (see
-    ``delete_keys``), reads anti-join them by default — merge-on-read,
-    scoped per file so a vector only tombstones rows committed before
-    it (a key re-inserted by a later append stays visible; see
-    ``_read_with_dvs``). Pass False to see the raw files (e.g. for
-    compaction internals).
+    When the snapshot carries deletion vectors (see ``delete_keys``),
+    the read anti-joins them — merge-on-read, scoped per file so a
+    vector only tombstones rows committed before it (a key re-inserted
+    by a later append stays visible; see ``_read_with_dvs``).
 
     ``keys_in=(col, [v1, v2, ...])`` is the POINT-LOOKUP plan: files
     are additionally pruned by their key-membership filters
@@ -2178,19 +2166,16 @@ def read_version(
         # manifest-recorded one makes pre-evolution files backfill the
         # added columns as NULL
         reader = reader.schema(sch)
-    elif merge_schema:
-        reader = reader.option("mergeSchema", "true")
     if not kept:
         # predicate excluded every file; keep the schema contract
         df = (
             reader.parquet(os.path.join(root, files[0]))
             .where(F.lit(False))
         )
-    elif apply_dvs and manifest.get("dvs"):
+    elif manifest.get("dvs"):
         df = _read_with_dvs(
             spark, root, kept, manifest["dvs"], manifest["dv_key"],
-            merge_schema=merge_schema, schema=sch,
-            fv=manifest.get("fv"), dvv=manifest.get("dvv"),
+            schema=sch, fv=manifest.get("fv"), dvv=manifest.get("dvv"),
         )
     else:
         df = reader.parquet(*[os.path.join(root, f) for f in kept])
@@ -2259,8 +2244,6 @@ _REWRITE_OPS = ("optimize", "zorder", "compact")
 def incremental_read(
     spark: SparkSession, root: str, from_version: int,
     to_version: int | None = None,
-    on_maintenance: str = "skip_rewrites",
-    key_cols: list[str] | None = None,
 ) -> DataFrame:
     """CDC for append pipelines: the rows ADDED by commits in
     ``(from_version, to_version]`` — exactly the new files, never a
@@ -2274,31 +2257,17 @@ def incremental_read(
       crosses one, the read plans with the end manifest's schema so
       pre-evolution appends backfill the added columns as NULL.
     - PHYSICAL REWRITES (``optimize``/``zorder``/``compact``) pass
-      through under the default ``on_maintenance='skip_rewrites'``:
-      their added files hold re-binned copies of rows that were NOT
-      appended in the range, so skipping them keeps the result exactly
-      "the rows appended in the range" — the appends' own files are
-      immutable and stay readable even after the rewrite drops them
-      from the snapshot. (``on_maintenance='error'`` restores the
-      strict legacy refusal for consumers that want to be told.)
+      through: their added files hold re-binned copies of rows that
+      were NOT appended in the range, so skipping them keeps the result
+      exactly "the rows appended in the range" — the appends' own files
+      are immutable and stay readable even after the rewrite drops them
+      from the snapshot.
     - ROW-CHANGING commits (``merge``/``overwrite``/``rollback``/
-      ``delete``) cannot be represented as a file union. They raise —
-      unless ``on_maintenance='changes'``, which degrades the whole
-      range to the row-level change feed (``read_changes``; requires
-      ``key_cols``): same information, richer schema (rows +
-      ``_change_type`` + ``_commit_version``), the documented
-      auto-switch for consumers that can fold retractions."""
-    if on_maintenance not in ("skip_rewrites", "error", "changes"):
-        raise ValueError(
-            "on_maintenance must be skip_rewrites|error|changes, got "
-            f"{on_maintenance!r}"
-        )
+      ``delete``) cannot be represented as a file union. They raise;
+      such a range is consumed with ``read_changes``, the row-level
+      change feed (rows + ``_change_type`` + ``_commit_version``)."""
     if to_version is None:
         to_version = table_version(root)
-    if on_maintenance == "changes":
-        return read_changes(
-            spark, root, from_version, to_version, key_cols=key_cols
-        )
     added: list[str] = []
     for v in range(from_version + 1, to_version + 1):
         m = _load_manifest_raw(root, v)  # op/added only: skip hydration
@@ -2307,18 +2276,13 @@ def incremental_read(
             # sidecar (round 11); restore just the lists — need=()
             # skips the heavy map decode this path never wanted
             m = _anchor_expand(root, m, need=())
-        if m["op"] == "evolve":
-            continue  # metadata-only commits: no rows moved
-        if (
-            on_maintenance == "skip_rewrites"
-            and m["op"] in _REWRITE_OPS
-        ):
-            continue
+        if m["op"] == "evolve" or m["op"] in _REWRITE_OPS:
+            continue  # no rows appended or changed
         if m["op"] != "append":
             raise ValueError(
                 f"incremental_read crosses non-append commit v{v} "
-                f"({m['op']}); pass on_maintenance='changes' (with "
-                "key_cols) to consume it as a row-level change feed"
+                f"({m['op']}); consume the range with read_changes, "
+                "the row-level change feed"
             )
         added.extend(m["added"])
     if not added:
@@ -2653,7 +2617,6 @@ def merge_into(
     root: str,
     key_cols: list[str],
     delete_col: str | None = None,
-    stats_prune: bool = True,
     txn_id: str | None = None,
 ) -> int:
     """Copy-on-write MERGE INTO the versioned table: matched target rows
@@ -2664,10 +2627,10 @@ def merge_into(
 
     The 100 TB point is WHICH files the merge rewrites: with zone maps
     and/or key-membership filters on the key columns
-    (``write_version(stats_cols=... / key_filter_cols=...)``) and
-    ``stats_prune=True``, only files whose key ranges/filters the
-    source actually touches are read and rewritten — a 1%-of-keys
-    source against a key-clustered table rewrites ~1% of files; every
+    (``write_version(stats_cols=... / key_filter_cols=...)``), only
+    files whose key ranges/filters the source actually touches are
+    read and rewritten — a 1%-of-keys source against a key-clustered
+    table rewrites ~1% of files; every
     other file carries into the new snapshot BY REFERENCE (same path
     in the manifest, no I/O). Pruning INTERSECTS across the key
     columns (``_touched_by_keys``), so a compound key with a
@@ -2696,15 +2659,12 @@ def merge_into(
             "run compact_table first so carried tombstones cannot "
             "shadow freshly merged rows"
         )
-    if stats_prune:
-        # every key column with pruning metadata intersects (round 9):
-        # a (low-cardinality, high-cardinality) compound key prunes on
-        # the selective column even when the leading one admits all
-        touched, untouched = _touched_by_keys(
-            spark, root, manifest, source.select(*key_cols), key_cols
-        )
-    else:
-        touched, untouched = list(manifest["files"]), []
+    # every key column with pruning metadata intersects (round 9): a
+    # (low-cardinality, high-cardinality) compound key prunes on the
+    # selective column even when the leading one admits all
+    touched, untouched = _touched_by_keys(
+        spark, root, manifest, source.select(*key_cols), key_cols
+    )
     data_cols = None
     src_cols = [c for c in source.columns if c != delete_col]
     if touched:
@@ -2776,10 +2736,10 @@ def delete_keys(
     sidecar instead of rewriting any data file — the commit is
     O(|keys|) regardless of table size, the right-to-be-forgotten
     operation a 100 TB table cannot afford as copy-on-write. Reads
-    anti-join the vectors (``read_version(apply_dvs=True)``, the
-    default); ``compact_table`` folds the debt into a rewrite of only
-    the affected files. Key-based tombstones (the ir10 discipline on
-    the table format) rather than positional bitmaps: plain parquet
+    anti-join the vectors (``read_version``); ``compact_table`` folds
+    the debt into a rewrite of only the affected files. Key-based
+    tombstones (the ir10 discipline on the table format) rather than
+    positional bitmaps: plain parquet
     needs no stable row ids, and the anti-join broadcasts while the
     debt is small. Vectors are PER-FILE SCOPED on read (via the
     manifest's recorded ``fv``/``dvv`` commit-version maps, exact even
@@ -3067,8 +3027,6 @@ def zorder_table(
     bits: int = 8,
     target_files: int = 16,
     incremental: bool = False,
-    max_span: float | None = None,
-    min_delta_files: int = 1,
 ) -> int:
     """Z-ORDER OPTIMIZE: rewrite the snapshot re-clustered on the Morton
     interleave of ``cols`` (``sources/layout.zorder_value`` — pure
@@ -3089,29 +3047,19 @@ def zorder_table(
     table actually runs: instead of re-Mortoning the world, it
     re-clusters ONLY the files committed since the last zorder on the
     SAME column list (found via the manifest's ``zorder_cols`` record
-    and each file's ``fv`` committed version) — the append drift —
-    plus, when ``max_span`` is set, any already-clustered file whose
-    zone span on some clustering column exceeds that fraction of the
-    column's current global domain (layout drift; files missing a zone
-    map are rewritten conservatively). Already-tight files carry into
-    the new snapshot BY REFERENCE, so the rewrite cost is O(delta),
-    not O(table); the commit is the same atomic ``zorder`` op (change
-    feed reads it as silence, concurrent writers conflict cleanly).
-    No-op (current version) when nothing drifted. The Morton bounds
+    and each file's ``fv`` committed version) — the append drift.
+    Already-clustered files carry into the new snapshot BY REFERENCE,
+    so the rewrite cost is O(delta), not O(table); the commit is the
+    same atomic ``zorder`` op (change feed reads it as silence,
+    concurrent writers conflict cleanly). No-op (current version) when
+    no file was committed since the last zorder; that check is pure
+    manifest metadata, so the call costs no data IO. The Morton bounds
     come from the rewrite set's own zone maps when every member has
     them (a metadata-only plan — no scan before the rewrite itself),
     falling back to one bounds scan of the rewrite set otherwise.
     ``target_files`` sizes the rewrite set's output; with no prior
     zorder on ``cols`` the incremental call degrades to the full
-    rewrite.
-
-    ``min_delta_files`` is the CADENCE GATE: the incremental pass
-    no-ops (returns the current version, commits nothing) until at
-    least that many files have drifted — so a scheduler can call it
-    after every ingest batch and the rewrite only fires when the debt
-    justifies one commit, instead of churning a tiny rewrite per
-    append. The drifted-file count is pure manifest metadata, so a
-    gated call costs no data IO."""
+    rewrite."""
     from querysight_spark.sources.layout import zorder_value
 
     version = table_version(root)
@@ -3126,36 +3074,9 @@ def zorder_table(
     if incremental:
         last_z = _last_zorder_version(root, version, cols)
         fv = manifest.get("fv", {})
-        domain: dict[str, tuple] = {}
-        if max_span is not None:
-            for c in cols:
-                dom = [
-                    stats[g][c]
-                    for g in files
-                    if stats.get(g, {}).get(c) is not None
-                ]
-                if dom:
-                    domain[c] = (
-                        min(d[0] for d in dom), max(d[1] for d in dom)
-                    )
-        rewrite: list[str] = []
-        for f in files:
-            if fv.get(f, _commit_of(f)) > last_z:
-                rewrite.append(f)  # committed after the last zorder
-            elif max_span is not None:
-                zones = stats.get(f, {})
-                for c in cols:
-                    glo, ghi = domain.get(c, (None, None))
-                    if (
-                        zones.get(c) is None
-                        or glo is None
-                        or ghi == glo
-                        or (zones[c][1] - zones[c][0]) / (ghi - glo)
-                        > max_span
-                    ):
-                        rewrite.append(f)
-                        break
-        if len(rewrite) < max(1, min_delta_files):
+        # committed after the last zorder on these columns
+        rewrite = [f for f in files if fv.get(f, _commit_of(f)) > last_z]
+        if not rewrite:
             return version
         rewrite_set = set(rewrite)
         untouched = [f for f in files if f not in rewrite_set]

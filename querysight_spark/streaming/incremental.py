@@ -16,13 +16,17 @@ restatement:
   Replayed epochs overwrite the same partition, so the merge is
   idempotent by construction — the (pattern_id, window_id) keying decided
   in SURVEY §7.4.4, with Structured Streaming's epoch id as window_id.
-* ``read_pattern_state`` / ``compact_pattern_state``: merged view /
-  compaction via one re-aggregation (same shape as plans.patterns.merge_patterns).
+* ``read_pattern_state``: merged view via one re-aggregation over every
+  batch partition (same shape as plans.patterns.merge_patterns).
+* ``compact_pattern_state``: writes that merged view to a separate
+  snapshot directory. No batch partition is retired and no reader reads
+  the snapshot, so it does not shorten the union ``read_pattern_state``
+  scans.
 
 Scale notes: per-batch aggregates are tiny relative to raw logs (patterns ×
-batch), so state grows with #batches × #patterns, and compaction is a
-single shuffle on pattern_id. The alternative — stateful streaming agg with
-``outputMode("update")`` — keeps unbounded per-key state in the state
+batch), so state grows with #batches × #patterns, and every read of the
+state is a single shuffle on pattern_id over all of it. The alternative —
+stateful streaming agg with ``outputMode("update")`` — keeps unbounded per-key state in the state
 store; the batch-partition design bounds each write and keeps the state
 readable by any batch consumer without a stream.
 """
@@ -139,8 +143,10 @@ def read_pattern_state(spark: SparkSession, state_dir: str) -> DataFrame:
 
 
 def compact_pattern_state(spark: SparkSession, state_dir: str, out_dir: str) -> None:
-    """Compact N batch partitions into one snapshot (run periodically so
-    the read-side union stays bounded)."""
+    """Write the merged view of all N batch partitions to ``out_dir`` as
+    one snapshot (overwriting it). The batch partitions stay in place and
+    ``read_pattern_state`` keeps reading them, not the snapshot, so the
+    read-side union still grows by one partition per batch."""
     read_pattern_state(spark, state_dir).write.mode("overwrite").parquet(out_dir)
 
 
@@ -498,31 +504,16 @@ def start_ann_serving(
     qid_col: str = "vec_id",
     qvec_col: str = "embedding",
     dim: int | None = None,
-    method: str = "gemm",
-    index_path: str | None = None,
-    n_probes: int = 4,
-    rerank_df: DataFrame | None = None,
-    oversample: int = 10,
 ):
     """Streaming ANN serving (the streaming x similarity composition):
     each micro-batch of query vectors is answered in ONE pass and the
     per-query top-k lands in an epoch-keyed partition via dynamic
     overwrite — the journal discipline of ``start_rollup_absorb``, so
     at-least-once replay of an epoch rewrites the SAME partition with
-    the same content instead of appending duplicates.
-
-    Two serving backends behind the same seam: the default answers from
-    the in-flight ``corpus`` (``batch_topk``, one corpus pass per
-    batch); pass ``index_path`` to answer from the persisted IVF+PQ
-    layout instead (``ivfpq_batch_topk``: partition-pruned union-of-
-    lists scan, per-list ADC, optional exact rerank) — the 100 TB path,
-    where the corpus never re-scans and probes touch only the visited
-    ``list_id=`` directories. The absorb/read-out contract is identical
-    for both. Returns the started StreamingQuery."""
-    from querysight_spark.operators.similarity import (
-        batch_topk,
-        ivfpq_batch_topk,
-    )
+    the same content instead of appending duplicates. Each batch is
+    answered from the in-flight ``corpus`` (``batch_topk``, one GEMM
+    corpus pass per batch). Returns the started StreamingQuery."""
+    from querysight_spark.operators.similarity import batch_topk
 
     def _serve(batch_df: DataFrame, epoch_id: int) -> None:
         qs = batch_df.select(
@@ -530,16 +521,9 @@ def start_ann_serving(
         )
         if qs.limit(1).count() == 0:
             return
-        if index_path is not None:
-            # output schema (qid, rk, vec_id, cosine) matches batch_topk
-            res = ivfpq_batch_topk(
-                batch_df.sparkSession, index_path, qs, k=k,
-                n_probes=n_probes, rerank_df=rerank_df,
-                oversample=oversample,
-            )
-        else:
-            res = batch_topk(corpus, qs, k=k, dim=dim, method=method)
-        res = res.withColumn("batch_id", F.lit(int(epoch_id)))
+        res = batch_topk(corpus, qs, k=k, dim=dim, method="gemm").withColumn(
+            "batch_id", F.lit(int(epoch_id))
+        )
         (
             res.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

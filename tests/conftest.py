@@ -30,13 +30,11 @@ SLOW_TESTS = frozenset({
     "test_invariants_r4.py::test_gap_fill_accounting_invariant",
     "test_round11_ops.py::test_lazy_scan_prune_membership_equivalence",
     "test_round13_ops.py::test_rewrite_commits_silent_without_key_cols",
-    "test_round6_ops.py::test_ann_serving_over_persisted_index",
     "test_round8_ops.py::test_key_filters_survive_zorder_and_compact",
     "test_scd2.py::test_merge_equals_batch_rebuild[splits1]",
     "test_search.py::test_upsert_appends_postings_and_rewrites_only_touched_termdf",
     "test_streaming.py::test_rollup_absorb_replay_is_idempotent",
     "test_streaming.py::test_session_absorb_merges_cross_batch_and_replay_idempotent",
-    "test_timeseries.py::test_ewma_closed_form_matches_fold_within_tolerance",
     "test_versioned.py::test_feed_mv_sink_tails_manifest_log",
     "test_versioned.py::test_refresh_aggregate_mv_incremental_and_idempotent",
     "test_versioned.py::test_refresh_mv_from_feed_handles_updates_and_deletes",

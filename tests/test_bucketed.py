@@ -28,10 +28,8 @@ def test_bucketed_join_has_no_shuffle(spark, bucket_db):
     right = spark.range(0, 50).select(
         F.col("id").alias("user_id"), (F.col("id") * 10).alias("score")
     )
-    write_bucketed(left, f"{bucket_db}.ev", ["user_id"], num_buckets=4,
-                   sort_cols=["user_id"])
-    write_bucketed(right, f"{bucket_db}.usr", ["user_id"], num_buckets=4,
-                   sort_cols=["user_id"])
+    write_bucketed(left, f"{bucket_db}.ev", ["user_id"], num_buckets=4)
+    write_bucketed(right, f"{bucket_db}.usr", ["user_id"], num_buckets=4)
 
     old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

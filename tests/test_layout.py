@@ -27,8 +27,8 @@ def test_bucketed_join_has_no_exchange(spark, bucket_db):
     right = spark.range(0, 1000).select(
         F.col("id").alias("k"), (F.col("id") * 3).alias("b")
     )
-    write_bucketed(left, f"{bucket_db}.lt", ["k"], num_buckets=4, sort_cols=["k"])
-    write_bucketed(right, f"{bucket_db}.rt", ["k"], num_buckets=4, sort_cols=["k"])
+    write_bucketed(left, f"{bucket_db}.lt", ["k"], num_buckets=4)
+    write_bucketed(right, f"{bucket_db}.rt", ["k"], num_buckets=4)
 
     lt, rt = spark.table(f"{bucket_db}.lt"), spark.table(f"{bucket_db}.rt")
     # hint away the broadcast (tables here are tiny) so the plan shows what

@@ -164,28 +164,6 @@ def test_ks_drift_binned_identical_distributions_zero(spark):
     assert r.ks_stat == 0.0 and not r.drift
 
 
-def test_ks_drift_binned_approx_edges_close_to_exact(spark):
-    """relative_error switches edge computation to the bounded-memory
-    approx_percentile sketch; at a tight epsilon the statistic must sit
-    within epsilon + bin mass of the exact-edge variant."""
-    from querysight_spark.operators.quality import ks_drift_binned
-    from querysight_spark.sources.catalog import load_table
-
-    ev = load_table(spark, "events", "/root/testdata/sf0.001").select(
-        "event_type", "value"
-    )
-    exact_edges = ks_drift_binned(
-        ev, "value", "event_type", "purchase", "view", n_bins=32
-    ).collect()[0]
-    approx_edges = ks_drift_binned(
-        ev, "value", "event_type", "purchase", "view", n_bins=32,
-        relative_error=0.001,
-    ).collect()[0]
-    assert approx_edges.n_a == exact_edges.n_a
-    assert abs(approx_edges.ks_stat - exact_edges.ks_stat) <= 1.0 / 32 + 0.001 + 1e-6
-    assert approx_edges.drift == exact_edges.drift
-
-
 def test_corpus_diff_statuses(spark):
     """Hand vintages: one added, one removed, one changed, one unchanged
     — statuses exact."""

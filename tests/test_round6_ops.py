@@ -462,44 +462,6 @@ def test_stream_index_absorb_replay_is_noop(spark, tmp_path):
     assert first == flight
 
 
-def test_ann_serving_over_persisted_index(spark, tmp_path):
-    """start_ann_serving with index_path: the persisted-index backend in
-    exact mode (all lists, corpus rerank) serves the same answers as the
-    in-flight corpus backend."""
-    from querysight_spark.operators.similarity import (
-        batch_topk,
-        build_ivfpq_index,
-    )
-    from querysight_spark.streaming.incremental import (
-        latest_served_topk,
-        start_ann_serving,
-    )
-    from querysight_spark.testing import make_clustered_embeddings
-
-    vecs = make_clustered_embeddings(spark, n=200, dim=8, n_clusters=4).cache()
-    ix = str(tmp_path / "ix")
-    build_ivfpq_index(vecs, ix, dim=8, n_centroids=4, m=2, k=8)
-    src = str(tmp_path / "src")
-    vecs.where("vec_id % 40 = 1").write.parquet(src)
-    stream = spark.readStream.schema(
-        "vec_id long, embedding array<float>, label int"
-    ).parquet(src)
-    out = str(tmp_path / "out")
-    q = start_ann_serving(
-        stream, None, out, str(tmp_path / "ckpt"), k=3,
-        index_path=ix, n_probes=4, rerank_df=vecs, oversample=70,
-    )
-    q.awaitTermination()
-    got = [(r.qid, r.rk, r.vec_id, r.cosine)
-           for r in latest_served_topk(spark, out).orderBy("qid", "rk").collect()]
-    qs = vecs.where("vec_id % 40 = 1").select(
-        F.col("vec_id").alias("qid"), F.col("embedding").alias("qvec")
-    )
-    want = [(r.qid, r.rk, r.vec_id, r.cosine)
-            for r in batch_topk(vecs, qs, k=3).orderBy("qid", "rk").collect()]
-    assert got == want and len(got) == 3 * qs.count()
-
-
 def test_filtered_index_probe_respects_filter_and_matches_brute(spark, tmp_path):
     """ss18's production point: the persisted-index filtered probe must
     (a) never return an id outside the filter, and (b) at all-lists +

@@ -166,9 +166,6 @@ def test_incremental_read_survives_interleaved_zorder(spark, root):
     consumed += _ids(inc)
     # the consumer's union equals the current logical table
     assert sorted(consumed) == _ids(read_version(spark, root))
-    # strict legacy refusal still available
-    with pytest.raises(ValueError, match="non-append"):
-        incremental_read(spark, root, last, on_maintenance="error")
 
 
 def test_incremental_read_survives_evolve_and_compact(spark, root):
@@ -178,6 +175,7 @@ def test_incremental_read_survives_evolve_and_compact(spark, root):
     from querysight_spark.sources.versioned import (
         compact_table,
         incremental_read,
+        read_changes,
     )
 
     write_version(spark, _df(spark, 0, 5), root)             # v1
@@ -200,12 +198,10 @@ def test_incremental_read_survives_evolve_and_compact(spark, root):
     )                                                        # v6
     assert _ids(incremental_read(spark, root, 4)) == [20]
     # a ROW-CHANGING commit still refuses, with the documented cure...
-    with pytest.raises(ValueError, match="on_maintenance='changes'"):
+    with pytest.raises(ValueError, match="read_changes"):
         incremental_read(spark, root, 3)
     # ...and the cure works: the same range consumed as the change feed
-    feed = incremental_read(
-        spark, root, 3, on_maintenance="changes", key_cols=["id"]
-    )
+    feed = read_changes(spark, root, 3, key_cols=["id"])
     got = {
         (r["_change_type"], r["id"], r["_commit_version"])
         for r in feed.collect()
@@ -276,66 +272,6 @@ def test_incremental_zorder_rewrites_only_the_delta(spark, root):
     assert zorder_table(
         spark, root, ["x", "y"], target_files=4, incremental=True
     ) == 5
-    # cadence gate: one more drifted file is below a min_delta_files=3
-    # threshold -> the scheduler's call no-ops (no commit, no data IO);
-    # without the gate it fires
-    write_version(spark, mk_wide(1024, 1152).coalesce(1), root)  # v6
-    assert zorder_table(
-        spark, root, ["x", "y"], target_files=2, incremental=True,
-        min_delta_files=3,
-    ) == 6
-    assert zorder_table(
-        spark, root, ["x", "y"], target_files=2, incremental=True,
-    ) == 7
-
-
-def test_incremental_zorder_max_span_catches_layout_drift(spark, root):
-    """A file the vintage check counts as already-clustered but whose
-    zone span is (nearly) the whole domain — e.g. a delta re-clustered
-    into too few files — is LAYOUT drift: max_span pulls it into the
-    rewrite set while genuinely tight files carry by reference."""
-    from querysight_spark.sources.versioned import zorder_table
-
-    def mk(lo, hi):
-        return spark.range(lo, hi).select(F.col("id").alias("x"))
-
-    write_version(
-        spark, mk(0, 4096).repartitionByRange(4, "x"), root,
-        stats_cols=["x"],
-    )                                                            # v1
-    zorder_table(spark, root, ["x"], target_files=4)             # v2
-    wide = (
-        spark.range(0, 256)
-        .select(((F.col("id") * 7919) % 4096).alias("x"))
-        .coalesce(1)
-    )
-    write_version(spark, wide, root)                             # v3
-    # re-cluster the delta into ONE file: clustered by vintage, but
-    # its span is still the whole domain
-    assert zorder_table(
-        spark, root, ["x"], target_files=1, incremental=True
-    ) == 4
-    # vintage-only incremental sees nothing new: no-op
-    assert zorder_table(
-        spark, root, ["x"], target_files=2, incremental=True
-    ) == 4
-    # span gate: the wide clustered file (span ~1.0) is drift; the
-    # four tight v2 files (span ~0.25 each) carry by reference
-    wide_file = read_manifest(root, 4)["added"]
-    assert len(wide_file) == 1
-    v5 = zorder_table(
-        spark, root, ["x"], target_files=2, incremental=True,
-        max_span=0.5,
-    )
-    assert v5 == 5
-    m5 = read_manifest(root, 5)
-    assert m5["removed"] == wide_file
-    assert set(read_manifest(root, 2)["files"]) <= set(m5["files"])
-    got = sorted(r.x for r in read_version(spark, root).collect())
-    want = sorted(
-        list(range(4096)) + [(i * 7919) % 4096 for i in range(256)]
-    )
-    assert got == want
 
 
 def test_key_membership_filters_prune_unclustered_merges(spark, root):
@@ -662,4 +598,3 @@ def corpus8(spark):
         (4, "stream processing spark"),
     ]
     return spark.createDataFrame(rows, ["doc_id", "text"])
-

@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import os
-
 import pytest
 from pyspark.sql import functions as F
 
@@ -67,21 +65,6 @@ def test_compact_files(spark, tmp_path):
     a = sorted(spark.read.parquet(src).collect())
     b = sorted(spark.read.parquet(out).collect())
     assert a == b
-
-
-def test_compact_files_partitioned_layout(spark, tmp_path):
-    src = str(tmp_path / "frag_part")
-    out = str(tmp_path / "comp_part")
-    df = spark.range(0, 2000).select(
-        F.col("id"), (F.col("id") % 3).alias("k")
-    )
-    df.repartition(16).write.parquet(src)
-    _, total = dataset_file_stats(src)
-    compact_files(spark, src, out, target_file_bytes=total, partition_cols=["k"])
-    assert sorted(os.listdir(out))[:1] == ["_SUCCESS"] or any(
-        d.startswith("k=") for d in os.listdir(out)
-    )
-    assert spark.read.parquet(out).count() == 2000
 
 
 def test_unicode_normalize_collapses_decomposed(spark):

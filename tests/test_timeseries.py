@@ -271,106 +271,3 @@ def test_cusum_constant_series_excluded(spark):
     )
     # sigma = 0 -> key excluded entirely rather than dividing by zero
     assert cusum_breaches(df).count() == 0
-
-
-def test_ewma_closed_form_matches_fold_within_tolerance(spark):
-    """The block-renormalized closed form reorders float ops vs the
-    bit-deterministic fold — values must agree to ~1e-12 relative on
-    every row (multiple alphas incl. a block-boundary-crossing series,
-    and alpha=1 exactly)."""
-    import datetime as dt
-
-    import numpy as np
-
-    from querysight_spark.operators.timeseries import ewma
-
-    rng = np.random.default_rng(11)
-    rows = []
-    for k, n in (("a", 700), ("b", 3), ("c", 1)):  # 700 crosses blocks
-        for i, v in enumerate(np.round(rng.uniform(-50, 50, n), 2)):
-            rows.append(
-                (k, i, dt.datetime(2024, 1, 1) + dt.timedelta(seconds=i), float(v))
-            )
-    df = spark.createDataFrame(
-        rows, "user_id string, event_id long, ts timestamp, value double"
-    )
-    for alpha in (0.25, 0.9, 0.03):
-        ref = {
-            (r.user_id, r.event_id): r.ewma
-            for r in ewma(df, alpha=alpha, method="fold").collect()
-        }
-        got = {
-            (r.user_id, r.event_id): r.ewma
-            for r in ewma(df, alpha=alpha, method="closed_form").collect()
-        }
-        assert set(got) == set(ref)
-        for key, want in ref.items():
-            assert abs(got[key] - want) <= 1e-11 * max(1.0, abs(want)), (
-                alpha,
-                key,
-            )
-    # alpha=1 short-circuits to the series itself — exact
-    got1 = ewma(df, alpha=1.0, method="closed_form").collect()
-    assert all(r.ewma == r.value for r in got1)
-
-
-def test_ewma_closed_form_rejects_bad_block_size(spark):
-    """block_size=0 used to divide/modulo by zero into null block ids
-    (silent wrong grouping); now a ValueError up front (r5 ADVICE)."""
-    import datetime as dt
-
-    import pytest
-
-    from querysight_spark.operators.timeseries import ewma
-
-    df = spark.createDataFrame(
-        [("a", 0, dt.datetime(2024, 1, 1), 1.0)],
-        "user_id string, event_id long, ts timestamp, value double",
-    )
-    for bad in (0, -3):
-        with pytest.raises(ValueError, match="block_size"):
-            ewma(df, alpha=0.25, method="closed_form", block_size=bad)
-    # 1 is the smallest legal block — still correct
-    row = ewma(df, alpha=0.25, method="closed_form", block_size=1).collect()[0]
-    assert row.ewma == 1.0
-
-    import pytest
-
-    with pytest.raises(ValueError, match="method"):
-        ewma(df, method="magic")
-
-
-def test_brown_closed_form_matches_fold(spark):
-    """Brown via two chained closed-form EWMAs must match the
-    double-fold within the microprecision floor (same first-element
-    initialization by construction)."""
-    import datetime as dt
-
-    import numpy as np
-
-    from querysight_spark.operators.timeseries import brown_double_smoothing
-
-    rng = np.random.default_rng(5)
-    rows = []
-    for k, n in (("a", 600), ("b", 2), ("c", 1)):
-        for i, v in enumerate(np.round(rng.uniform(-20, 80, n), 2)):
-            rows.append(
-                (k, i, dt.datetime(2024, 1, 1) + dt.timedelta(minutes=i), float(v))
-            )
-    df = spark.createDataFrame(
-        rows, "user_id string, event_id long, ts timestamp, value double"
-    )
-    ref = {r.user_id: r for r in brown_double_smoothing(df, alpha=0.4).collect()}
-    got = {
-        r.user_id: r
-        for r in brown_double_smoothing(
-            df, alpha=0.4, method="closed_form"
-        ).collect()
-    }
-    assert set(got) == set(ref)
-    for k in ref:
-        assert got[k].n == ref[k].n
-        for f in ("s1", "s2", "level", "trend", "forecast"):
-            # both sides floor at 1e-6; a 1e-12 raw difference can move
-            # the floored value by at most one microstep
-            assert abs(getattr(got[k], f) - getattr(ref[k], f)) <= 1.000001e-6, (k, f)

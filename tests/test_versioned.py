@@ -115,19 +115,6 @@ def test_txn_commit_is_idempotent(spark, root):
     assert _ids(read_version(spark, root)) == [0, 1, 2, 3, 4]
 
 
-def test_merge_schema_reads_added_column(spark, root):
-    write_version(spark, _df(spark, 0, 2), root)
-    write_version(
-        spark,
-        _df(spark, 2, 4).withColumn("extra", F.lit("x")),
-        root,
-    )
-    merged = read_version(spark, root, merge_schema=True)
-    assert "extra" in merged.columns
-    got = {r.id: r.extra for r in merged.collect()}
-    assert got[0] is None and got[3] == "x"
-
-
 def test_streaming_sink_exactly_once_and_fresh_checkpoint_isolated(
     spark, root, tmp_path
 ):
@@ -252,7 +239,11 @@ def test_deletion_vectors_merge_on_read(spark, root):
     assert _ids(read_version(spark, root)) == list(range(10)) + list(
         range(20, 100)
     )
-    assert len(_ids(read_version(spark, root, apply_dvs=False))) == 100
+    # the raw files still hold every row: the vector only masks on read
+    raw = spark.read.parquet(
+        *[os.path.join(root, f) for f in read_manifest(root, 2)["files"]]
+    )
+    assert len(_ids(raw)) == 100
     # deleting again (overlap) stays idempotent; appends carry the DVs
     delete_keys(spark, root, spark.range(15, 25).select("id"))
     write_version(spark, _clustered(spark, 100, 110, 1), root)

@@ -6,8 +6,7 @@ the key) and measures, for source selectivities 0.1% / 1% / 10% of the
 key space (contiguous low ranges — the zone-prunable shape a
 date-partitioned upsert has in production):
 
-  * merge_into with stats_prune=True: wall time + files rewritten
-  * merge_into with stats_prune=False (full rewrite baseline)
+  * merge_into (zone-map pruned): wall time + files rewritten
   * delete_keys -> compact_table: compaction time + files rewritten
 
 Each measurement rebuilds the table fresh (merges mutate it). Prints
@@ -71,24 +70,22 @@ def main() -> None:
                 F.lit(-1).alias("v"),
                 F.lit("updated").alias("pad"),
             )
-            for pruned in (True, False):
-                root = fresh_table(f"m_{frac}_{pruned}")
-                t0 = time.time()
-                merge_into(spark, src, root, ["id"], stats_prune=pruned)
-                dt = time.time() - t0
-                m = read_manifest(root, table_version(root))
-                print(
-                    json.dumps(
-                        {
-                            "op": "merge",
-                            "selectivity": frac,
-                            "stats_prune": pruned,
-                            "sec": round(dt, 2),
-                            "files_rewritten": len(m["removed"]),
-                            "files_total_before": N_FILES,
-                        }
-                    )
+            root = fresh_table(f"m_{frac}")
+            t0 = time.time()
+            merge_into(spark, src, root, ["id"])
+            dt = time.time() - t0
+            m = read_manifest(root, table_version(root))
+            print(
+                json.dumps(
+                    {
+                        "op": "merge",
+                        "selectivity": frac,
+                        "sec": round(dt, 2),
+                        "files_rewritten": len(m["removed"]),
+                        "files_total_before": N_FILES,
+                    }
                 )
+            )
             root = fresh_table(f"d_{frac}")
             delete_keys(spark, root, spark.range(0, hi).select("id"))
             t0 = time.time()

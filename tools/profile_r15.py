@@ -1,5 +1,5 @@
 """Round-15 optimization profiler: per-query noop-sink timing + formatted
-plans (same protocol as tools/profile_r14.py, output under plans/r15/).
+plans (output under plans/r15/).
 
 For each named queries() entry this times the computation against the
 noop sink (guide §1.4 — ``df.write.format("noop")`` computes every column
